@@ -31,6 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from kol_bigdata_realtime_analytics_spark import artifacts  # noqa: E402
 from kol_bigdata_realtime_analytics_spark.plans import REGISTRY  # noqa: E402
 from kol_bigdata_realtime_analytics_spark.session import get_spark  # noqa: E402
 
@@ -185,9 +186,8 @@ HEADLINE = [
 #: round-over-round comparison the most (r5 verdict ask #2).
 _HEAVY_SEC = 1.0
 
-#: Queries whose plans consult session-scoped index-artifact caches
-#: (_KNN_GRAPH_CACHE / _HNSW_BUILD_CACHE / similarity._FIT_CACHE). Their
-#: first run is forced COLD — the relevant caches are cleared — so the
+#: Queries whose plans consult the session artifact cache (artifacts.py).
+#: Their first run is forced COLD — the cache is cleared — so the
 #: detail file carries BOTH the from-scratch build wall (cold_sec = run 1)
 #: and the steady-state wall (warm = min of the later runs). r10 verdict
 #: ask #1: min-of-runs alone billed knn_graph_build at 0.016 s while its
@@ -213,21 +213,6 @@ _FORCED_COLD = {
 #: warm/cold ratio above which run 1 is recorded as a cold build even for
 #: queries outside _FORCED_COLD (a cache-hit pattern announcing itself)
 _COLD_RATIO = 10.0
-
-
-def _clear_index_caches() -> None:
-    """Drop every session-scoped index-artifact cache so the next build
-    genuinely starts from the parquet scan (cold-billing support)."""
-    from kol_bigdata_realtime_analytics_spark.operators import similarity
-    from kol_bigdata_realtime_analytics_spark.plans import hnsw_search, llm_ops
-
-    llm_ops._KNN_GRAPH_CACHE.clear()
-    llm_ops._HNSW_BUILD_CACHE.clear()
-    hnsw_search._DESCEND_CACHE.clear()
-    similarity._FIT_CACHE.clear()
-    from kol_bigdata_realtime_analytics_spark.plans import quality_model
-
-    quality_model._QC_CACHE.clear()
 
 
 def main() -> None:
@@ -274,7 +259,7 @@ def main() -> None:
             loads[name] = []
         forced_cold = name in _FORCED_COLD
         if forced_cold:
-            _clear_index_caches()
+            artifacts.clear()
         try:
             # forced-cold queries always get 3 runs: run 1 is the cold
             # build, runs 2-3 the warm steady state (two warm samples so

@@ -121,18 +121,22 @@ def persist_index_artifacts_async(spark: SparkSession, sf_dir: str):
     # safety net (r11 advice): a caller that drops the pair without
     # consuming every future would otherwise leak a non-daemon executor
     # and swallow write failures. The finalizer fires at GC/interpreter
-    # exit, drains the pool, and re-raises the first failed write so an
-    # abandoned artifact write can never fail silently. Well-behaved
-    # callers (both in-tree) still .result() everything and shut down
-    # explicitly; the finalizer is then a no-op shutdown.
+    # exit, drains the pool, and warns once naming every failed write (a
+    # Future does not record whether a failure was read; raising here would
+    # only print "Exception ignored"). Well-behaved callers (both in-tree)
+    # still .result() everything and shut down explicitly.
+    import warnings
     import weakref
 
-    def _drain(p=pool, fs=tuple(futures.values())):
+    def _drain(p=pool, fs=tuple(futures.items())):
         p.shutdown(wait=True)
-        for f in fs:
-            exc = f.exception()
-            if exc is not None:
-                raise exc
+        failed = [f"{n}: {f.exception()!r}" for n, f in fs if f.exception()]
+        if failed:
+            warnings.warn(
+                f"index-artifact writes failed under {store_dir(sf_dir)}: "
+                + "; ".join(failed),
+                RuntimeWarning,
+            )
 
     weakref.finalize(futures, _drain)
     return futures, pool

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kol_bigdata_realtime_analytics_spark import artifacts
+
 
 def as_double_vec(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -420,61 +422,17 @@ def lsh_neardup_pairs(
     )
 
 
-#: module-level memo for deterministic model-artifact fits (samples,
-#: k-means centroids, PQ codebooks). Keyed by an EXPLICIT caller-supplied
-#: `cache_key` (the registry passes the sf_dir) plus the fit parameters —
-#: never by DataFrame identity, which says nothing about the data. The
-#: fits are deterministic by construction (hash-ordered sample, tie-stable
-#: Lloyd), so memoization is semantics-free; it exists because re-fitting
-#: a MODEL ARTIFACT on every query billed a 1-3 s corpus sample + Lloyd
-#: run to each bench/driver invocation (r5 verdict ask #3). At 100 TB the
-#: equivalent is persisting the trained quantizer beside the index.
-_FIT_CACHE: dict = {}
-
-
-def data_identity(cache_key):
-    """Resolve a caller-supplied cache key to a DATA identity for the fit
-    memos. For a key naming an existing directory (the registry passes the
-    sf_dir), folds in (name, mtime_ns, size) of every parquet under it, so a
-    parquet regenerated at the same path can never serve stale model
-    artifacts (r6 advisory: the memo was keyed by path alone). Non-path keys
-    (e.g. in-plan fixture tags) pass through unchanged — their data is
-    defined by the tag itself. Shared by similarity._FIT_CACHE and the BPE
-    merge cache in plans/llm_ops.py."""
-    import glob as _glob
-    import os as _os
-
-    if isinstance(cache_key, str) and _os.path.isdir(cache_key):
-        ident: list = [cache_key]
-        for p in sorted(_glob.glob(_os.path.join(cache_key, "*.parquet"))):
-            st = _os.stat(p)
-            ident.append((_os.path.basename(p), st.st_mtime_ns, st.st_size))
-            if _os.path.isdir(p):
-                # directory-style parquet: an in-place part rewrite leaves
-                # the dirent unchanged — stat the FULL tree (os.walk), since
-                # partitioned layouts nest part files under key=... subdirs
-                # that a one-level listing misses (r7 advisory)
-                for root, dirs, files in _os.walk(p):
-                    dirs.sort()
-                    rel = _os.path.relpath(root, p)
-                    for q in sorted(files):
-                        sq = _os.stat(_os.path.join(root, q))
-                        ident.append(
-                            (_os.path.join(rel, q), sq.st_mtime_ns, sq.st_size)
-                        )
-        return tuple(ident)
-    return cache_key
-
-
-def _sample_fingerprint(sample) -> tuple:
-    """Content fingerprint of an explicit caller-supplied sample array, folded
-    into the fit-memo key so a memo hit can never silently discard the sample
-    and return centroids fit on different data (r6 advisory). sha1 over ~2 MB
-    is a few ms — negligible next to a Lloyd fit."""
+def _sample_fingerprint(sample) -> tuple | None:
+    """Content fingerprint of an explicit caller-supplied sample array (None
+    for no sample), folded into the fit-memo key so a memo hit can never
+    silently discard the sample and return centroids fit on different data.
+    sha1 over ~2 MB is a few ms — negligible next to a Lloyd fit."""
     import hashlib
 
     import numpy as np
 
+    if sample is None:
+        return None
     arr = np.ascontiguousarray(sample)
     return (
         "sample_fp",
@@ -495,32 +453,46 @@ def hash_sample(
     with the smallest xxhash64(id) — stable across partitionings and data
     layout (a seeded rand() sample is not). Shared by every quantizer fit
     so a combined build (e.g. IVF-PQ) collects the corpus sample ONCE.
-    `cache_key`: opaque data identity (e.g. sf_dir) enabling the module
-    fit cache; None (the default) always re-collects."""
+    `cache_key`: opaque data identity (e.g. sf_dir) enabling the session
+    artifact cache, which hands the array out read-only; None (the
+    default) always re-collects."""
     import numpy as np
 
-    memo = ("sample", data_identity(cache_key), id_col, vec_col, sample_size)
-    if cache_key is not None and memo in _FIT_CACHE:
-        return _FIT_CACHE[memo]
-
-    rows = (
-        candidates.select(
-            F.col(id_col).alias("vid"),
-            as_double_vec(F.col(vec_col)).alias("v"),
-            F.xxhash64(F.col(id_col)).alias("h"),
+    def collect():
+        rows = (
+            candidates.select(
+                F.col(id_col).alias("vid"),
+                as_double_vec(F.col(vec_col)).alias("v"),
+                F.xxhash64(F.col(id_col)).alias("h"),
+            )
+            .orderBy("h", "vid")
+            .limit(sample_size)
+            .collect()
         )
-        .orderBy("h", "vid")
-        .limit(sample_size)
-        .collect()
+        return np.array([r["v"] for r in rows], dtype="float64")
+
+    return artifacts.cached(
+        "sample", cache_key, (id_col, vec_col, sample_size), collect
     )
-    X = np.array([r["v"] for r in rows], dtype="float64")
-    if cache_key is not None:
-        # read-only: the cache hands out THIS object by reference; a caller
-        # mutating it in place (e.g. an in-place normalize) would silently
-        # corrupt every later fit under this key (r6 review)
-        X.setflags(write=False)
-        _FIT_CACHE[memo] = X
-    return X
+
+
+def _sample_fit(
+    kind, fit, params, candidates, id_col, vec_col, sample_size, sample,
+    cache_key,
+):
+    """fit(X) over the explicit `sample`, else over the shared hash_sample(),
+    memoized in the session artifact cache. The explicit sample's content
+    is part of the fit identity: a memo hit under a reused cache_key must
+    not discard it."""
+
+    def build():
+        X = sample if sample is not None else hash_sample(
+            candidates, id_col, vec_col, sample_size, cache_key
+        )
+        return fit(X)
+
+    key = (_sample_fingerprint(sample), id_col, vec_col, sample_size, *params)
+    return artifacts.cached(kind, cache_key, key, build)
 
 
 def kmeans_centroids(
@@ -551,49 +523,31 @@ def kmeans_centroids(
     """
     import numpy as np
 
-    memo = (
-        "kmeans",
-        data_identity(cache_key),
-        # explicit sample: its content is part of the fit identity — a memo
-        # hit under a reused cache_key must not discard it (r6 advisory)
-        _sample_fingerprint(sample) if sample is not None else None,
-        id_col,
-        vec_col,
-        n_centroids,
-        sample_size,
-        max_iter,
+    def fit(X):
+        nrm = np.linalg.norm(X, axis=1, keepdims=True)
+        nrm[nrm == 0] = 1.0
+        Xn = X / nrm
+        k = min(n_centroids, len(Xn))
+        C = Xn[:k].copy()
+        for _ in range(max_iter):
+            assign = np.argmax(Xn @ C.T, axis=1)
+            new_c = np.empty_like(C)
+            for j in range(k):
+                members = Xn[assign == j]
+                new_c[j] = members.mean(axis=0) if len(members) else C[j]
+            cn = np.linalg.norm(new_c, axis=1, keepdims=True)
+            cn[cn == 0] = 1.0
+            new_c = new_c / cn
+            converged = np.allclose(new_c, C, atol=1e-12)
+            C = new_c
+            if converged:
+                break
+        return [[float(x) for x in c] for c in C]
+
+    return _sample_fit(
+        "kmeans", fit, (n_centroids, max_iter),
+        candidates, id_col, vec_col, sample_size, sample, cache_key,
     )
-    if cache_key is not None and memo in _FIT_CACHE:
-        # fresh copy per hit: the cached nested list is shared state — a
-        # caller-side sort/append would corrupt every later fit (r6 review,
-        # same rationale as hash_sample's write=False)
-        return [list(c) for c in _FIT_CACHE[memo]]
-    X = sample if sample is not None else hash_sample(
-        candidates, id_col=id_col, vec_col=vec_col, sample_size=sample_size,
-        cache_key=cache_key,
-    )
-    nrm = np.linalg.norm(X, axis=1, keepdims=True)
-    nrm[nrm == 0] = 1.0
-    Xn = X / nrm
-    k = min(n_centroids, len(Xn))
-    C = Xn[:k].copy()
-    for _ in range(max_iter):
-        assign = np.argmax(Xn @ C.T, axis=1)
-        new_c = np.empty_like(C)
-        for j in range(k):
-            members = Xn[assign == j]
-            new_c[j] = members.mean(axis=0) if len(members) else C[j]
-        cn = np.linalg.norm(new_c, axis=1, keepdims=True)
-        cn[cn == 0] = 1.0
-        new_c = new_c / cn
-        converged = np.allclose(new_c, C, atol=1e-12)
-        C = new_c
-        if converged:
-            break
-    out = [[float(x) for x in c] for c in C]
-    if cache_key is not None:
-        _FIT_CACHE[memo] = [list(c) for c in out]  # private copy in the cache
-    return out
 
 
 def ivf_topk(
@@ -794,30 +748,10 @@ def pq_codebooks(
     centroid. Returns [m][ksub][dsub] floats. `sample`: pre-fetched
     hash_sample() array, to share one collect across several fits.
     """
-    import numpy as np
-
-    memo = (
-        "pq",
-        data_identity(cache_key),
-        _sample_fingerprint(sample) if sample is not None else None,
-        id_col,
-        vec_col,
-        m,
-        ksub,
-        sample_size,
-        max_iter,
+    return _sample_fit(
+        "pq", lambda X: _pq_fit(X, m, ksub, max_iter), (m, ksub, max_iter),
+        candidates, id_col, vec_col, sample_size, sample, cache_key,
     )
-    if cache_key is not None and memo in _FIT_CACHE:
-        # fresh copy per hit — see kmeans_centroids
-        return [[list(c) for c in b] for b in _FIT_CACHE[memo]]
-    X = sample if sample is not None else hash_sample(
-        candidates, id_col=id_col, vec_col=vec_col, sample_size=sample_size,
-        cache_key=cache_key,
-    )
-    books = _pq_fit(X, m, ksub, max_iter)
-    if cache_key is not None:
-        _FIT_CACHE[memo] = [[list(c) for c in b] for b in books]  # private copy
-    return books
 
 
 def _pq_fit(X, m: int, ksub: int, max_iter: int) -> list[list[list[float]]]:
@@ -909,33 +843,19 @@ def pq_residual_codebooks(
     fine structure the coarse quantizer left — what keeps ksub=16
     codebooks accurate at 100 TB. Same determinism contract and memo
     discipline as pq_codebooks."""
-    memo = (
-        "pq_res",
-        data_identity(cache_key),
-        _sample_fingerprint(sample) if sample is not None else None,
-        id_col,
-        vec_col,
-        # the coarse centroids' CONTENT is part of the fit identity — two
-        # same-length coarse sets under one cache_key must not share
-        # residual codebooks (r7 review; same class as the sample hole)
-        _sample_fingerprint(coarse),
-        m,
-        ksub,
-        sample_size,
-        max_iter,
+
+    def fit(X):
+        A = coarse_anchors(X, coarse)
+        return _pq_fit(X - A[_coarse_assign(X, coarse)], m, ksub, max_iter)
+
+    # the coarse centroids' CONTENT is part of the fit identity — two
+    # same-length coarse sets under one cache_key must not share residual
+    # codebooks (the same hole as a discarded explicit sample)
+    params = (_sample_fingerprint(coarse), m, ksub, max_iter)
+    return _sample_fit(
+        "pq_res", fit, params,
+        candidates, id_col, vec_col, sample_size, sample, cache_key,
     )
-    if cache_key is not None and memo in _FIT_CACHE:
-        return [[list(c) for c in b] for b in _FIT_CACHE[memo]]
-    X = sample if sample is not None else hash_sample(
-        candidates, id_col=id_col, vec_col=vec_col, sample_size=sample_size,
-        cache_key=cache_key,
-    )
-    A = coarse_anchors(X, coarse)
-    R = X - A[_coarse_assign(X, coarse)]
-    books = _pq_fit(R, m, ksub, max_iter)
-    if cache_key is not None:
-        _FIT_CACHE[memo] = [[list(c) for c in b] for b in books]  # private copy
-    return books
 
 
 def pq_encode_udf(books: list[list[list[float]]]):
@@ -1299,36 +1219,23 @@ def pca_fit(
     fit is fully deterministic. Same memo discipline as kmeans_centroids."""
     import numpy as np
 
-    memo = (
-        "pca",
-        data_identity(cache_key),
-        _sample_fingerprint(sample) if sample is not None else None,
-        id_col,
-        vec_col,
-        n_components,
-        sample_size,
+    def fit(X):
+        mu = X.mean(axis=0)
+        Xc = X - mu
+        cov = (Xc.T @ Xc) / max(len(Xc) - 1, 1)
+        evals, evecs = np.linalg.eigh(cov)  # ascending; columns: eigenvectors
+        order = np.argsort(evals)[::-1][:n_components]
+        P = evecs[:, order].T  # (k, dim)
+        for i in range(P.shape[0]):  # canonical sign: largest-|entry| positive
+            j = int(np.argmax(np.abs(P[i])))
+            if P[i, j] < 0:
+                P[i] = -P[i]
+        return ([float(x) for x in mu], [[float(x) for x in r] for r in P])
+
+    return _sample_fit(
+        "pca", fit, (n_components,),
+        candidates, id_col, vec_col, sample_size, sample, cache_key,
     )
-    if cache_key is not None and memo in _FIT_CACHE:
-        mu, comps = _FIT_CACHE[memo]
-        return list(mu), [list(c) for c in comps]
-    X = sample if sample is not None else hash_sample(
-        candidates, id_col=id_col, vec_col=vec_col, sample_size=sample_size,
-        cache_key=cache_key,
-    )
-    mu = X.mean(axis=0)
-    Xc = X - mu
-    cov = (Xc.T @ Xc) / max(len(Xc) - 1, 1)
-    evals, evecs = np.linalg.eigh(cov)  # ascending; columns are eigenvectors
-    order = np.argsort(evals)[::-1][:n_components]
-    P = evecs[:, order].T  # (k, dim)
-    for i in range(P.shape[0]):  # canonical sign: largest-|entry| positive
-        j = int(np.argmax(np.abs(P[i])))
-        if P[i, j] < 0:
-            P[i] = -P[i]
-    out = ([float(x) for x in mu], [[float(x) for x in r] for r in P])
-    if cache_key is not None:
-        _FIT_CACHE[memo] = (list(out[0]), [list(r) for r in out[1]])
-    return out
 
 
 def pca_project_udf(mean: list[float], components: list[list[float]]):
@@ -1372,25 +1279,18 @@ def opq_rotation(
     cosine top-k in the rotated space is cosine top-k in the original).
     Deterministic (sign-canonicalized eigh on the hash-ordered sample) and
     memoized like every quantizer fit."""
+    return _sample_fit(
+        "opq_rot", lambda X: _opq_fit(X, m), (m,),
+        candidates, id_col, vec_col, sample_size, sample, cache_key,
+    )
+
+
+def _opq_fit(X, m: int) -> list[list[float]]:
+    """The balanced-allocation OPQ rotation of opq_rotation, fit on X."""
     import math
 
     import numpy as np
 
-    memo = (
-        "opq_rot",
-        data_identity(cache_key),
-        _sample_fingerprint(sample) if sample is not None else None,
-        id_col,
-        vec_col,
-        m,
-        sample_size,
-    )
-    if cache_key is not None and memo in _FIT_CACHE:
-        return [list(r) for r in _FIT_CACHE[memo]]
-    X = sample if sample is not None else hash_sample(
-        candidates, id_col=id_col, vec_col=vec_col, sample_size=sample_size,
-        cache_key=cache_key,
-    )
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -1415,10 +1315,7 @@ def opq_rotation(
         slots[s].append(comp)
         logprod[s] += math.log(max(float(evals[comp]), 1e-12))
     perm = [c for s in range(m) for c in slots[s]]
-    R = [[float(x) for x in P[c]] for c in perm]
-    if cache_key is not None:
-        _FIT_CACHE[memo] = [list(r) for r in R]
-    return R
+    return [[float(x) for x in P[c]] for c in perm]
 
 
 def opq_topk(
@@ -1603,27 +1500,24 @@ def xxh64_long(v: int, seed: int = 42) -> int:
 def hash_sample_offline(sf_dir: str, sample_size: int = 4096):
     """numpy twin of hash_sample(table(embeddings), ...): same rows, same
     order (ascending signed xxhash64(vec_id), then vec_id), same float64
-    widening — read via DuckDB, no Spark. Memoized under the same fit
+    widening — read via DuckDB, no Spark. Memoized in the session artifact
     cache so one process fits each artifact once."""
     import os
 
     import duckdb
     import numpy as np
 
-    memo = ("sample_offline", data_identity(sf_dir), sample_size)
-    if memo in _FIT_CACHE:
-        return _FIT_CACHE[memo]
-    path = f"{sf_dir}/embeddings.parquet"
-    if os.path.isdir(path):
-        path = f"{path}/**/*.parquet"
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding::DOUBLE[] FROM '{path}'"
-    ).fetchall()
-    rows.sort(key=lambda r: (xxh64_long(int(r[0])), int(r[0])))
-    X = np.array([r[1] for r in rows[:sample_size]], dtype="float64")
-    X.setflags(write=False)
-    _FIT_CACHE[memo] = X
-    return X
+    def collect():
+        path = f"{sf_dir}/embeddings.parquet"
+        if os.path.isdir(path):
+            path = f"{path}/**/*.parquet"
+        rows = duckdb.sql(
+            f"SELECT vec_id, embedding::DOUBLE[] FROM '{path}'"
+        ).fetchall()
+        rows.sort(key=lambda r: (xxh64_long(int(r[0])), int(r[0])))
+        return np.array([r[1] for r in rows[:sample_size]], dtype="float64")
+
+    return artifacts.cached("sample_offline", sf_dir, (sample_size,), collect)
 
 
 def fold_project(X, P):

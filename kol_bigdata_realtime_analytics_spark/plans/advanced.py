@@ -3410,28 +3410,24 @@ def _pca_q_artifact(sf_dir: str) -> tuple[list[int], list[list[int]]]:
     import duckdb
     import numpy as np
 
-    from kol_bigdata_realtime_analytics_spark.operators.similarity import (
-        _FIT_CACHE,
-        data_identity,
-        pca_fit,
-    )
+    from kol_bigdata_realtime_analytics_spark import artifacts
+    from kol_bigdata_realtime_analytics_spark.operators.similarity import pca_fit
 
-    memo = ("pca_q", data_identity(sf_dir), _PCA_PROJ_K, _PCA_Q_SCALE)
-    if memo in _FIT_CACHE:
-        return _FIT_CACHE[memo]
-    path = f"{sf_dir}/embeddings.parquet"
-    if os.path.isdir(path):
-        path = f"{path}/**/*.parquet"
-    rows = duckdb.sql(
-        f"SELECT embedding::DOUBLE[] FROM '{path}' "
-        "WHERE vec_id < 4096 ORDER BY vec_id"
-    ).fetchall()
-    X = np.array([r[0] for r in rows], dtype="float64")
-    mean, comps = pca_fit(None, n_components=_PCA_PROJ_K, sample=X)
-    muq = [math.floor(m * _PCA_Q_SCALE) for m in mean]
-    pq = [[math.floor(c * _PCA_Q_SCALE) for c in row] for row in comps]
-    _FIT_CACHE[memo] = (muq, pq)
-    return muq, pq
+    def fit():
+        path = f"{sf_dir}/embeddings.parquet"
+        if os.path.isdir(path):
+            path = f"{path}/**/*.parquet"
+        rows = duckdb.sql(
+            f"SELECT embedding::DOUBLE[] FROM '{path}' "
+            "WHERE vec_id < 4096 ORDER BY vec_id"
+        ).fetchall()
+        X = np.array([r[0] for r in rows], dtype="float64")
+        mean, comps = pca_fit(None, n_components=_PCA_PROJ_K, sample=X)
+        muq = [math.floor(m * _PCA_Q_SCALE) for m in mean]
+        pq = [[math.floor(c * _PCA_Q_SCALE) for c in row] for row in comps]
+        return muq, pq
+
+    return artifacts.cached("pca_q", sf_dir, (_PCA_PROJ_K, _PCA_Q_SCALE), fit)
 
 
 def _pca_project_oracle(sf_dir: str) -> str:

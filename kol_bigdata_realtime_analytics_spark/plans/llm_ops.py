@@ -16,6 +16,7 @@ import pandas as pd  # noqa: F401 — pandas_udf signature resolution
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kol_bigdata_realtime_analytics_spark import artifacts
 from kol_bigdata_realtime_analytics_spark.functions.text import (
     AVG_TOKEN_LENGTH_ORACLE_SQL,
     CHUNK_ORACLE_SQL,
@@ -3987,47 +3988,39 @@ def bpe_vocab_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # use_cache=False: TRAINING is this query's deliverable — serving it
     # from the memo would elide the measured work (bench's best-of-N would
     # report a ~0.1 s cache hit and training regressions would vanish from
-    # the official metric, r6 review). The run still REFRESHES the cache
-    # for consumers of the artifact (bpe_encode_stats).
+    # the official metric). The run still leaves the table in the artifact
+    # cache for its consumers (bpe_encode_stats).
     return spark.createDataFrame(
         _bpe_merges(spark, sf_dir, use_cache=False),
         "merge_rank long, sym_a string, sym_b string, merged string, cnt long",
     )
 
 
-#: memo for the trained merge table, keyed by the sf_dir's DATA identity
-#: (path + parquet mtime/size via similarity.data_identity, r6 advisory:
-#: path alone could serve stale merges after an in-session regeneration) —
-#: the merges are deterministic given the corpus (hash-free aggregation,
-#: total-order tie breaks), so CONSUMERS of the artifact (the encode pass)
-#: may reuse it, same discipline as similarity._FIT_CACHE. The trainer
-#: itself always recomputes (its work product is the training).
-_BPE_MERGE_CACHE: dict[tuple, list[tuple]] = {}
-
-
 def _bpe_merges(
     spark: SparkSession, sf_dir: str, use_cache: bool = True
 ) -> list[tuple]:
     """Run the merge loop (see bpe_vocab_train) over the corpus words and
-    return the merge table [(rank, sym_a, sym_b, merged, cnt)]; the result
-    is stored in _BPE_MERGE_CACHE and served from it when use_cache is
-    True."""
-    from kol_bigdata_realtime_analytics_spark.operators.similarity import data_identity
+    return the merge table [(rank, sym_a, sym_b, merged, cnt)]. The table is
+    deterministic given the corpus (hash-free aggregation, total-order tie
+    breaks), so consumers of the artifact (the encode pass) are served it
+    from the session artifact cache when use_cache is True. The trainer
+    passes False: its work product is the training, so it always runs it,
+    and leaves the table (equal to any entry under the same data identity)
+    in the cache for the consumers."""
 
-    cache_key = data_identity(sf_dir)
-    if use_cache and cache_key in _BPE_MERGE_CACHE:
-        # fresh list per hit: elements are immutable tuples, but handing out
-        # the cached LIST would let a caller append/sort shared state
-        return list(_BPE_MERGE_CACHE[cache_key])
-    docs = table(spark, sf_dir, "documents").filter(
-        F.trim(F.coalesce("text", F.lit(""))) != ""
-    )
-    words = docs.select(F.explode(tokens("text")).alias("w")).filter(
-        F.length("w") >= 2
-    )
-    merges = bpe_train(words, _BPE_N_MERGES)
-    _BPE_MERGE_CACHE[cache_key] = list(merges)  # private copy in the cache
-    return merges
+    def train():
+        docs = table(spark, sf_dir, "documents").filter(
+            F.trim(F.coalesce("text", F.lit(""))) != ""
+        )
+        words = docs.select(F.explode(tokens("text")).alias("w")).filter(
+            F.length("w") >= 2
+        )
+        return bpe_train(words, _BPE_N_MERGES)
+
+    if use_cache:
+        return artifacts.cached("bpe_merges", sf_dir, (), train)
+    merges = train()
+    return artifacts.cached("bpe_merges", sf_dir, (), lambda: merges)
 
 
 def _bpe_train_driver(
@@ -6557,17 +6550,6 @@ def _knn_planes(n: int) -> int:
     return max(3, math.ceil(math.log2(max(2.0, n / _KNN_TARGET_BUCKET))))
 
 
-#: session-scoped materialized kNN graphs, keyed by (applicationId,
-#: sf_dir, probe_bits). The graph is an INDEX ARTIFACT — at 100 TB it is
-#: built once and persisted beside the corpus, then consumed by every
-#: downstream job (NN-descent, SemDeDup, HNSW, recall certificates) — so
-#: the five registered consumers sharing one localCheckpoint per session
-#: is the honest small-scale analogue (the _FIT_CACHE discipline, r5
-#: verdict ask #3, applied to a frame artifact). Keyed by applicationId:
-#: a new session rebuilds; checkpoints die with the context.
-_KNN_GRAPH_CACHE: dict = {}
-
-
 def _knn_scored(
     spark: SparkSession, sf_dir: str, probe_bits: int, max_q: int | None = None
 ) -> DataFrame:
@@ -6576,17 +6558,15 @@ def _knn_scored(
     once per ROW before the pair join (O(n*dim), not O(pairs*dim)).
     `max_q` restricts the QUERY side (vec_id < max_q) — the per-q_id
     window makes the restricted result identical to filtering the full
-    graph, which is exactly what the cached path does."""
-    key = (spark.sparkContext.applicationId, sf_dir, probe_bits)
-    cached = _KNN_GRAPH_CACHE.get(key)
-    if cached is not None:
-        return (
-            cached if max_q is None else cached.filter(F.col("vec_id") < max_q)
-        )
-    full = _knn_scored_build(spark, sf_dir, probe_bits, None).localCheckpoint(
-        eager=True
-    )
-    _KNN_GRAPH_CACHE[key] = full
+    graph, which is exactly what this does. The full graph is an index
+    artifact built once per session (see artifacts) and consumed by every
+    downstream job (NN-descent, SemDeDup, HNSW, recall certificates)."""
+
+    def build():
+        full = _knn_scored_build(spark, sf_dir, probe_bits)
+        return full.localCheckpoint(eager=True)
+
+    full = artifacts.cached("knn_graph", sf_dir, (probe_bits,), build)
     return full if max_q is None else full.filter(F.col("vec_id") < max_q)
 
 
@@ -7555,13 +7535,6 @@ def _hnsw_pop_layers(counts: dict[int, int]) -> list[tuple[int, int]]:
     return out
 
 
-#: session-scoped HNSW build artifacts (base scan, census, layer graphs)
-#: — the same index-artifact reuse rationale as _KNN_GRAPH_CACHE: the
-#: layered graph is built once per corpus and consumed by the build query
-#: AND the descent certificate.
-_HNSW_BUILD_CACHE: dict = {}
-
-
 def _fused_layer_topk(per_layer, k: int) -> DataFrame:
     """Fuse per-layer bucket-probe top-k joins into ONE cogrouped Arrow
     scoring pass + ONE ranking window, keyed by (level, bucket).
@@ -7623,11 +7596,17 @@ def _hnsw_build(
     scan, the bounded layer census, and the long-form layered neighbor
     lists (level, vec_id, neighbor_id, cosine, rank) — one scan feeds
     every layer; per layer a bucket projection with layer-scaled planes
-    + the knn probe join + top-k. Session-cached (see _HNSW_BUILD_CACHE)."""
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    hit = _HNSW_BUILD_CACHE.get(ck)
-    if hit is not None:
-        return hit
+    + the knn probe join + top-k. Built once per session (see artifacts)
+    and consumed by the build query AND the descent certificate."""
+    return artifacts.cached(
+        "hnsw_build", sf_dir, (), lambda: _hnsw_build_uncached(spark, sf_dir)
+    )
+
+
+def _hnsw_build_uncached(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, dict[int, int], DataFrame]:
+    """The uncached HNSW build (see _hnsw_build)."""
     from kol_bigdata_realtime_analytics_spark.operators.similarity import (
         as_double_vec,
         lsh_bucket_id,
@@ -7665,7 +7644,6 @@ def _hnsw_build(
         )
         per_layer.append((l, q, c))
     out = _fused_layer_topk(per_layer, _HNSW_M).localCheckpoint(eager=True)
-    _HNSW_BUILD_CACHE[ck] = (base, counts, out)
     return base, counts, out
 
 

@@ -39,6 +39,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kol_bigdata_realtime_analytics_spark import artifacts
 from kol_bigdata_realtime_analytics_spark.plans.registry import (
     hash52,
     register,
@@ -57,11 +58,6 @@ _QC_ROUNDS = 8
 _QC_LR_DEN = 64
 #: heuristic-label threshold on the trunc6'd quality score (~60/40 here)
 _QC_TH = 0.25
-
-#: session-scoped trained model (final weight frame + corpus size), shared
-#: by the train and score queries — the _FIT_CACHE discipline; the 65-row
-#: weight table is the entire model artifact.
-_QC_CACHE: dict = {}
 
 
 def _qc_label_expr():
@@ -132,11 +128,22 @@ def _qc_train(
     w_final, n, feat, lab). Weight frames are 65 rows (checkpointed per
     round); loss frames are 1 row; feat/lab are the checkpointed inputs
     (returned so the score query never re-derives the corpus features).
-    Cached per session — train and score share one run."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _QC_CACHE.get(key)
-    if hit is not None:
-        return hit
+    Built once per session (see artifacts) — train and score share one run;
+    the 65-row weight table is the entire model artifact."""
+    return artifacts.cached(
+        "quality_classifier",
+        sf_dir,
+        (),
+        lambda: _qc_train_uncached(spark, sf_dir),
+    )
+
+
+def _qc_train_uncached(
+    spark: SparkSession, sf_dir: str
+) -> tuple[
+    list[tuple[int, DataFrame, DataFrame]], DataFrame, int, DataFrame, DataFrame
+]:
+    """The uncached training run (see _qc_train)."""
     feat, lab, n = _qc_inputs(spark, sf_dir)
     w = (
         spark.range(_QC_FEATS + 1)
@@ -198,9 +205,7 @@ def _qc_train(
             .localCheckpoint(eager=True)  # 65 rows
         )
         rounds.append((r, w, loss))
-    out = (rounds, w, n, feat, lab)
-    _QC_CACHE[key] = out
-    return out
+    return rounds, w, n, feat, lab
 
 
 # --- oracle -----------------------------------------------------------------

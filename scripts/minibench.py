@@ -14,7 +14,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _FORCED_COLD, _clear_index_caches  # noqa: E402
+from bench import _FORCED_COLD  # noqa: E402
+from kol_bigdata_realtime_analytics_spark import artifacts  # noqa: E402
 from kol_bigdata_realtime_analytics_spark.plans import REGISTRY  # noqa: E402
 from kol_bigdata_realtime_analytics_spark.session import get_spark  # noqa: E402
 
@@ -40,7 +41,7 @@ def main() -> None:
     for name in names:
         q = REGISTRY[name]
         if name in _FORCED_COLD:
-            _clear_index_caches()
+            artifacts.clear()
         runs = []
         for i in range(n_runs):
             spark.sparkContext.setJobDescription(f"{name} run{i}")

@@ -60,17 +60,25 @@ def test_forced_cold_names_are_registered():
     assert not [n for n in bench._FORCED_COLD if n not in bench.HEADLINE]
 
 
-def test_clear_index_caches_clears_all_three():
-    from kol_bigdata_realtime_analytics_spark.operators import similarity
-    from kol_bigdata_realtime_analytics_spark.plans import llm_ops
+def test_artifact_clear_empties_every_kind(spark, sf_small):
+    """The bench's cold billing calls artifacts.clear(): it must drop an
+    entry of every artifact kind — including the BPE merge table, which the
+    former hand-kept clear-list missed."""
+    from kol_bigdata_realtime_analytics_spark import artifacts
+    from kol_bigdata_realtime_analytics_spark.plans.llm_ops import _bpe_merges
 
-    llm_ops._KNN_GRAPH_CACHE["k"] = 1
-    llm_ops._HNSW_BUILD_CACHE["k"] = 1
-    similarity._FIT_CACHE["k"] = 1
-    bench._clear_index_caches()
-    assert not llm_ops._KNN_GRAPH_CACHE
-    assert not llm_ops._HNSW_BUILD_CACHE
-    assert not similarity._FIT_CACHE
+    kinds = {
+        "sample", "kmeans", "pq", "pq_res", "pca", "opq_rot", "sample_offline",
+        "pca_q", "bpe_merges", "knn_graph", "hnsw_build", "hnsw_descent",
+        "quality_classifier",
+    }
+    artifacts.clear()
+    _bpe_merges(spark, sf_small)  # a real merge-table entry
+    for kind in kinds - {"bpe_merges"}:
+        artifacts.cached(kind, "clear-test", (), lambda: [1.0])
+    assert {k[0] for k in artifacts._ARTIFACT_CACHE} == kinds
+    artifacts.clear()
+    assert not artifacts._ARTIFACT_CACHE
 
 
 def test_headline_names_are_registered():

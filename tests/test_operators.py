@@ -1309,6 +1309,7 @@ def test_fit_cache_memoizes_and_preserves_results(spark):
     artifacts on a second call with the same cache_key, (b) serve them
     WITHOUT re-collecting (we poison the frame between calls to prove the
     cached artifact wins), and (c) stay disabled when cache_key is None."""
+    from kol_bigdata_realtime_analytics_spark import artifacts
     from kol_bigdata_realtime_analytics_spark.operators import similarity as S
 
     emb = spark.createDataFrame(
@@ -1316,10 +1317,10 @@ def test_fit_cache_memoizes_and_preserves_results(spark):
         "vec_id long, embedding array<double>",
     )
     key = "fit-cache-test-key"
-    S._FIT_CACHE.clear()
+    artifacts.clear()
     c1 = S.kmeans_centroids(emb, n_centroids=4, sample_size=64, cache_key=key)
-    assert any(k[0] == "sample" for k in S._FIT_CACHE)
-    assert any(k[0] == "kmeans" for k in S._FIT_CACHE)
+    assert any(k[0] == "sample" for k in artifacts._ARTIFACT_CACHE)
+    assert any(k[0] == "kmeans" for k in artifacts._ARTIFACT_CACHE)
     # a DIFFERENT frame under the same key must not be re-fit: the cache is
     # keyed by declared data identity, not DataFrame object identity.
     # AFFINE poison (2x+1): a pure scaling is invariant under spherical
@@ -1330,8 +1331,10 @@ def test_fit_cache_memoizes_and_preserves_results(spark):
     poisoned = emb.withColumn(
         "embedding", F.transform("embedding", lambda x: x * 2.0 + 1.0)
     )
+    hits = artifacts.hits["kmeans"]
     c2 = S.kmeans_centroids(poisoned, n_centroids=4, sample_size=64, cache_key=key)
     assert c1 == c2
+    assert artifacts.hits["kmeans"] == hits + 1
     # cache_key=None bypasses the memo entirely (fits the poisoned data)
     c3 = S.kmeans_centroids(poisoned, n_centroids=4, sample_size=64, cache_key=None)
     assert c3 != c1
@@ -1339,11 +1342,11 @@ def test_fit_cache_memoizes_and_preserves_results(spark):
     # with both layers live, a broken kmeans memo is masked by the cached
     # sample reproducing identical centroids): pop the sample entry — a
     # kmeans hit must still serve c1 WITHOUT re-collecting a sample
-    for k in [k for k in S._FIT_CACHE if k[0] == "sample"]:
-        S._FIT_CACHE.pop(k)
+    for k in [k for k in artifacts._ARTIFACT_CACHE if k[0] == "sample"]:
+        artifacts._ARTIFACT_CACHE.pop(k)
     c4 = S.kmeans_centroids(poisoned, n_centroids=4, sample_size=64, cache_key=key)
     assert c4 == c1
-    assert not any(k[0] == "sample" for k in S._FIT_CACHE)
+    assert not any(k[0] == "sample" for k in artifacts._ARTIFACT_CACHE)
     # cache hits hand out COPIES: mutating a returned artifact must not
     # corrupt the cached one
     c4[0][0] = 1e9
@@ -1354,13 +1357,14 @@ def test_fit_cache_memoizes_and_preserves_results(spark):
     assert b1 == b2
     b2[0][0][0] = 1e9
     assert S.pq_codebooks(poisoned, m=2, ksub=4, sample_size=64, cache_key=key) == b1
-    S._FIT_CACHE.clear()
+    artifacts.clear()
 
 
 def test_fit_cache_invalidates_on_data_regeneration(spark, tmp_path):
     """Path-keyed memos must carry the parquet's (mtime, size) identity
     (r6 advisory): rewriting the file at the SAME path must trigger a
     re-fit, never serve the stale artifact."""
+    from kol_bigdata_realtime_analytics_spark import artifacts
     from kol_bigdata_realtime_analytics_spark.operators import similarity as S
 
     d = tmp_path / "regen_sf"
@@ -1376,7 +1380,7 @@ def test_fit_cache_invalidates_on_data_regeneration(spark, tmp_path):
             "vec_id long, embedding array<double>",
         ).toPandas().to_parquet(str(d / "embeddings.parquet"))
 
-    S._FIT_CACHE.clear()
+    artifacts.clear()
     write(0)
     emb1 = spark.read.parquet(str(d / "embeddings.parquet"))
     c1 = S.kmeans_centroids(emb1, n_centroids=4, sample_size=64, cache_key=path)
@@ -1387,7 +1391,7 @@ def test_fit_cache_invalidates_on_data_regeneration(spark, tmp_path):
     emb2 = spark.read.parquet(str(d / "embeddings.parquet"))
     c2 = S.kmeans_centroids(emb2, n_centroids=4, sample_size=64, cache_key=path)
     assert c2 != c1
-    S._FIT_CACHE.clear()
+    artifacts.clear()
 
 
 def test_fit_cache_explicit_sample_not_discarded(spark):
@@ -1396,6 +1400,7 @@ def test_fit_cache_explicit_sample_not_discarded(spark):
     two different samples under one key fit independently."""
     import numpy as np
 
+    from kol_bigdata_realtime_analytics_spark import artifacts
     from kol_bigdata_realtime_analytics_spark.operators import similarity as S
 
     emb = spark.createDataFrame(
@@ -1403,7 +1408,7 @@ def test_fit_cache_explicit_sample_not_discarded(spark):
         "vec_id long, embedding array<double>",
     )
     key = "sample-fp-test-key"
-    S._FIT_CACHE.clear()
+    artifacts.clear()
     s1 = np.array([[float((i * 7 + j) % 5) for j in range(8)] for i in range(64)])
     s2 = s1 * 2.0 + 1.0  # affine: different directions -> different centroids
     c1 = S.kmeans_centroids(emb, n_centroids=4, sample_size=64, sample=s1, cache_key=key)
@@ -1413,7 +1418,7 @@ def test_fit_cache_explicit_sample_not_discarded(spark):
     assert S.kmeans_centroids(
         emb, n_centroids=4, sample_size=64, sample=s2, cache_key=key
     ) == c2
-    S._FIT_CACHE.clear()
+    artifacts.clear()
 
 
 def test_duplicate_clusters_rejects_null_cast_ids(spark):
@@ -1646,3 +1651,38 @@ def test_kneser_ney_ranks_unlike_jelinek_mercer(spark, tmp_path):
     assert jm[1] < jm[2], jm
     # KN: B (transition onto a VERSATILE token) beats A — inverted
     assert kn[2] < kn[1], kn
+
+
+def test_index_store_finalizer_warns_once_for_dropped_failed_write(monkeypatch):
+    """Artifact writes dropped without consuming their futures: the store's
+    finalizer reports the failures as ONE RuntimeWarning when the futures
+    are collected, and raises nothing (an exception in a finalizer is only
+    printed as "Exception ignored ...")."""
+    import gc
+    import sys
+    import warnings
+
+    from kol_bigdata_realtime_analytics_spark.operators import index_store
+    from kol_bigdata_realtime_analytics_spark.plans import llm_ops
+
+    # None frames have no .write: every write fails inside the pool
+    monkeypatch.setattr(llm_ops, "_hnsw_build", lambda s, d: (None, {}, None))
+    monkeypatch.setattr(llm_ops, "_knn_scored", lambda s, d, b: None)
+    monkeypatch.setattr(llm_ops, "_dedup_corpus_index", lambda s, d: (None, None))
+    monkeypatch.setattr(index_store, "ivf_centroids_frame", lambda s, d: None)
+    unraisable = []
+    hook, sys.unraisablehook = sys.unraisablehook, unraisable.append
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            futures, pool = index_store.persist_index_artifacts_async(
+                None, "/nonexistent/sf_finalizer_test"
+            )
+            del futures, pool
+            gc.collect()
+    finally:
+        sys.unraisablehook = hook
+    assert unraisable == []
+    warned = [w for w in caught if issubclass(w.category, RuntimeWarning)]
+    assert len(warned) == 1
+    assert all(a in str(warned[0].message) for a in index_store.ARTIFACTS)
