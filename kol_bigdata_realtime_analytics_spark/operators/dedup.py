@@ -277,6 +277,34 @@ def minhash_lsh_skipped_buckets(
     )
 
 
+def _cc_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """One pointer-doubling min-label round over the symmetrized edge list
+    `sym` (src, dst) and the label frame (node, label): every node takes
+    the min over its label, its neighbors' labels and the CURRENT LABEL OF
+    ITS LABEL. The per-round algebra of duplicate_clusters' distributed
+    loop and of the dedup_clusters_fixpoint_check certificate. Unpinned."""
+    neighbor_labels = sym.join(labels, sym["src"] == labels["node"]).select(
+        F.col("dst").alias("node"), F.col("label")
+    )
+    propagated = (
+        labels.unionByName(neighbor_labels)
+        .groupBy("node")
+        .agg(F.min("label").alias("label"))
+    )
+    # pointer-doubling shortcut: if my label node was itself relabeled
+    # this (or a prior) round, jump straight to ITS label — two hops of
+    # progress per round, O(log diameter) convergence.
+    label_of_label = labels.select(
+        F.col("node").alias("lab_node"), F.col("label").alias("lab_label")
+    )
+    return propagated.join(
+        label_of_label, propagated["label"] == label_of_label["lab_node"], "left"
+    ).select(
+        "node",
+        F.least(F.col("label"), F.coalesce("lab_label", "label")).alias("label"),
+    )
+
+
 def duplicate_clusters(
     nodes: DataFrame,
     edges: DataFrame,
@@ -446,32 +474,7 @@ def duplicate_clusters(
     ).collect()[0]
     label_state = (row0["s"], row0["n"])
     for _ in range(max_iterations if label_state[0] is not None else 0):
-        neighbor_labels = sym.join(
-            labels, sym["src"] == labels["node"]
-        ).select(F.col("dst").alias("node"), F.col("label"))
-        propagated = (
-            labels.unionByName(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        # pointer-doubling shortcut: if my label node was itself relabeled
-        # this (or a prior) round, jump straight to ITS label — two hops of
-        # progress per round, O(log diameter) convergence.
-        label_of_label = labels.select(
-            F.col("node").alias("lab_node"), F.col("label").alias("lab_label")
-        )
-        new_labels = (
-            propagated.join(
-                label_of_label, propagated["label"] == label_of_label["lab_node"], "left"
-            )
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("lab_label", "label")
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        new_labels = _cc_round(sym, labels).localCheckpoint(eager=False)
         row = new_labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
             F.count("*").alias("n"),

@@ -134,6 +134,19 @@ def pagerank_fixedpoint(
 
     Returns (node, rank_fp: long).
     """
+    norm, nodes, ranks, base_fp, bc = _pr_setup(
+        edges, damping_num, damping_den, broadcast_ranks, broadcast_node_limit
+    )
+    for _ in range(n_iter):
+        ranks = _pr_round(norm, nodes, ranks, base_fp, damping_num, damping_den, bc)
+    return ranks
+
+
+def _pr_setup(edges, damping_num, damping_den, broadcast_ranks, broadcast_node_limit):
+    """The pagerank_fixedpoint preamble, shared with the residual
+    certificate: pinned normalized edges (src, dst, weight, out_w), pinned
+    node set, the unpinned initial rank frame, the base mass and the
+    broadcast hint (identity above the node limit)."""
     e = edges.select(
         F.col("src").cast("long"), F.col("dst").cast("long"), F.col("weight").cast("long")
     )
@@ -151,15 +164,13 @@ def pagerank_fixedpoint(
     bc = F.broadcast if broadcast_ranks else (lambda df: df)
     base_fp = ((damping_den - damping_num) * PAGERANK_SCALE) // (damping_den * n)
     ranks = nodes.select("node", F.lit(PAGERANK_SCALE // n).cast("long").alias("rank_fp"))
-    for _ in range(n_iter):
-        ranks = _pr_round(norm, nodes, ranks, base_fp, damping_num, damping_den, bc)
-    return ranks
+    return norm, nodes, ranks, base_fp, bc
 
 
 def _pr_round(norm, nodes, ranks, base_fp, damping_num, damping_den, bc):
     """One exact-integer PageRank round (the pagerank_fixedpoint body),
-    checkpointed — shared with the residual certificate so the replayed
-    dynamics can never drift from the shipped operator's."""
+    checkpointed — the residual certificate calls it too, so it measures
+    the shipped operator's dynamics by construction."""
     contribs = norm.join(
         bc(ranks), norm["src"] == ranks["node"]
     ).select(
@@ -191,31 +202,16 @@ def pagerank_fixedpoint_residuals(
     broadcast_ranks: bool | None = None,
     broadcast_node_limit: int = 5_000_000,
 ) -> DataFrame:
-    """(round, l1_delta_units, converged) per round: replays EXACTLY the
-    pagerank_fixedpoint loop (shared _pr_round body) and emits each
-    round's total integer rank movement sum(|r_k - r_{k-1}|) — exact long
-    sums of longs, so the whole convergence trajectory is hashable.
+    """(round, l1_delta_units, converged) per round: runs the
+    pagerank_fixedpoint loop itself (its _pr_setup and _pr_round) and emits
+    each round's total integer rank movement sum(|r_k - r_{k-1}|) — exact
+    long sums of longs, so the whole convergence trajectory is hashable.
     converged = (l1_delta_units = 0): integer dynamics make the fixpoint
     a literal no-op, not a tolerance."""
-    e = edges.select(
-        F.col("src").cast("long"), F.col("dst").cast("long"), F.col("weight").cast("long")
+    norm, nodes, ranks, base_fp, bc = _pr_setup(
+        edges, damping_num, damping_den, broadcast_ranks, broadcast_node_limit
     )
-    out_w = e.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    norm = e.join(out_w, "src").localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= broadcast_node_limit
-    bc = F.broadcast if broadcast_ranks else (lambda df: df)
-    base_fp = ((damping_den - damping_num) * PAGERANK_SCALE) // (damping_den * n)
-    ranks = nodes.select(
-        "node", F.lit(PAGERANK_SCALE // n).cast("long").alias("rank_fp")
-    ).localCheckpoint(eager=True)
+    ranks = ranks.localCheckpoint(eager=True)
     out = None
     for r in range(1, n_iter + 1):
         nxt = _pr_round(norm, nodes, ranks, base_fp, damping_num, damping_den, bc)
@@ -507,6 +503,29 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     return closed.agg(F.count("*").alias("n_triangles"))
 
 
+def _long_edges(edges: DataFrame) -> DataFrame:
+    """(src, dst) cast to long — the edge preamble of every iterative
+    operator and convergence certificate below. Unpinned."""
+    return edges.select(
+        F.col("src").cast("long").alias("src"),
+        F.col("dst").cast("long").alias("dst"),
+    )
+
+
+def _bfs_hop(frontier: DataFrame, e: DataFrame, *exclude: DataFrame) -> DataFrame:
+    """One BFS hop: the distinct out-neighbors (node) of `frontier` (node)
+    along `e`, minus each `exclude` frame (node) in turn — the per-hop
+    algebra of bfs_layers and bfs_first_noop. Unpinned."""
+    nxt = (
+        frontier.join(e, frontier["node"] == e["src"])
+        .select(F.col("dst").alias("node"))
+        .distinct()
+    )
+    for ex in exclude:
+        nxt = nxt.join(ex, "node", "left_anti")
+    return nxt
+
+
 def bfs_layers(edges: DataFrame, seed: DataFrame, n_hops: int) -> DataFrame:
     """Frontier BFS over a DIRECTED edge list (src, dst) from a seed node
     set: returns (node, dist) for every node within n_hops, dist = length
@@ -522,10 +541,7 @@ def bfs_layers(edges: DataFrame, seed: DataFrame, n_hops: int) -> DataFrame:
     the edge list checkpointed once up front, a 1000-executor run shuffles
     only the frontier; hop count is fixed, so the job count is bounded.
     """
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).localCheckpoint(eager=False)
+    e = _long_edges(edges).localCheckpoint(eager=False)
     visited = seed.select(
         F.col("node").cast("long").alias("node"), F.lit(0).cast("int").alias("dist")
     ).localCheckpoint(eager=True)
@@ -542,24 +558,14 @@ def bfs_layers(edges: DataFrame, seed: DataFrame, n_hops: int) -> DataFrame:
         # layer k: exactly the sequential recurrence, since visited holds
         # layers 0..k-1 at that point. Content is therefore identical to
         # the one-hop-per-frame form; only the pinning cadence changed.
-        nxt1 = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .select("node", F.lit(hop).cast("int").alias("dist"))
+        nxt1 = _bfs_hop(frontier, e, visited.select("node")).select(
+            "node", F.lit(hop).cast("int").alias("dist")
         )
         if hop + 1 <= n_hops:
             nxt1 = nxt1.localCheckpoint(eager=False)
-            f1 = nxt1.select("node")
-            nxt2 = (
-                f1.join(e, f1["node"] == e["src"])
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(visited.select("node"), "node", "left_anti")
-                .join(nxt1.select("node"), "node", "left_anti")
-                .select("node", F.lit(hop + 1).cast("int").alias("dist"))
-            )
+            nxt2 = _bfs_hop(
+                nxt1.select("node"), e, visited.select("node"), nxt1.select("node")
+            ).select("node", F.lit(hop + 1).cast("int").alias("dist"))
             visited = (
                 visited.unionByName(nxt1)
                 .unionByName(nxt2)
@@ -571,6 +577,26 @@ def bfs_layers(edges: DataFrame, seed: DataFrame, n_hops: int) -> DataFrame:
             hop += 1
         frontier = visited.filter(F.col("dist") == hop - 1).select("node")
     return visited
+
+
+def _induced(e: DataFrame, live: DataFrame) -> DataFrame:
+    """The edges of `e` (src, dst) with BOTH endpoints in `live` (node)."""
+    return e.join(live.select(F.col("node").alias("src")), "src", "left_semi").join(
+        live.select(F.col("node").alias("dst")), "dst", "left_semi"
+    )
+
+
+def _kcore_peel(e: DataFrame, live: DataFrame, k: int) -> DataFrame:
+    """One k-core peel round: the nodes of `live` keeping degree >= k in
+    the subgraph `live` induces — the per-round algebra of k_core and
+    kcore_first_noop. Unpinned."""
+    return (
+        _induced(e, live)
+        .groupBy("src")
+        .agg(F.count("*").alias("deg"))
+        .filter(F.col("deg") >= k)
+        .select(F.col("src").alias("node"))
+    )
 
 
 def k_core(edges: DataFrame, k: int, n_rounds: int) -> DataFrame:
@@ -587,10 +613,7 @@ def k_core(edges: DataFrame, k: int, n_rounds: int) -> DataFrame:
     the live-node frame (O(nodes), localCheckpoint-pinned) and one degree
     aggregation — O(E) per round with no corpus-sized collects; the edge
     list is checkpointed once up front."""
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).localCheckpoint(eager=False)
+    e = _long_edges(edges).localCheckpoint(eager=False)
     live = (
         e.select(F.col("src").alias("node"))
         .distinct()
@@ -601,24 +624,60 @@ def k_core(edges: DataFrame, k: int, n_rounds: int) -> DataFrame:
     # both of the next round's semi-joins and the eager pin share one
     # computation — identical per-round algebra, half the barrier jobs.
     for r in range(n_rounds):
-        alive = e.join(
-            live.select(F.col("node").alias("src")), "src", "left_semi"
-        ).join(live.select(F.col("node").alias("dst")), "dst", "left_semi")
         eager = (r % 2 == 1) or (r == n_rounds - 1)
-        live = (
-            alive.groupBy("src")
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=eager)
-        )
-    core = e.join(
-        live.select(F.col("node").alias("src")), "src", "left_semi"
-    ).join(live.select(F.col("node").alias("dst")), "dst", "left_semi")
+        live = _kcore_peel(e, live, k).localCheckpoint(eager=eager)
     return (
-        core.groupBy("src")
+        _induced(e, live)
+        .groupBy("src")
         .agg(F.count("*").cast("long").alias("deg"))
         .select(F.col("src").alias("node"), "deg")
+    )
+
+
+def _lpa_init(e: DataFrame) -> DataFrame:
+    """The initial label frame (node, label): every endpoint of `e`
+    labelled with its own id. Unpinned."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .select("node", F.col("node").alias("label"))
+    )
+
+
+def _lpa_round(e: DataFrame, labels: DataFrame, bc) -> DataFrame:
+    """One synchronous label-propagation round: every node adopts the most
+    frequent label among its in-neighbors (count desc, label asc), keeping
+    its own label when it has none. `bc` wraps the O(nodes) join sides
+    (F.broadcast, or the identity). The per-round algebra of
+    label_propagation and lpa_first_noop. Unpinned."""
+    # ONE exchange per round (r11 opt, guide §2.4): repartition the
+    # vote stream by node, then BOTH aggregations below are
+    # exchange-free — HashPartitioning(node) satisfies the clustering
+    # requirement of groupBy(node, label) (subset key) and of
+    # groupBy(node). The former shape exchanged twice, once per
+    # grouping. Measured 1.2-1.4x per round interleaved at sf0.1;
+    # results identical (partitioning never changes an aggregate).
+    votes = (
+        e.join(bc(labels), e["src"] == labels["node"])
+        .select(F.col("dst").alias("node"), "label")
+        .repartition("node")
+        .groupBy("node", "label")
+        .agg(F.count("*").alias("c"))
+    )
+    # argmax via max_by over the struct order (c DESC, label ASC) ==
+    # maximize (c, -label): a hash aggregation instead of a
+    # row_number window — same shuffle key, no per-partition sort
+    # (r11 opt, guide §2.2). Labels are node ids >= 0, so -label
+    # cannot overflow. The ordering key is unique per (node, label),
+    # so the argmax is total — identical to the window form.
+    argmax = votes.groupBy("node").agg(
+        F.max_by(
+            "label", F.struct(F.col("c"), (-F.col("label")).alias("nl"))
+        ).alias("new_label")
+    )
+    return labels.join(bc(argmax), "node", "left").select(
+        "node", F.coalesce("new_label", "label").alias("label")
     )
 
 
@@ -643,17 +702,8 @@ def label_propagation(
     (source-only) keeps its own label instead of silently dropping out of
     the result after round 1 (r7 advisory). The node universe is
     src ∪ dst, so sink-only nodes are initialized too."""
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).localCheckpoint(eager=False)
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
+    e = _long_edges(edges).localCheckpoint(eager=False)
+    labels = _lpa_init(e).localCheckpoint(eager=True)
     # labels are O(nodes): while they fit a broadcast (~16 bytes/node —
     # the pagerank_fixedpoint threshold), ship them to the edge partitions
     # so the edge list never shuffles inside the loop; above the limit the
@@ -666,40 +716,49 @@ def label_propagation(
     # the barrier jobs.
     for r in range(n_rounds):
         eager = (r % 2 == 1) or (r == n_rounds - 1)
-        # ONE exchange per round (r11 opt, guide §2.4): repartition the
-        # vote stream by node, then BOTH aggregations below are
-        # exchange-free — HashPartitioning(node) satisfies the clustering
-        # requirement of groupBy(node, label) (subset key) and of
-        # groupBy(node). The former shape exchanged twice, once per
-        # grouping. Measured 1.2-1.4x per round interleaved at sf0.1;
-        # results identical (partitioning never changes an aggregate).
-        votes = (
-            e.join(bc(labels), e["src"] == labels["node"])
-            .select(F.col("dst").alias("node"), "label")
-            .repartition("node")
-            .groupBy("node", "label")
-            .agg(F.count("*").alias("c"))
-        )
-        # argmax via max_by over the struct order (c DESC, label ASC) ==
-        # maximize (c, -label): a hash aggregation instead of a
-        # row_number window — same shuffle key, no per-partition sort
-        # (r11 opt, guide §2.2). Labels are node ids >= 0, so -label
-        # cannot overflow. The ordering key is unique per (node, label),
-        # so the argmax is total — identical to the window form.
-        argmax = votes.groupBy("node").agg(
-            F.max_by(
-                "label", F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-            ).alias("new_label")
-        )
-        labels = (
-            labels.join(bc(argmax), "node", "left")
-            .select(
-                "node",
-                F.coalesce("new_label", "label").alias("label"),
-            )
-            .localCheckpoint(eager=eager)
-        )
+        labels = _lpa_round(e, labels, bc).localCheckpoint(eager=eager)
     return labels
+
+
+def _tagged_edges(edges: DataFrame) -> DataFrame:
+    """The dir-tagged edge list (src, dst, dir) of the fused FW-BW cones:
+    the forward edges tagged 'f' plus the reversed edges tagged 'b'.
+    Unpinned."""
+    e = _long_edges(edges)
+    return e.withColumn("dir", F.lit("f")).unionByName(
+        e.select(
+            F.col("dst").alias("src"),
+            F.col("src").alias("dst"),
+            F.lit("b").alias("dir"),
+        )
+    )
+
+
+def _cone_seed(pivot: DataFrame) -> DataFrame:
+    """Hop 0 of both cones: (node, dir) for the pivot in each direction."""
+    return pivot.select(F.col("node").cast("long").alias("node")).crossJoin(
+        pivot.sparkSession.createDataFrame([("f",), ("b",)], "dir string")
+    )
+
+
+def _cone_hop(tagged: DataFrame, fro: DataFrame, vis: DataFrame) -> DataFrame:
+    """One fused fwd+bwd frontier hop: (node, dir) neighbors of `fro` along
+    the dir-tagged edges, minus `vis` — the per-hop algebra of
+    fw_bw_classify and fwbw_first_noop. Unpinned. The output carries fresh
+    exprIds (it otherwise carries tagged's attribute ids into the next
+    hop's join against tagged itself — ambiguous-self-join analyzer
+    error)."""
+    fr = fro.select(F.col("node").alias("f_node"), F.col("dir").alias("f_dir"))
+    return (
+        fr.join(
+            tagged,
+            (fr["f_node"] == tagged["src"]) & (fr["f_dir"] == tagged["dir"]),
+        )
+        .select(F.col("dst").alias("node"), tagged["dir"])
+        .distinct()
+        .join(vis.select("node", "dir"), ["node", "dir"], "left_anti")
+        .select(F.col("node").alias("node"), F.col("dir").alias("dir"))
+    )
 
 
 def fw_bw_classify(edges: DataFrame, pivot: DataFrame, n_rounds: int) -> DataFrame:
@@ -729,52 +788,13 @@ def fw_bw_classify(edges: DataFrame, pivot: DataFrame, n_rounds: int) -> DataFra
     O(nodes), the tagged edge list is checkpointed once) plus two O(nodes)
     membership left-joins at the end — never an O(V^2) reachability
     matrix. Returns (node, cls)."""
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    )
-    tagged = (
-        e.withColumn("dir", F.lit("f"))
-        .unionByName(
-            e.select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                F.lit("b").alias("dir"),
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
+    tagged = _tagged_edges(edges).localCheckpoint(eager=False)
     visited = (
-        pivot.select(F.col("node").cast("long").alias("node"))
-        .crossJoin(
-            pivot.sparkSession.createDataFrame([("f",), ("b",)], "dir string")
-        )
-        .select("node", "dir", F.lit(0).cast("int").alias("h"))
+        _cone_seed(pivot)
+        .withColumn("h", F.lit(0).cast("int"))
         .localCheckpoint(eager=True)
     )
     frontier = visited.select("node", "dir")
-
-    def _cone_hop(fro: DataFrame, vis: DataFrame, hop: int) -> DataFrame:
-        """One fused fwd+bwd frontier hop: neighbors of `fro` along the
-        dir-tagged edges, minus `vis`, with fresh exprIds (the frame
-        otherwise carries tagged's attribute ids into the next hop's join
-        against tagged itself — ambiguous-self-join analyzer error)."""
-        fr = fro.select(F.col("node").alias("f_node"), F.col("dir").alias("f_dir"))
-        return (
-            fr.join(
-                tagged,
-                (fr["f_node"] == tagged["src"]) & (fr["f_dir"] == tagged["dir"]),
-            )
-            .select(F.col("dst").alias("node"), tagged["dir"])
-            .distinct()
-            .join(vis.select("node", "dir"), ["node", "dir"], "left_anti")
-            .select(
-                F.col("node").alias("node"),
-                F.col("dir").alias("dir"),
-                F.lit(hop).cast("int").alias("h"),
-            )
-        )
-
     hop = 1
     while hop <= n_rounds:
         # TWO hops per pinned frame (r12 opt, the bfs_layers fold): hop k
@@ -785,16 +805,18 @@ def fw_bw_classify(edges: DataFrame, pivot: DataFrame, n_rounds: int) -> DataFra
         # here), so content is identical; only the pinning cadence and the
         # emptiness-probe cadence changed (probing every 2nd hop is pure
         # early-exit: rounds past the fixpoint are no-ops either way).
-        nxt1 = _cone_hop(frontier, visited, hop)
+        nxt1 = _cone_hop(tagged, frontier, visited).withColumn(
+            "h", F.lit(hop).cast("int")
+        )
         if hop + 1 <= n_rounds:
             nxt1 = nxt1.localCheckpoint(eager=False)
             nxt2 = _cone_hop(
+                tagged,
                 nxt1.select("node", "dir"),
                 visited.select("node", "dir").unionByName(
                     nxt1.select("node", "dir")
                 ),
-                hop + 1,
-            )
+            ).withColumn("h", F.lit(hop + 1).cast("int"))
             visited = (
                 visited.unionByName(nxt1)
                 .unionByName(nxt2)
@@ -837,7 +859,9 @@ def fw_bw_classify(edges: DataFrame, pivot: DataFrame, n_rounds: int) -> DataFra
 # Fixpoint-budget certification (r8 verdict ask #2). The iterative graph
 # operators above run FIXED round budgets whose oracles unroll the SAME
 # depth — hash-green even if the budget were too small to converge. These
-# tracked loops replay each operator's per-round step and return the
+# tracked loops call each operator's own round function (_bfs_hop,
+# _kcore_peel, _lpa_round, _cone_hop — the certificate checks the shipped
+# algebra by construction) one round per pinned frame, and return the
 # 1-based index of the first NO-OP round (or -1 if none occurred within
 # n_rounds), so a registered budget can be CERTIFIED to strictly exceed
 # the data's convergence depth. Driver traffic per round is one scalar
@@ -849,22 +873,13 @@ def bfs_first_noop(edges: DataFrame, seed: DataFrame, n_rounds: int) -> int:
     """First hop whose BFS frontier is EMPTY (the bfs_layers fixpoint:
     frontiers are monotone-consumed, so one empty hop means every later
     hop is empty too), or -1 if still non-empty after n_rounds."""
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).localCheckpoint(eager=False)
+    e = _long_edges(edges).localCheckpoint(eager=False)
     visited = seed.select(F.col("node").cast("long").alias("node")).localCheckpoint(
         eager=True
     )
     frontier = visited
     for hop in range(1, n_rounds + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
+        nxt = _bfs_hop(frontier, e, visited).localCheckpoint(eager=True)
         if nxt.isEmpty():
             return hop
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)
@@ -876,25 +891,13 @@ def kcore_first_noop(edges: DataFrame, k: int, n_rounds: int) -> int:
     """First peel round whose live-node COUNT equals the previous round's
     (k_core's live sets shrink monotonically, so equal counts imply equal
     sets — a genuine no-op round), or -1."""
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).localCheckpoint(eager=False)
+    e = _long_edges(edges).localCheckpoint(eager=False)
     live = (
         e.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
     )
     prev = live.count()
     for t in range(1, n_rounds + 1):
-        alive = e.join(
-            live.select(F.col("node").alias("src")), "src", "left_semi"
-        ).join(live.select(F.col("node").alias("dst")), "dst", "left_semi")
-        live = (
-            alive.groupBy("src")
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=True)
-        )
+        live = _kcore_peel(e, live, k).localCheckpoint(eager=True)
         cur = live.count()
         if cur == prev:
             return t
@@ -907,40 +910,13 @@ def lpa_first_noop(edges: DataFrame, n_rounds: int) -> int:
     round r-2 (the period-2 limit cycle synchronous LPA provably enters on
     bipartite graphs — Raghavan et al. 2007 §4), or -1. Labels are not
     monotone, so equality is checked per-node (an O(nodes) join counting
-    differing labels), not by count."""
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    ).localCheckpoint(eager=False)
-    labels = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
+    differing labels), not by count. Rounds run unhinted (identity `bc`):
+    label_propagation's broadcast hint picks a join strategy, not labels."""
+    e = _long_edges(edges).localCheckpoint(eager=False)
+    labels = _lpa_init(e).localCheckpoint(eager=True)
     hist: list[DataFrame] = [labels]
     for r in range(1, n_rounds + 1):
-        votes = (
-            e.join(labels, e["src"] == labels["node"])
-            .select(F.col("dst").alias("node"), "label")
-            .repartition("node")
-            .groupBy("node", "label")
-            .agg(F.count("*").alias("c"))
-        )
-        # same max_by argmax (and single vote exchange) as
-        # label_propagation — the replayed dynamics must never drift
-        # from the shipped operator's
-        argmax = votes.groupBy("node").agg(
-            F.max_by(
-                "label", F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-            ).alias("new_label")
-        )
-        labels = (
-            labels.join(argmax, "node", "left")
-            .select("node", F.coalesce("new_label", "label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
+        labels = _lpa_round(e, labels, lambda df: df).localCheckpoint(eager=True)
         hist.append(labels)
         for back in (1, 2):
             if r - back < 0:
@@ -962,44 +938,11 @@ def fwbw_first_noop(edges: DataFrame, pivot: DataFrame, n_rounds: int) -> int:
     """First hop whose fused forward+backward frontier is EMPTY (both
     reachability cones of fw_bw_classify stalled — cones grow
     monotonically, so one empty hop is the fixpoint), or -1."""
-    e = edges.select(
-        F.col("src").cast("long").alias("src"),
-        F.col("dst").cast("long").alias("dst"),
-    )
-    tagged = (
-        e.withColumn("dir", F.lit("f"))
-        .unionByName(
-            e.select(
-                F.col("dst").alias("src"),
-                F.col("src").alias("dst"),
-                F.lit("b").alias("dir"),
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
-    visited = (
-        pivot.select(F.col("node").cast("long").alias("node"))
-        .crossJoin(
-            pivot.sparkSession.createDataFrame([("f",), ("b",)], "dir string")
-        )
-        .localCheckpoint(eager=True)
-    )
+    tagged = _tagged_edges(edges).localCheckpoint(eager=False)
+    visited = _cone_seed(pivot).localCheckpoint(eager=True)
     frontier = visited
     for hop in range(1, n_rounds + 1):
-        fr = frontier.select(
-            F.col("node").alias("f_node"), F.col("dir").alias("f_dir")
-        )
-        nxt = (
-            fr.join(
-                tagged,
-                (fr["f_node"] == tagged["src"]) & (fr["f_dir"] == tagged["dir"]),
-            )
-            .select(F.col("dst").alias("node"), tagged["dir"])
-            .distinct()
-            .join(visited, ["node", "dir"], "left_anti")
-            .select(F.col("node").alias("node"), F.col("dir").alias("dir"))
-            .localCheckpoint(eager=True)
-        )
+        nxt = _cone_hop(tagged, frontier, visited).localCheckpoint(eager=True)
         if nxt.isEmpty():
             return hop
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)

@@ -1799,9 +1799,10 @@ def pagerank_fixpoint_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth-limited snapshot. A cyclic graph would show geometric decay
     and converged=false rows instead; the certificate fails honestly.
 
-    Scale shape: replays the shipped _pr_round body (shared code), one
-    scalar L1 agg per round riding the same checkpoint job — the
-    graph_fixpoint_budget_check discipline."""
+    Scale shape: runs the shipped operator's own _pr_setup and _pr_round
+    (operators/graph.pagerank_fixedpoint_residuals), one scalar L1 agg per
+    round riding the same checkpoint job — the graph_fixpoint_budget_check
+    discipline."""
     from kol_bigdata_realtime_analytics_spark.operators.graph import (
         pagerank_fixedpoint_residuals,
     )
@@ -3855,10 +3856,10 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         """One fused assign+partial-aggregate Arrow pass (r11 opt, guide
         §4.2/§2.2): each batch emits per-cluster (n, elementwise int64
         sum) partials — <= k rows per batch, so the collect is bounded by
-        k x n_batches whatever the corpus size — and the driver folds
-        them with exact integer adds. Identical totals to the former
-        64-column F.sum aggregation: both are exact int64 sums, just
-        associated differently (integer addition is associative)."""
+        k x n_batches whatever the corpus size — folded to k rows by the
+        exact reduce below. Identical totals to the former 64-column F.sum
+        aggregation: both are exact integer sums, just associated
+        differently (integer addition is associative)."""
         C = np.asarray(cents, dtype=np.int64)
         k = len(C)
 
@@ -3884,11 +3885,14 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect (r12 opt, guide §5 / r11 verdict ask #2): the raw partial
     # stream is k rows PER ARROW BATCH, so at 100 TB the former collect was
     # k x n_batches rows of 64-long arrays — multi-GB on the driver. One
-    # hash aggregate (count + 64 element sums) folds them to k rows; int64
+    # hash aggregate (count + 64 element sums) folds them to k rows. The
+    # element sums run in decimal(38,0), which is exact past any int64
+    # total (a non-ANSI long sum would wrap silently), and exact integer
     # addition is associative, so the totals — and the centroids — are
-    # bit-identical to the driver-side fold it replaces.
+    # bit-identical to the arbitrary-precision driver-side fold it replaces.
     _sum_cols = [
-        F.sum(F.element_at("s", i + 1)).alias(f"s{i}") for i in range(_KM_DIM)
+        F.sum(F.element_at("s", i + 1).cast("decimal(38,0)")).alias(f"s{i}")
+        for i in range(_KM_DIM)
     ]
     for _ in range(_KM_ITERS):
         reduced = (
@@ -4351,8 +4355,8 @@ def graph_scc_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whose oracle unrolls the SAME depth — both engines agree at depth N even
 # if N were too small to converge, so hash-green alone never proves the
 # registered result is "the converged answer". This query closes that gap:
-# for each family it replays the iteration with convergence tracking and
-# reports the first NO-OP round (frontier empty / live set stable / labels
+# for each family it runs the operator's own round function with
+# convergence tracking and reports the first NO-OP round (frontier empty / live set stable / labels
 # entered their limit cycle / both cones stalled) plus a converged flag,
 # hash-oracled by the same unrolled CTEs computing the same round-over-
 # round comparisons.
@@ -4504,12 +4508,14 @@ def graph_fixpoint_budget_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth-limited snapshot (a too-small budget would be hash-green against
     its unrolled oracle yet wrong as "the" BFS closure / k-core / SCC).
 
-    Scale shape: replays the operators' own loops (see operators/graph
-    bfs_first_noop/kcore_first_noop/lpa_first_noop/fwbw_first_noop) with
-    one scalar count or emptiness probe per round — frontier/live/label
-    frames stay O(nodes), edge lists are checkpointed once per family,
-    driver traffic is one long per round. Certification cost is the same
-    O(rounds) join work the certified queries themselves do."""
+    Scale shape: operators/graph bfs_first_noop/kcore_first_noop/
+    lpa_first_noop/fwbw_first_noop call the operators' own round functions
+    (_bfs_hop, _kcore_peel, _lpa_round, _cone_hop), one round per pinned
+    frame, with one scalar count or emptiness probe per round — so the
+    certified dynamics are the shipped ones by construction. Frontier/
+    live/label frames stay O(nodes), edge lists are checkpointed once per
+    family, driver traffic is one long per round. Certification cost is
+    the same O(rounds) join work the certified queries themselves do."""
     from kol_bigdata_realtime_analytics_spark.operators.graph import (
         bfs_first_noop,
         fwbw_first_noop,

@@ -35,6 +35,7 @@ from kol_bigdata_realtime_analytics_spark.functions.text import (
     token_count,
 )
 from kol_bigdata_realtime_analytics_spark.operators.dedup import (
+    _cc_round,
     exact_dedup_fingerprints,
     jaccard_pairs,
     minhash_lsh_candidates,
@@ -290,13 +291,14 @@ l{r} AS MATERIALIZED (
 @register("dedup_clusters_fixpoint_check", oracle=_cc_fixpoint_oracle())
 def dedup_clusters_fixpoint_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Convergence certificate for dedup_clusters' pointer-doubling
-    min-label propagation: replay the loop 6 rounds (= _CC_FIX_ROUNDS)
-    over the same Jaccard>=0.5 edge set and emit each round's changed-
-    label count — the first n_changed = 0 row, under the driver hash,
-    proves the operator's internal (sum, count) termination probe fires
-    strictly inside the budget, and the 338 -> 34 -> 0 decay shape IS
-    the O(log diameter) doubling signature. Both engines replay the
-    identical round algebra (min over own/neighbor labels, then the
+    min-label propagation: run the operator's own round function
+    (operators/dedup._cc_round, which its distributed loop calls) 6 rounds
+    (= _CC_FIX_ROUNDS) over the same Jaccard>=0.5 edge set and emit each
+    round's changed-label count — the first n_changed = 0 row, under the
+    driver hash, proves the operator's internal (sum, count) termination
+    probe fires strictly inside the budget, and the 338 -> 34 -> 0 decay
+    shape IS the O(log diameter) doubling signature. The oracle unrolls
+    the identical round algebra (min over own/neighbor labels, then the
     label-of-label shortcut jump), so every intermediate label table is
     hash-exact.
 
@@ -323,25 +325,7 @@ def dedup_clusters_fixpoint_check(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     out = None
     for r in range(1, _CC_FIX_ROUNDS + 1):
-        neighbor = sym.join(labels, sym["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), F.col("label")
-        )
-        propagated = (
-            labels.unionByName(neighbor).groupBy("node").agg(F.min("label").alias("label"))
-        )
-        lol = labels.select(
-            F.col("node").alias("lab_node"), F.col("label").alias("lab_label")
-        )
-        nxt = (
-            propagated.join(lol, propagated["label"] == lol["lab_node"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce("lab_label", "label")).alias(
-                    "label"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
+        nxt = _cc_round(sym, labels).localCheckpoint(eager=True)
         chg = (
             nxt.join(
                 labels.select(

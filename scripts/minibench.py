@@ -1,8 +1,11 @@
 #!/usr/bin/env python
-"""Isolated per-query timing for optimization work (guide §1): runs the
-named queries through the same noop-sink methodology as bench.py (forced
-cold first run for the cache-backed queries, then warm runs) and prints a
-small table. Usage:
+"""Isolated per-query timing and Spark job counts for optimization work
+(guide §1): runs the named queries through the same noop-sink methodology
+as bench.py (forced cold first run for the cache-backed queries, then warm
+runs) and prints a calibration line, then per query the Spark jobs and
+wall seconds of each run. Job counts are the evidence channel for
+iterative queries whose per-round work lives in checkpoint jobs that the
+final explain() cannot show. Usage:
     python scripts/minibench.py q1 q2 ...  [env: SPARK_GRAFT_SF_DIR, N_RUNS]
 """
 
@@ -38,19 +41,31 @@ def main() -> None:
         ).collect()
         cal.append(round(time.perf_counter() - t0, 3))
     print(f"calibration: {cal}", flush=True)
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job() -> int:
+        # The tracker fills from the listener bus, so drain it first or a
+        # run's last jobs land in the next run's count. Job ids are
+        # sequential and every job here runs without a job group; the
+        # tracker keeps only the newest spark.ui.retainedJobs ids, so count
+        # by the newest id, not by the length of the list.
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
     for name in names:
         q = REGISTRY[name]
         if name in _FORCED_COLD:
             artifacts.clear()
-        runs = []
+        jobs, walls = [], []
         for i in range(n_runs):
             spark.sparkContext.setJobDescription(f"{name} run{i}")
-            t0 = time.perf_counter()
+            j0, t0 = last_job(), time.perf_counter()
             df = q.fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
+            walls.append(round(time.perf_counter() - t0, 3))
+            jobs.append(last_job() - j0)
         spark.sparkContext.setJobDescription(None)
-        print(f"{name:42s} {runs}", flush=True)
+        print(f"{name:42s} jobs={jobs} wall={walls}", flush=True)
 
 
 if __name__ == "__main__":

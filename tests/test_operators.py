@@ -1465,6 +1465,25 @@ def test_duplicate_clusters_phantom_dst_nodes(spark):
     assert rows[30]["is_canonical"] == 1
 
 
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_duplicate_clusters_transitive_closure,
+        test_duplicate_clusters_long_chain_converges,
+        test_duplicate_clusters_dedups_duplicate_node_ids,
+        test_duplicate_clusters_rejects_null_cast_ids,
+        test_duplicate_clusters_phantom_dst_nodes,
+    ],
+    ids=lambda case: case.__name__.removeprefix("test_duplicate_clusters_"),
+)
+def test_duplicate_clusters_distributed_loop(spark, cc_distributed, case):
+    """Each duplicate_clusters test above, run on the distributed
+    min-label loop (the branch an edge set past the driver bound takes)
+    instead of the driver union-find its small inputs otherwise select."""
+    case(spark)
+    assert not cc_distributed, "the driver union-find branch ran"
+
+
 def test_cooccurrence_with_audit_shares_mode(spark):
     """with_audit=True returns the oversized_baskets complement built with
     the SAME distinct mode as the guard — the audit can't diverge (r5

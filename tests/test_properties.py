@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -169,6 +169,13 @@ def test_duplicate_clusters_matches_union_find(spark, edges, n_nodes):
         for mnode in members:
             expected[mnode] = (lo, len(members), int(mnode == lo))
     assert got == expected
+
+
+def test_duplicate_clusters_distributed_matches_union_find(spark, cc_distributed):
+    """The union-find property above, on the distributed min-label loop
+    instead of the driver union-find its small graphs otherwise select."""
+    test_duplicate_clusters_matches_union_find(spark)
+    assert not cc_distributed, "the driver union-find branch ran"
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
@@ -479,6 +486,69 @@ def test_pagerank_fixedpoint_matches_integer_model(spark, edges, n_iter):
             c[d] = c.get(d, 0) + (ranks[s] * w) // out_w[s]
         ranks = {v: base_fp + num * c.get(v, 0) // den for v in nodes}
     assert got == ranks
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@example(edges=[(0, 1), (1, 0), (2, 3)], root=10, k=1, n_rounds=3)
+@example(edges=[(0, 1), (1, 2), (2, 0), (3, 4), (4, 4)], root=0, k=1, n_rounds=4)
+@example(edges=[(0, 1), (1, 2), (2, 3)], root=3, k=1, n_rounds=5)  # bwd cone deeper
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 9), st.integers(0, 9)), min_size=0, max_size=24
+    ),
+    root=st.integers(0, 11),  # 10 and 11 are on no edge
+    k=st.integers(1, 3),
+    n_rounds=st.integers(1, 6),
+)
+def test_first_noop_certificates_match_python_model(spark, edges, root, k, n_rounds):
+    """bfs_first_noop, kcore_first_noop and fwbw_first_noop return the
+    round a pure-Python run of the same dynamics first makes no progress
+    (first empty frontier / first unchanged live count / first empty
+    fused frontier), or -1 when that lies past the budget — on random
+    small directed graphs: disconnected ones, self loops, duplicate
+    edges, and seeds/pivots on no edge."""
+    from collections import Counter
+
+    from kol_bigdata_realtime_analytics_spark.operators.graph import (
+        bfs_first_noop,
+        fwbw_first_noop,
+        kcore_first_noop,
+    )
+
+    def first_empty(frontier, step):
+        visited = set(frontier)
+        for hop in range(1, n_rounds + 1):
+            frontier = step(frontier) - visited
+            if not frontier:
+                return hop
+            visited |= frontier
+        return -1
+
+    def bfs_step(frontier):
+        return {d for s, d in edges if s in frontier}
+
+    def cone_step(frontier):
+        return {(d, "f") for s, d in edges if (s, "f") in frontier} | {
+            (s, "b") for s, d in edges if (d, "b") in frontier
+        }
+
+    def kcore_model():
+        live = {s for s, _ in edges}
+        for t in range(1, n_rounds + 1):
+            deg = Counter(s for s, d in edges if s in live and d in live)
+            nxt = {v for v, c in deg.items() if c >= k}
+            if len(nxt) == len(live):
+                return t
+            live = nxt
+        return -1
+
+    e_df = spark.createDataFrame(edges, "src long, dst long")
+    seed = spark.createDataFrame([(root,)], "node long")
+    assert bfs_first_noop(e_df, seed, n_rounds) == first_empty({root}, bfs_step)
+    assert kcore_first_noop(e_df, k, n_rounds) == kcore_model()
+    assert fwbw_first_noop(e_df, seed, n_rounds) == first_empty(
+        {(root, "f"), (root, "b")}, cone_step
+    )
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
