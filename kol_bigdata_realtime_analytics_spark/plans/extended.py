@@ -15,6 +15,7 @@ from kol_bigdata_realtime_analytics_spark.plans.registry import (
     dsum,
     dsum_raw,
     hash52,
+    raw_schema,
     register,
     sql_dsum,
     sql_dsum_raw,
@@ -457,8 +458,7 @@ WHERE g.i <= enc.enc_code
 @register("sql_platform_stats_probe", oracle=_SQL_PROBE)
 def sql_platform_stats_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encoding probe for the sql_platform_stats family (see _SQL_PROBE)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_dt = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)
+    raw_dt = {f.name: f.dataType.simpleString() for f in raw_schema(spark, sf_dir, "events")}
     v = {"double": 0, "float": 1}.get(raw_dt.get("value"), 2)
     code = 100 + v
     ev = table(spark, sf_dir, "events")  # the normalized path real queries use

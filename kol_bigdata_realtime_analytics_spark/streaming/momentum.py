@@ -208,6 +208,20 @@ def _momentum_fn(
         )
 
 
+def _prepared(
+    events: DataFrame, ts_col: str, key_col: str, value_col: str, watermark: str
+) -> DataFrame:
+    """The (ts, key, value) input of both streaming forms. value is put on
+    the DECIMAL(18,6) grid momentum_batch sums on: a float32-encoded file
+    widens to doubles with digits past the sixth decimal, which the batch's
+    exact sum drops and a float fold would keep."""
+    return events.select(
+        F.col(ts_col).alias("ts"),
+        F.col(key_col).alias("key"),
+        F.col(value_col).cast("decimal(18,6)").cast("double").alias("value"),
+    ).withWatermark("ts", watermark)
+
+
 def momentum_stream(
     events: DataFrame,
     ts_col: str = "ts",
@@ -216,9 +230,7 @@ def momentum_stream(
     watermark: str = "5 minutes",
 ) -> DataFrame:
     """Streaming form: watermarked, keyed, O(1)-state-per-key momentum op."""
-    prepared = events.select(
-        F.col(ts_col).alias("ts"), F.col(key_col).alias("key"), F.col(value_col).alias("value")
-    ).withWatermark("ts", watermark)
+    prepared = _prepared(events, ts_col, key_col, value_col, watermark)
     return prepared.groupBy("key").applyInPandasWithState(
         _momentum_fn,
         outputStructType=OUTPUT_SCHEMA,
@@ -358,9 +370,7 @@ def momentum_tws(
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     """
     proc = _MomentumProcessor()
-    prepared = events.select(
-        F.col(ts_col).alias("ts"), F.col(key_col).alias("key"), F.col(value_col).alias("value")
-    ).withWatermark("ts", watermark)
+    prepared = _prepared(events, ts_col, key_col, value_col, watermark)
     return prepared.groupBy("key").transformWithStateInPandas(
         statefulProcessor=proc,
         outputStructType=OUTPUT_SCHEMA,

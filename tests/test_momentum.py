@@ -35,6 +35,19 @@ SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value do
 
 
 def test_stream_momentum_equals_batch(spark, tmp_path, event_rows):
+    _assert_stream_equals_batch(spark, tmp_path, event_rows)
+
+
+def test_stream_momentum_equals_batch_on_float32_values(spark, tmp_path, event_rows):
+    """Values as a float32-encoded file widens them to double, with digits
+    past the sixth decimal that the batch's DECIMAL(18,6) sum drops."""
+    import numpy as np
+
+    rows = [r[:4] + (float(np.float32(r[4] + 0.37)),) for r in event_rows]
+    _assert_stream_equals_batch(spark, tmp_path, rows)
+
+
+def _assert_stream_equals_batch(spark, tmp_path, event_rows):
     df = spark.createDataFrame(event_rows, SCHEMA)
     src = str(tmp_path / "mom_src")
     df.write.mode("overwrite").parquet(src)

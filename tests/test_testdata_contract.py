@@ -8,18 +8,25 @@ events rows in every encoding the contract has ever shipped — int64-nanos,
 timestamp[us], timestamp[ns] — and asserts ``table()`` and
 ``events_stream_source()`` return the identical TimestampType instants for
 all of them, so encoding drift can never again be a whole-round outage.
+The resolver tests at the end fence the schema memo behind ``table()``.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from kol_bigdata_realtime_analytics_spark.plans import registry
 from kol_bigdata_realtime_analytics_spark.plans.registry import (
     events_stream_source,
+    raw_schema,
     table,
 )
 
@@ -46,27 +53,29 @@ ENCODINGS = {
 }
 
 
-def _write_events(dir_path: str, encoding: str) -> None:
+def _write_events(
+    dir_path: str, encoding: str, value_type=pa.float64(), epoch_us=_EPOCH_US
+) -> None:
     ts_type = ENCODINGS[encoding]
     if encoding == "int64_nanos":
-        ts = pa.array([us * 1000 for us in _EPOCH_US], type=ts_type)
+        ts = pa.array([us * 1000 for us in epoch_us], type=ts_type)
     elif encoding == "int64_micros":
-        ts = pa.array(_EPOCH_US, type=ts_type)
+        ts = pa.array(epoch_us, type=ts_type)
     elif encoding == "int64_millis":
-        ts = pa.array([us // 1000 for us in _EPOCH_US], type=ts_type)
+        ts = pa.array([us // 1000 for us in epoch_us], type=ts_type)
     elif encoding == "int64_seconds":
-        ts = pa.array([us // 1_000_000 for us in _EPOCH_US], type=ts_type)
+        ts = pa.array([us // 1_000_000 for us in epoch_us], type=ts_type)
     elif encoding == "timestamp_us":
-        ts = pa.array(_EPOCH_US, type=pa.int64()).cast(ts_type)
+        ts = pa.array(epoch_us, type=pa.int64()).cast(ts_type)
     else:  # timestamp_ns
-        ts = pa.array([us * 1000 for us in _EPOCH_US], type=pa.int64()).cast(ts_type)
+        ts = pa.array([us * 1000 for us in epoch_us], type=pa.int64()).cast(ts_type)
     tbl = pa.table(
         {
             "event_id": pa.array(_ROWS["event_id"], type=pa.int64()),
             "ts": ts,
             "user_id": pa.array(_ROWS["user_id"], type=pa.int64()),
             "event_type": pa.array(_ROWS["event_type"], type=pa.string()),
-            "value": pa.array(_ROWS["value"], type=pa.float64()),
+            "value": pa.array(_ROWS["value"], type=value_type),
             "props": pa.array(_ROWS["props"], type=pa.string()),
         }
     )
@@ -273,3 +282,108 @@ def test_supplier_offset_keeps_node_domains_disjoint(spark, sf):
     # the observed bound so a regenerated TESTDATA that breaks the encoding
     # fails here, not as a silent graph-result divergence
     assert hi_supp + 10_000_000 < 2**62
+
+
+# ---------------------------------------------------------------------------
+# The scan resolver (registry.raw_schema): each schema is inferred once per
+# session and data identity, a regenerated file re-resolves, and a memo hit
+# still pins the session conf.
+# ---------------------------------------------------------------------------
+
+
+def _jobs_in(spark, fn):
+    """(fn(), number of Spark jobs fn launched), counted by a fresh job group."""
+    sc = spark.sparkContext
+    group = f"scan-resolver-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the tracker fills from the listener bus: drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _instants(df) -> list[int]:
+    return [r[0] for r in df.orderBy("event_id").select(F.unix_micros("ts")).collect()]
+
+
+@pytest.mark.parametrize("name", ["events", "lineitem"])
+def test_repeat_table_call_runs_no_spark_job(spark, sf_small, tmp_path, name):
+    """The first table() on a fresh file infers its schema with a Spark job;
+    a repeat call reads with the resolved schema and launches none."""
+    shutil.copy(os.path.join(sf_small, f"{name}.parquet"), tmp_path / f"{name}.parquet")
+    d = str(tmp_path)
+    first, first_jobs = _jobs_in(spark, lambda: table(spark, d, name))
+    again, again_jobs = _jobs_in(spark, lambda: table(spark, d, name))
+    assert first_jobs >= 1
+    assert again_jobs == 0
+    assert first.dtypes == again.dtypes
+    assert sorted(map(tuple, first.collect())) == sorted(map(tuple, again.collect()))
+
+
+def test_regenerated_file_re_resolves(spark, tmp_path):
+    """events.parquet rewritten at the same path with another encoding:
+    table() and events_stream_source() follow the new file, never the
+    schema resolved for the old one."""
+    d = str(tmp_path)
+    shifted = [us + 3_600_000_000 for us in _EPOCH_US]
+    cases = [
+        (pa.float32(), "int64_nanos", _EPOCH_US, {"value": "float", "ts": "bigint"}),
+        (pa.float64(), "timestamp_us", shifted, {"value": "double", "ts": "timestamp_ntz"}),
+    ]
+    normalized = {"value": "double", "ts": "timestamp"}
+    for i, (value_type, ts_enc, epoch_us, raw) in enumerate(cases):
+        _write_events(d, ts_enc, value_type, epoch_us)
+        raw_dt = {f.name: f.dataType.simpleString() for f in raw_schema(spark, d, "events")}
+        assert {c: raw_dt[c] for c in raw} == raw
+
+        df = table(spark, d, "events")
+        assert {c: t for c, t in df.dtypes if c in raw} == normalized
+        assert _instants(df) == epoch_us
+
+        stream = events_stream_source(spark, d)
+        assert {c: t for c, t in stream.dtypes if c in raw} == normalized
+        name = f"contract_regen_{i}_mem"
+        q = (
+            stream.select("event_id", F.unix_micros("ts").alias("us"))
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        assert [r[0] for r in spark.table(name).orderBy("event_id").select("us").collect()] == epoch_us
+    assert all(isinstance(v, StructType) for v in registry._SCHEMAS.values())
+
+
+@pytest.mark.parametrize("encoding", ["timestamp_us", "timestamp_ns"])
+def test_memo_hit_still_pins_the_session(spark, tmp_path, encoding):
+    """The driver's bare session relies on table() setting UTC and
+    nanosAsLong on every call: a memo hit after the caller changed both
+    must return the same UTC instants as the first call. timestamp_us
+    catches a missing UTC pin (the NTZ cast reads wall time in the session
+    zone); on a hit the supplied LongType schema reads TIMESTAMP(NANOS)
+    whatever nanosAsLong says, so timestamp_ns checks the instants only."""
+    d = str(tmp_path)
+    _write_events(d, encoding)
+    keys = ("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        first = _instants(table(spark, d, "events"))
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+        again, jobs = _jobs_in(spark, lambda: table(spark, d, "events"))
+        assert jobs == 0  # a memo hit
+        assert _instants(again) == first == _EPOCH_US
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
