@@ -199,6 +199,36 @@ def _minhash_banded(
     ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
+def _bucket_pairs(
+    banded: DataFrame, keys: list[str], member: Column, max_bucket: int
+) -> DataFrame:
+    """Every in-bucket pair of a banded frame, as one struct column `p`
+    with fields a < b (in sorted member order). ONE groupBy on the bucket
+    key instead of a self-join: a self-join would re-execute the whole
+    signature lineage for both sides (2x the CPU) and shuffle the corpus
+    twice; here signatures are computed once and the only wide exchange
+    moves (bucket key, member) rows. Pairs generate inside each sorted
+    bucket list, and only for buckets of 2..max_bucket members — the
+    guard sits between the aggregation and the O(n²) expansion, so a hot
+    bucket never explodes."""
+    ds = F.array_sort(F.collect_list(member))
+    pairs = F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), F.size(F.col("ds")) - 2),
+            lambda i: F.transform(
+                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
+                lambda x: F.struct(F.get(F.col("ds"), i).alias("a"), x.alias("b")),
+            ),
+        )
+    )
+    return (
+        banded.groupBy(*keys)
+        .agg(ds.alias("ds"))
+        .filter((F.size("ds") > 1) & (F.size("ds") <= max_bucket))
+        .select(F.explode(pairs).alias("p"))
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str,
@@ -227,29 +257,9 @@ def minhash_lsh_candidates(
     was skipped and how big it was.
     """
     banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n)
-    # Pairs via ONE groupBy on the bucket key instead of a self-join: a
-    # self-join would re-execute the whole shingle+signature lineage for both
-    # sides (2x the CPU) and shuffle the corpus twice. Here signatures are
-    # computed once, the only wide exchange moves (band, bucket, doc) triples,
-    # and pairs are generated inside each bucket list — bounded by max_bucket.
-    ds = F.array_sort(F.collect_list("doc"))
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("ds")) - 2),
-            lambda i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda d: F.struct(
-                    F.get(F.col("ds"), i).alias("id_a"), d.alias("id_b")
-                ),
-            ),
-        )
-    )
     return (
-        banded.groupBy("band", "bucket")
-        .agg(ds.alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= max_bucket))
-        .select(F.explode(pairs).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        _bucket_pairs(banded, ["band", "bucket"], F.col("doc"), max_bucket)
+        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
         .distinct()
     )
 
@@ -779,24 +789,10 @@ def simhash_neardup_pairs(
     simhash_skipped_buckets reports what was skipped.
     """
     banded = _simhash_banded(df, text_col, id_col, sig=sig)
-    # one groupBy on the chunk key instead of a self-join (which would run
-    # the whole simhash lineage twice and shuffle it twice); pairs generate
-    # inside each bucket list — see minhash_lsh_candidates for the rationale
-    ds = F.array_sort(F.collect_list(F.struct("doc", "sim")))
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("ds")) - 2),
-            lambda i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda x: F.struct(F.get(F.col("ds"), i).alias("a"), x.alias("b")),
-            ),
-        )
-    )
     return (
-        banded.groupBy("chunk_idx", "chunk")
-        .agg(ds.alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= max_bucket))
-        .select(F.explode(pairs).alias("p"))
+        _bucket_pairs(
+            banded, ["chunk_idx", "chunk"], F.struct("doc", "sim"), max_bucket
+        )
         .select(
             F.col("p.a.doc").alias("id_a"),
             F.col("p.b.doc").alias("id_b"),
@@ -972,24 +968,9 @@ def minhash_lsh_candidates_portable(
     banded = minhash_portable_banded(
         df, text_col, id_col, num_hashes, bands, shingle_n
     )
-    ds = F.array_sort(F.collect_list("doc"))
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("ds")) - 2),
-            lambda i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda d: F.struct(
-                    F.get(F.col("ds"), i).alias("id_a"), d.alias("id_b")
-                ),
-            ),
-        )
-    )
     return (
-        banded.groupBy("band", "bucket")
-        .agg(ds.alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= max_bucket))
-        .select(F.explode(pairs).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        _bucket_pairs(banded, ["band", "bucket"], F.col("doc"), max_bucket)
+        .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
         .distinct()
     )
 
@@ -1057,21 +1038,10 @@ def simhash_neardup_pairs_portable(
     banded = sh.select(
         "doc", "sim", F.posexplode(chunks).alias("chunk_idx", "chunk")
     )
-    ds = F.array_sort(F.collect_list(F.struct("doc", "sim")))
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size(F.col("ds")) - 2),
-            lambda i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda x: F.struct(F.get(F.col("ds"), i).alias("a"), x.alias("b")),
-            ),
-        )
-    )
     return (
-        banded.groupBy("chunk_idx", "chunk")
-        .agg(ds.alias("ds"))
-        .filter((F.size("ds") > 1) & (F.size("ds") <= max_bucket))
-        .select(F.explode(pairs).alias("p"))
+        _bucket_pairs(
+            banded, ["chunk_idx", "chunk"], F.struct("doc", "sim"), max_bucket
+        )
         .select(
             F.col("p.a.doc").alias("id_a"),
             F.col("p.b.doc").alias("id_b"),

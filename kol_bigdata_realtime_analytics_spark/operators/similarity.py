@@ -67,6 +67,21 @@ def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
     return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
 
 
+def rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of a scored (q_id, c_id, cosine) frame: the one
+    rank rule of the similarity family. Ranks by cosine DESC, then c_id
+    ASC, so equal (rounded) cosines resolve to the lower id — the
+    tie-break every DuckDB oracle mirrors with `ORDER BY cosine DESC,
+    c_id ASC`. Returns (q_id, c_id, cosine, rank) with rank a 1-based
+    BIGINT; a query with fewer than k candidates keeps all of them."""
+    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "c_id", "cosine", F.col("rank").cast("long").alias("rank"))
+    )
+
+
 def brute_force_topk(
     candidates: DataFrame,
     queries: DataFrame,
@@ -94,12 +109,7 @@ def brute_force_topk(
             F.round(cosine(F.col("q_vec"), F.col("c_vec"), dim), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return rank_topk(scored, k)
 
 
 def cosine_neardup_pairs(
@@ -368,12 +378,7 @@ def lsh_topk(
         .groupBy("q_id", "c_id")
         .agg(F.first("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return rank_topk(scored, k)
 
 
 def lsh_bucket_sql(vec_expr: str, dim: int, n_planes: int = 8, seed: int = 42) -> str:
@@ -617,12 +622,7 @@ def ivf_topk(
         .groupBy("q_id", "c_id")
         .agg(F.first("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return rank_topk(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -713,12 +713,7 @@ def int8_topk_matmul(
         .filter((F.col("c_id") != F.col("q_id")) & ~F.isnan("cos_raw"))
         .select("q_id", "c_id", F.round("cos_raw", 6).alias("cosine"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return rank_topk(scored, k)
 
 
 def pq_codebooks(
@@ -1012,12 +1007,7 @@ def pq_adc_topk(
         .filter((F.col("c_id") != F.col("q_id")) & ~F.isnan("cos_raw"))
         .select("q_id", "c_id", F.round("cos_raw", 6).alias("cosine"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return rank_topk(scored, k)
 
 
 def ivfpq_topk(
@@ -1192,12 +1182,7 @@ def ivfpq_topk(
         .filter(~F.isnan("cos_raw"))
         .select("q_id", "c_id", F.round("cos_raw", 6).alias("cosine"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return rank_topk(scored, k)
 
 
 def pca_fit(

@@ -547,28 +547,23 @@ def _np8_sum(terms: list[str]) -> str:
     )
 
 
-def _pq_offline_artifact(sf_dir: str):
-    """(books, cent_n2, q_ids, qn, lut) — the exact pq_adc_topk model
-    payload, refit Spark-free: same numpy code over the same
-    xxhash64-ordered sample (hash_sample_offline), query vectors loaded by
-    id from parquet. Same process + same numpy ⇒ identical floats."""
+def _adc_offline_queries(sf_dir: str, books, rot=None):
+    """(q_ids, Qv, qn, lut) for the vec_id < 5 query page every ADC
+    oracle scores, Spark-free: the query vectors loaded by id from
+    parquet, fold-projected by `rot` when given (OPQ's rotated space),
+    their norms, and the (query, subspace, centroid) dot lookup table
+    against `books`. Same process + same numpy => the engine's floats."""
     import os
 
     import duckdb
     import numpy as np
 
     from kol_bigdata_realtime_analytics_spark.operators.similarity import (
-        hash_sample_offline,
-        pq_codebooks,
+        fold_project,
     )
 
-    books = pq_codebooks(
-        None, m=8, ksub=16, sample=hash_sample_offline(sf_dir),
-        cache_key=("offline", sf_dir),
-    )
     B = np.array(books, dtype="float64")
     m, k_eff, dsub = B.shape
-    cent_n2 = (B * B).sum(axis=2)  # (m, k_eff)
     path = f"{sf_dir}/embeddings.parquet"
     if os.path.isdir(path):
         path = f"{path}/**/*.parquet"
@@ -578,18 +573,24 @@ def _pq_offline_artifact(sf_dir: str):
     ).fetchall()
     q_ids = [int(r[0]) for r in rows]
     Qv = np.array([r[1] for r in rows], dtype="float64")
+    if rot is not None:
+        Qv = fold_project(Qv, rot)
     qn = np.sqrt((Qv * Qv).sum(axis=1))
     lut = np.empty((len(q_ids), m, k_eff), dtype="float64")
     for s in range(m):
         lut[:, s, :] = Qv[:, s * dsub : (s + 1) * dsub] @ B[s].T
-    return books, cent_n2, q_ids, qn, lut
+    return q_ids, Qv, qn, lut
 
 
-def _pq_oracle(sf_dir: str) -> str:
-    import numpy as np  # noqa: F401 — artifact arrays
+def _adc_values_sql(books, q_ids, qn, lut) -> str:
+    """The cb / lut / qn VALUES CTEs of an ADC oracle (no leading or
+    trailing comma): codebook rows, per-query LUT rows with each
+    centroid's squared norm, and the query norms, as float literals."""
+    import numpy as np
 
-    books, cent_n2, q_ids, qn, lut = _pq_offline_artifact(sf_dir)
-    m, k_eff, dsub = len(books), len(books[0]), len(books[0][0])
+    B = np.array(books, dtype="float64")
+    m, k_eff, dsub = B.shape
+    cent_n2 = (B * B).sum(axis=2)  # (m, k_eff)
     cb_rows = ", ".join(
         f"({s}, {k}, {', '.join(repr(float(x)) for x in books[s][k])})"
         for s in range(m)
@@ -606,24 +607,65 @@ def _pq_oracle(sf_dir: str) -> str:
     qn_rows = ", ".join(
         f"({q_ids[qi]}, {repr(float(qn[qi]))})" for qi in range(len(q_ids))
     )
+    return f"""cb(s, k, {cb_cols}) AS (VALUES {cb_rows}),
+    lut(q_id, s, k, v, n2) AS (VALUES {lut_rows}),
+    qn(q_id, qn) AS (VALUES {qn_rows})"""
+
+
+def _adc_sums_sql(m: int, alias: str) -> tuple[str, str, str]:
+    """(vcase, dots, rn2): the pivot of each candidate's m LUT terms
+    (v{s}) and centroid squared norms (n{s}), joined on the code table
+    aliased `alias`, and their numpy-pairwise sums (_np8_sum)."""
+    vcase = ", ".join(
+        f"MAX(CASE WHEN {alias}.s = {s} THEN l.v END) AS v{s},\n         "
+        f"MAX(CASE WHEN {alias}.s = {s} THEN l.n2 END) AS n{s}"
+        for s in range(m)
+    )
+    return (
+        vcase,
+        _np8_sum([f"v{s}" for s in range(m)]),
+        _np8_sum([f"n{s}" for s in range(m)]),
+    )
+
+
+#: the rank tail every ADC oracle ends with: per query, top-3 by cosine
+#: with c_id tie-breaks (operators.similarity.rank_topk), NaN cosines
+#: (zero-norm reconstructions) dropped first
+_ADC_RANK_SQL = """
+    SELECT CAST(q_id AS BIGINT) AS q_id, c_id, cosine, rank FROM (
+      SELECT q_id, c_id, cosine,
+             CAST(ROW_NUMBER() OVER (PARTITION BY q_id
+                   ORDER BY cosine DESC, c_id ASC) AS BIGINT) AS rank
+      FROM scored WHERE NOT isnan(cosine)) WHERE rank <= 3
+    """
+
+
+def _pq_oracle(sf_dir: str) -> str:
+    """PQ-ADC oracle: refit the exact pq_adc_topk codebooks Spark-free
+    (same numpy code over the same xxhash64-ordered sample,
+    hash_sample_offline) and embed them with the query LUTs as
+    literals."""
+    from kol_bigdata_realtime_analytics_spark.operators.similarity import (
+        hash_sample_offline,
+        pq_codebooks,
+    )
+
+    books = pq_codebooks(
+        None, m=8, ksub=16, sample=hash_sample_offline(sf_dir),
+        cache_key=("offline", sf_dir),
+    )
+    q_ids, _, qn, lut = _adc_offline_queries(sf_dir, books)
+    m, dsub = len(books), len(books[0][0])
     d2 = _np8_sum(
         [
             f"(vec[s * {dsub} + {i}] - c{i}) * (vec[s * {dsub} + {i}] - c{i})"
             for i in range(1, dsub + 1)
         ]
     )
-    dots = _np8_sum([f"v{s}" for s in range(m)])
-    rn2 = _np8_sum([f"n{s}" for s in range(m)])
-    vcase = ", ".join(
-        f"MAX(CASE WHEN c.s = {s} THEN l.v END) AS v{s},\n         "
-        f"MAX(CASE WHEN c.s = {s} THEN l.n2 END) AS n{s}"
-        for s in range(m)
-    )
+    vcase, dots, rn2 = _adc_sums_sql(m, "c")
     return f"""
     WITH base0 AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-    cb(s, k, {cb_cols}) AS (VALUES {cb_rows}),
-    lut(q_id, s, k, v, n2) AS (VALUES {lut_rows}),
-    qn(q_id, qn) AS (VALUES {qn_rows}),
+    {_adc_values_sql(books, q_ids, qn, lut)},
     enc AS (
       SELECT vec_id, s, k AS code FROM (
         SELECT b.vec_id, cb.s, cb.k,
@@ -642,13 +684,7 @@ def _pq_oracle(sf_dir: str) -> str:
              ROUND({dots} / (qn.qn * sqrt({rn2})), 6) AS cosine
       FROM terms t JOIN qn ON qn.q_id = t.q_id
       WHERE t.c_id <> t.q_id
-    )
-    SELECT CAST(q_id AS BIGINT) AS q_id, c_id, cosine, rank FROM (
-      SELECT q_id, c_id, cosine,
-             CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-                   ORDER BY cosine DESC, c_id ASC) AS BIGINT) AS rank
-      FROM scored WHERE NOT isnan(cosine)) WHERE rank <= 3
-    """
+    ){_ADC_RANK_SQL}"""
 
 
 @register("ann_pq_topk", oracle=_pq_oracle)
@@ -677,9 +713,6 @@ def _ivfpq_offline_artifact(sf_dir: str, residual: bool):
     IDENTICAL numpy code over the identical sample — coarse centroids,
     (residual) codebooks, anchors, per-query LUT/norm payload, probe
     lists, and the IVFADC correction tensors."""
-    import os
-
-    import duckdb
     import numpy as np
 
     from kol_bigdata_realtime_analytics_spark.operators.similarity import (
@@ -706,20 +739,7 @@ def _ivfpq_offline_artifact(sf_dir: str, residual: bool):
         anchors = None
     B = np.array(books, dtype="float64")
     m, k_eff, dsub = B.shape
-    cent_n2 = (B * B).sum(axis=2)  # (m, k_eff)
-    path = f"{sf_dir}/embeddings.parquet"
-    if os.path.isdir(path):
-        path = f"{path}/**/*.parquet"
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding::DOUBLE[] FROM '{path}' "
-        "WHERE vec_id < 5 ORDER BY vec_id"
-    ).fetchall()
-    q_ids = [int(r[0]) for r in rows]
-    Qv = np.array([r[1] for r in rows], dtype="float64")
-    qn = np.sqrt((Qv * Qv).sum(axis=1))
-    lut = np.empty((len(q_ids), m, k_eff), dtype="float64")
-    for s in range(m):
-        lut[:, s, :] = Qv[:, s * dsub : (s + 1) * dsub] @ B[s].T
+    q_ids, Qv, qn, lut = _adc_offline_queries(sf_dir, books)
     Cn = np.array(coarse, dtype="float64")
     cn_norm = np.sqrt((Cn * Cn).sum(axis=1))
     cn_norm[cn_norm == 0] = 1.0
@@ -739,34 +759,18 @@ def _ivfpq_offline_artifact(sf_dir: str, residual: bool):
         for s in range(m):
             cross[:, s, :] = A[:, s * dsub : (s + 1) * dsub] @ B[s].T
         extra["cross"] = cross
-    return coarse, books, cent_n2, q_ids, qn, lut, probes, extra
+    return coarse, books, q_ids, qn, lut, probes, extra
 
 
 def _ivfpq_oracle_gen(residual: bool):
     def _oracle(sf_dir: str) -> str:
-        coarse, books, cent_n2, q_ids, qn, lut, probes, extra = (
-            _ivfpq_offline_artifact(sf_dir, residual)
+        coarse, books, q_ids, qn, lut, probes, extra = _ivfpq_offline_artifact(
+            sf_dir, residual
         )
         m, k_eff, dsub = len(books), len(books[0]), len(books[0][0])
         cents_lit = ", ".join(
             f"({i}, [{', '.join(repr(float(x)) for x in v)}]::DOUBLE[])"
             for i, v in enumerate(coarse)
-        )
-        cb_rows = ", ".join(
-            f"({s}, {k}, {', '.join(repr(float(x)) for x in books[s][k])})"
-            for s in range(m)
-            for k in range(k_eff)
-        )
-        cb_cols = ", ".join(f"c{i}" for i in range(1, dsub + 1))
-        lut_rows = ", ".join(
-            f"({q_ids[qi]}, {s}, {k}, {repr(float(lut[qi, s, k]))}, "
-            f"{repr(float(cent_n2[s, k]))})"
-            for qi in range(len(q_ids))
-            for s in range(m)
-            for k in range(k_eff)
-        )
-        qn_rows = ", ".join(
-            f"({q_ids[qi]}, {repr(float(qn[qi]))})" for qi in range(len(q_ids))
         )
         probe_rows = ", ".join(f"({q}, {c})" for q, c in probes)
         cos = (
@@ -774,13 +778,7 @@ def _ivfpq_oracle_gen(residual: bool):
             "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
         )
         a_cos = cos.format(a="b.vec", b="c.cent_vec")
-        dots8 = _np8_sum([f"v{s}" for s in range(m)])
-        rn2_8 = _np8_sum([f"n{s}" for s in range(m)])
-        vcase = ", ".join(
-            f"MAX(CASE WHEN e.s = {s} THEN l.v END) AS v{s},\n         "
-            f"MAX(CASE WHEN e.s = {s} THEN l.n2 END) AS n{s}"
-            for s in range(m)
-        )
+        vcase, dots8, rn2_8 = _adc_sums_sql(m, "e")
         if residual:
             anchors_lit = ", ".join(
                 f"({i}, [{', '.join(repr(float(x)) for x in v)}]::DOUBLE[], "
@@ -885,9 +883,7 @@ def _ivfpq_oracle_gen(residual: bool):
         return f"""
     WITH base0 AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
     cents AS (SELECT * FROM (VALUES {cents_lit}) c(cent_id, cent_vec)),
-    cb(s, k, {cb_cols}) AS (VALUES {cb_rows}),
-    lut(q_id, s, k, v, n2) AS (VALUES {lut_rows}),
-    qn(q_id, qn) AS (VALUES {qn_rows}),
+    {_adc_values_sql(books, q_ids, qn, lut)},
     probes(q_id, cent_id) AS (VALUES {probe_rows}),
     assigned AS MATERIALIZED (
       SELECT c_id, vec, cent_id FROM (
@@ -895,13 +891,7 @@ def _ivfpq_oracle_gen(residual: bool):
                ROW_NUMBER() OVER (PARTITION BY b.vec_id
                  ORDER BY ({a_cos}) DESC, c.cent_id ASC) AS rn
         FROM base0 b, cents c) WHERE rn = 1
-    ){res_ctes},{enc_sql},{terms_sql}
-    SELECT CAST(q_id AS BIGINT) AS q_id, c_id, cosine, rank FROM (
-      SELECT q_id, c_id, cosine,
-             CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-                   ORDER BY cosine DESC, c_id ASC) AS BIGINT) AS rank
-      FROM scored WHERE NOT isnan(cosine)) WHERE rank <= 3
-    """
+    ){res_ctes},{enc_sql},{terms_sql}{_ADC_RANK_SQL}"""
 
     return _oracle
 
@@ -951,12 +941,9 @@ def _opq_oracle(sf_dir: str) -> str:
     numpy, same fold_project the engine's rotation udf uses), embed R's
     rows / codebooks / per-query LUTs as literals; the corpus-side rotated
     vector is re-derived per output dim as a sequential list_dot_product
-    against R's row literals — bit-identical to the fold udf — and the PQ
-    encode/ADC algebra is the ann_pq_topk oracle's (numpy pairwise-8
+    against R's row literals — bit-identical to the fold udf — and the
+    ADC algebra comes from the shared _adc_* fragments (numpy pairwise-8
     groupings)."""
-    import os
-
-    import duckdb
     import numpy as np
 
     from kol_bigdata_realtime_analytics_spark.operators.similarity import (
@@ -973,22 +960,8 @@ def _opq_oracle(sf_dir: str) -> str:
         None, m=8, ksub=16, sample=fold_project(X, Rm.T),
         cache_key=("offline_rot", sf_dir),
     )
-    B = np.array(books, dtype="float64")
-    m, k_eff, dsub = B.shape
-    cent_n2 = (B * B).sum(axis=2)
-    path = f"{sf_dir}/embeddings.parquet"
-    if os.path.isdir(path):
-        path = f"{path}/**/*.parquet"
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding::DOUBLE[] FROM '{path}' "
-        "WHERE vec_id < 5 ORDER BY vec_id"
-    ).fetchall()
-    q_ids = [int(r[0]) for r in rows]
-    Qv = fold_project(np.array([r[1] for r in rows], dtype="float64"), Rm.T)
-    qn = np.sqrt((Qv * Qv).sum(axis=1))
-    lut = np.empty((len(q_ids), m, k_eff), dtype="float64")
-    for s in range(m):
-        lut[:, s, :] = Qv[:, s * dsub : (s + 1) * dsub] @ B[s].T
+    q_ids, _, qn, lut = _adc_offline_queries(sf_dir, books, rot=Rm.T)
+    m, dsub = len(books), len(books[0][0])
     dim = Rm.shape[0]
     rvec = ", ".join(
         "list_dot_product(vec, ["
@@ -996,43 +969,19 @@ def _opq_oracle(sf_dir: str) -> str:
         + "])"
         for j in range(dim)
     )
-    cb_rows = ", ".join(
-        f"({s}, {k}, {', '.join(repr(float(x)) for x in books[s][k])})"
-        for s in range(m)
-        for k in range(k_eff)
-    )
-    cb_cols = ", ".join(f"c{i}" for i in range(1, dsub + 1))
-    lut_rows = ", ".join(
-        f"({q_ids[qi]}, {s}, {k}, {repr(float(lut[qi, s, k]))}, "
-        f"{repr(float(cent_n2[s, k]))})"
-        for qi in range(len(q_ids))
-        for s in range(m)
-        for k in range(k_eff)
-    )
-    qn_rows = ", ".join(
-        f"({q_ids[qi]}, {repr(float(qn[qi]))})" for qi in range(len(q_ids))
-    )
     d2 = _np8_sum(
         [
             f"(rvec[s * {dsub} + {i}] - c{i}) * (rvec[s * {dsub} + {i}] - c{i})"
             for i in range(1, dsub + 1)
         ]
     )
-    dots = _np8_sum([f"v{s}" for s in range(m)])
-    rn2 = _np8_sum([f"n{s}" for s in range(m)])
-    vcase = ", ".join(
-        f"MAX(CASE WHEN c.s = {s} THEN l.v END) AS v{s},\n         "
-        f"MAX(CASE WHEN c.s = {s} THEN l.n2 END) AS n{s}"
-        for s in range(m)
-    )
+    vcase, dots, rn2 = _adc_sums_sql(m, "c")
     return f"""
     WITH base0 AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
     rot AS MATERIALIZED (
       SELECT vec_id, [{rvec}]::DOUBLE[] AS rvec FROM base0
     ),
-    cb(s, k, {cb_cols}) AS (VALUES {cb_rows}),
-    lut(q_id, s, k, v, n2) AS (VALUES {lut_rows}),
-    qn(q_id, qn) AS (VALUES {qn_rows}),
+    {_adc_values_sql(books, q_ids, qn, lut)},
     enc AS (
       SELECT vec_id, s, k AS code FROM (
         SELECT b.vec_id, cb.s, cb.k,
@@ -1051,13 +1000,7 @@ def _opq_oracle(sf_dir: str) -> str:
              ROUND({dots} / (qn.qn * sqrt({rn2})), 6) AS cosine
       FROM terms t JOIN qn ON qn.q_id = t.q_id
       WHERE t.c_id <> t.q_id
-    )
-    SELECT CAST(q_id AS BIGINT) AS q_id, c_id, cosine, rank FROM (
-      SELECT q_id, c_id, cosine,
-             CAST(ROW_NUMBER() OVER (PARTITION BY q_id
-                   ORDER BY cosine DESC, c_id ASC) AS BIGINT) AS rank
-      FROM scored WHERE NOT isnan(cosine)) WHERE rank <= 3
-    """
+    ){_ADC_RANK_SQL}"""
 
 
 @register("ann_opq_topk", oracle=_opq_oracle)

@@ -53,10 +53,10 @@ def _descend_fin(
     descending the undirected layered graphs from the top layer's
     min-vec_id entry point. The probe's own node is excluded from the
     RESULT, not the walk; if the walk ends on it, its layer-0 neighbors
-    are the natural last candidates (the hnsw_descent_check
-    semantics, verbatim). Built once per session (see artifacts): the
-    search result feeds both the registered top-k query and the recall
-    certificate."""
+    are the natural last candidates. The walk is _descend, the one
+    hnsw_descent_check also runs. Built once per session (see
+    artifacts): the search result feeds both the registered top-k query
+    and the recall certificate."""
     return artifacts.cached(
         "hnsw_descent",
         sf_dir,
@@ -68,7 +68,19 @@ def _descend_fin(
 def _descend_fin_uncached(
     spark: SparkSession, sf_dir: str, n_probes: int
 ) -> tuple[DataFrame, DataFrame]:
-    """The uncached descent (see _descend_fin)."""
+    """The uncached descent (see _descend_fin), with fin pinned."""
+    pr, _, _, fin = _descend(spark, sf_dir, n_probes)
+    return pr, fin.localCheckpoint(eager=True)  # <= probes x (beam + M) rows
+
+
+def _descend(
+    spark: SparkSession, sf_dir: str, n_probes: int
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """(pr, bv, ent, fin): the one Spark copy of the beam descent. pr is
+    the probe frame, bv the (node, n_vec, n_nrm) rescoring side, ent the
+    pinned 1-row entry point and fin the unpinned final candidate set
+    (see _descend_fin). hnsw_descent_check calls it directly (3 probes,
+    uncached, bv/ent feed its truth leg and entry_id column)."""
     from kol_bigdata_realtime_analytics_spark.operators.similarity import dot
 
     base, counts, graph = _hnsw_build(spark, sf_dir)
@@ -147,6 +159,9 @@ def _descend_fin_uncached(
                 .select("q_id", "node", "cosine")
                 .localCheckpoint(eager=(_h % 2 == 1))  # probes x beam rows
             )
+    # the probe's own node is excluded from the RESULT, not the walk (the
+    # walk usually routes to it, cosine 1.0); if it is in the final beam,
+    # its layer-0 neighbors are the natural last candidates
     probe_neigh = (
         beam.filter(F.col("node") == F.col("q_id"))
         .join(ed0, beam["node"] == ed0["a"])
@@ -169,16 +184,15 @@ def _descend_fin_uncached(
         .select("q_id", "node", "cosine")
         .unionByName(probe_neigh)
         .distinct()
-        .localCheckpoint(eager=True)  # <= probes x (beam + M) rows
     )
-    return pr, fin
+    return pr, bv, ent, fin
 
 
 def _descend_cte_sql(sf_dir: str, n_probes: int) -> str:
     """DuckDB WITH-chain (no leading WITH) replaying the descent hop for
-    hop, through `fin` — the oracle twin of _descend_fin. Mirrors
-    llm_ops._hnsw_descent_oracle's unroll with a parameterized probe
-    page."""
+    hop, through `fin` — the one oracle copy of _descend, shared by every
+    HNSW search oracle (llm_ops._hnsw_descent_oracle at 3 probes, the
+    serving page at 32)."""
     counts = _hnsw_layer_counts(sf_dir)
     layers = _hnsw_pop_layers(counts)
     ctes = "".join(_hnsw_layer_cte_sql(l, n) for l, n in layers)

@@ -49,6 +49,7 @@ from kol_bigdata_realtime_analytics_spark.operators.similarity import (
     brute_force_topk,
     cosine_neardup_pairs,
     lsh_topk,
+    rank_topk,
 )
 from kol_bigdata_realtime_analytics_spark.plans.registry import register, table
 
@@ -2261,12 +2262,7 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return rank_topk(scored, 3)
 
 
 @register("ann_int8_matmul_topk", oracle=_ANN_INT8_ORACLE)
@@ -6368,12 +6364,7 @@ def _mp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("c_id"),
         F.round(cosine(F.col("q_vec"), F.col("vec")), 6).alias("cosine"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "c_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return rank_topk(cand, 3)
 
 
 @register(
@@ -6478,12 +6469,7 @@ def ann_lsh_multiprobe_recall_check(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("vec_id").alias("c_id"),
         F.round(cosine(F.col("q_vec"), F.col("vec")), 6).alias("cosine"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    single = (
-        sing.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("q_id", "c_id")
-    )
+    single = rank_topk(sing, 3).select("q_id", "c_id")
     multi = _mp_topk(spark, sf_dir).select("q_id", "c_id")
 
     s_hits = exact.join(
@@ -6601,16 +6587,11 @@ def _knn_scored_build(
     # + interpreted HOF fold, measured 4x faster (guide §4.2 — vectors
     # cross the Python boundary per bucket membership, not per pair)
     scored = bucket_pair_scores(q, c)
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _KNN_K)
-        .select(
-            F.col("q_id").alias("vec_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return rank_topk(scored, _KNN_K).select(
+        F.col("q_id").alias("vec_id"),
+        F.col("c_id").alias("neighbor_id"),
+        "cosine",
+        "rank",
     )
 
 
@@ -6895,16 +6876,11 @@ def _nn_descent_refined(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id").asc())
-    return (
-        resc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _KNN_K)
-        .select(
-            F.col("q_id").alias("vec_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return rank_topk(resc, _KNN_K).select(
+        F.col("q_id").alias("vec_id"),
+        F.col("c_id").alias("neighbor_id"),
+        "cosine",
+        "rank",
     )
 
 
@@ -7876,59 +7852,12 @@ def _hnsw_insert_from_base(spark: SparkSession, base: DataFrame) -> DataFrame:
 
 
 def _hnsw_descent_oracle(sf_dir: str) -> str:
-    counts = _hnsw_layer_counts(sf_dir)
-    layers = _hnsw_pop_layers(counts)
-    ctes = "".join(_hnsw_layer_cte_sql(l, n) for l, n in layers)
-    # descent walks the UNDIRECTED view (HNSW links are bidirectional)
-    eds = "".join(
-        f",\ned{l} AS (SELECT DISTINCT a, b FROM ("
-        f"SELECT q_id AS a, c_id AS b FROM knn{l} "
-        f"UNION ALL SELECT c_id, q_id FROM knn{l}) t)"
-        for l, _ in layers
+    from kol_bigdata_realtime_analytics_spark.plans.hnsw_search import (
+        _descend_cte_sql,
     )
-    steps = []
-    prev = "beam0"
-    for l, _ in reversed(layers):
-        for h in range(1, _HNSW_HOPS + 1):
-            cur = f"s{l}_{h}"
-            steps.append(f""",
-{cur} AS MATERIALIZED (
-  SELECT q_id, node, cosine FROM (
-    SELECT t.q_id, t.node, t.cosine,
-           ROW_NUMBER() OVER (PARTITION BY t.q_id
-             ORDER BY t.cosine DESC, t.node ASC) AS rk
-    FROM (
-      SELECT DISTINCT c.q_id, c.node,
-             ROUND(list_dot_product(p.q_vec, v.vec) / (p.q_nrm * v.nrm), 6)
-               AS cosine
-      FROM (
-        SELECT q_id, node FROM {prev}
-        UNION ALL
-        SELECT s.q_id, e.b AS node FROM {prev} s JOIN ed{l} e ON e.a = s.node
-      ) c
-      JOIN pr p ON p.q_id = c.q_id
-      JOIN hbase v ON v.vec_id = c.node
-    ) t
-  ) WHERE rk <= {_HNSW_BEAM}
-)""")
-            prev = cur
+
     return f"""
-    WITH {_HNSW_BASE_SQL.format(level=_hnsw_level_sql()).lstrip()}{ctes}{eds},
-    pr AS (SELECT vec_id AS q_id, vec AS q_vec, nrm AS q_nrm FROM hbase
-           WHERE vec_id < {_HNSW_PROBES}),
-    ent AS (SELECT MIN(vec_id) AS node FROM hbase
-            WHERE level = (SELECT MAX(level) FROM hbase)),
-    beam0 AS (SELECT q_id, node FROM pr, ent){''.join(steps)},
-    fin AS (
-      SELECT q_id, node, cosine FROM {prev} WHERE node <> q_id
-      UNION ALL
-      SELECT s.q_id, e.b AS node,
-             (SELECT ROUND(list_dot_product(p.q_vec, v.vec)
-                           / (p.q_nrm * v.nrm), 6)
-              FROM pr p JOIN hbase v ON v.vec_id = e.b WHERE p.q_id = s.q_id)
-      FROM {prev} s JOIN ed0 e
-        ON e.a = s.node AND s.node = s.q_id AND e.b <> s.q_id
-    ),
+    WITH {_descend_cte_sql(sf_dir, _HNSW_PROBES)},
     found AS (
       SELECT q_id, node AS found_id, cosine AS found_cosine FROM (
         SELECT q_id, node, cosine,
@@ -7975,101 +7904,10 @@ def hnsw_descent_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized (the beam side broadcasts); the brute-force truth side
     is one probes-x-corpus scan, the same bounded shape as
     knn_graph_recall_check's sample."""
-    base, counts, graph = _hnsw_build(spark, sf_dir)  # graph pre-checkpointed
-    layers = _hnsw_pop_layers(counts)
-    pr = base.filter(F.col("vec_id") < _HNSW_PROBES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    bv = base.select(
-        F.col("vec_id").alias("node"),
-        F.col("vec").alias("n_vec"),
-        F.col("nrm").alias("n_nrm"),
-    )
-    top = base.agg(F.max("level").alias("ml"))
-    ent = (
-        base.join(F.broadcast(top), F.col("level") == F.col("ml"))
-        .agg(F.min("vec_id").alias("node"))
-        .localCheckpoint(eager=True)  # 1 row
-    )
-    beam = pr.select("q_id").crossJoin(F.broadcast(ent))
     from kol_bigdata_realtime_analytics_spark.operators.similarity import dot
+    from kol_bigdata_realtime_analytics_spark.plans.hnsw_search import _descend
 
-    ed0 = None
-    for l, _ in reversed(layers):
-        fwd = graph.filter(F.col("level") == l).select(
-            F.col("vec_id").alias("a"), F.col("neighbor_id").alias("b")
-        )
-        # undirected view — HNSW links are bidirectional; lazily pinned so
-        # the symmetrize+distinct runs once per layer, not once per hop
-        # (r12 opt, the hnsw_search._descend_fin discipline)
-        ed = (
-            fwd.unionByName(
-                fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        if l == 0:
-            ed0 = ed
-        for _h in range(_HNSW_HOPS):
-            neigh = beam.join(ed, beam["node"] == ed["a"]).select(
-                "q_id", F.col("b").alias("node")
-            )
-            cands = beam.select("q_id", "node").unionByName(neigh).distinct()
-            scored = (
-                bv.join(F.broadcast(cands), "node")
-                .join(F.broadcast(pr), "q_id")
-                .select(
-                    "q_id",
-                    "node",
-                    F.round(
-                        dot(F.col("q_vec"), F.col("n_vec"))
-                        / (F.col("q_nrm") * F.col("n_nrm")),
-                        6,
-                    ).alias("cosine"),
-                )
-            )
-            w = Window.partitionBy("q_id").orderBy(
-                F.col("cosine").desc(), F.col("node").asc()
-            )
-            # TWO hops per eager pin — see hnsw_search._descend_fin for
-            # the equivalence argument (pure per-hop function; eager vs
-            # lazy checkpointing changes only when the identical RDD
-            # materializes, never its rows; lineage still truncates)
-            beam = (
-                scored.withColumn("rk", F.row_number().over(w))
-                .filter(F.col("rk") <= _HNSW_BEAM)
-                .select("q_id", "node", "cosine")
-                .localCheckpoint(eager=(_h % 2 == 1))  # probes x beam rows
-            )
-    # final selection excludes the probe's own node (the walk may — and
-    # usually does — route to it, cosine 1.0); if the probe IS in the
-    # final beam, its layer-0 neighbors are the natural last candidates
-    probe_neigh = (
-        beam.filter(F.col("node") == F.col("q_id"))
-        .join(ed0, beam["node"] == ed0["a"])
-        .filter(F.col("b") != F.col("q_id"))
-        .select("q_id", F.col("b").alias("node"))
-        .join(F.broadcast(pr), "q_id")
-        .join(bv, "node")
-        .select(
-            "q_id",
-            "node",
-            F.round(
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_nrm") * F.col("n_nrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    fin = (
-        beam.filter(F.col("node") != F.col("q_id"))
-        .select("q_id", "node", "cosine")
-        .unionByName(probe_neigh)
-        .distinct()
-    )
+    pr, bv, ent, fin = _descend(spark, sf_dir, _HNSW_PROBES)
     wf = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("node").asc())
     found = (
         fin.withColumn("rk", F.row_number().over(wf))

@@ -17,6 +17,7 @@ from kol_bigdata_realtime_analytics_spark.plans.registry import (
     register,
     table,
 )
+from kol_bigdata_realtime_analytics_spark.streaming.sinks import run_to_memory
 from kol_bigdata_realtime_analytics_spark.streaming.trending import run_trending_stream
 
 _STREAM_TRENDING_ORACLE = """
@@ -58,9 +59,6 @@ def streaming_event_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kol_bigdata_realtime_analytics_spark.functions.scoring import trending_label
     from kol_bigdata_realtime_analytics_spark.plans.domain import trunc6
 
-    for q in spark.streams.active:
-        if q.name == "event_scores_mem":
-            q.stop()
     stream = events_stream_source(spark, sf_dir)
     score = F.lit(100.0) / (F.lit(1.0) + F.exp(-0.8 * (F.col("value") / 100.0 - 2.0)))
     out = stream.select(
@@ -69,15 +67,7 @@ def streaming_event_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         trunc6(score).alias("event_score"),
         trending_label(score).alias("label"),
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("event_scores_mem")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("event_scores_mem")
+    return run_to_memory(out, "event_scores_mem")
 
 
 @register("streaming_momentum_stateful", oracle=None)
@@ -88,20 +78,8 @@ def streaming_momentum_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     form is oracle-checked as `trending_momentum`."""
     from kol_bigdata_realtime_analytics_spark.streaming.momentum import momentum_stream
 
-    for q in spark.streams.active:
-        if q.name == "mom_state_mem":
-            q.stop()
     stream = events_stream_source(spark, sf_dir)
-    q = (
-        momentum_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("mom_state_mem")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("mom_state_mem")
+    return run_to_memory(momentum_stream(stream), "mom_state_mem")
 
 
 _MOMENTUM_EQUIV_ORACLE = """
@@ -146,8 +124,7 @@ def momentum_stream_batch_equiv_check(spark: SparkSession, sf_dir: str) -> DataF
 
     ev = table(spark, sf_dir, "events")
     stream = events_stream_source(spark, sf_dir)
-    _run_to_memory(momentum_stream(stream), "mom_equiv_mem")
-    stream_df = spark.table("mom_equiv_mem")
+    stream_df = run_to_memory(momentum_stream(stream), "mom_equiv_mem")
     # batch ground truth, filtered to the windows the final watermark closed
     wm = ev.agg((F.unix_millis(F.max("ts")) - F.lit(300_000)).alias("wm_ms"))
     closed = (
@@ -216,45 +193,6 @@ FROM pairs GROUP BY user_id
 """
 
 
-def _run_to_memory(
-    df: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    state_partitions: int | None = None,
-) -> None:
-    """Run a (bounded) stream to a memory sink. state_partitions: for
-    stateful sketch streams whose key domain is a LITERAL small set
-    (event_type ~6 values, bucket = N_BUCKETS), the state shuffle gets
-    that many partitions instead of the session default — sized by KEY
-    CARDINALITY, not cluster cores, so the setting is right at any scale
-    (32+ state-store partitions for 6 keys pays per-partition store
-    commit/fsync overhead for empty partitions every micro-batch;
-    measured 2.9 s -> 1.9 s on streaming_quantile_sketch, interleaved
-    A/B, results identical — integer state folds are partition-count-
-    invariant). The streaming query fixes the value at START, so the
-    conf is restored immediately after."""
-    spark = df.sparkSession
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    old_parts = None
-    if state_partitions is not None:
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-    finally:
-        if old_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    q.processAllAvailable()
-    q.stop()
-
-
 def _require_single_file_replay(sf_dir: str, plan_name: str) -> None:
     """Shared precondition for every oracle that re-derives watermark /
     single-micro-batch semantics: the replay must be ONE source file (a
@@ -297,9 +235,8 @@ def stream_stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFra
     from kol_bigdata_realtime_analytics_spark.streaming.joins import attribution_pairs
 
     events = events_stream_source(spark, sf_dir)
-    _run_to_memory(attribution_pairs(events, max_gap="2 hours"), "ss_attr_mem")
     return (
-        spark.table("ss_attr_mem")
+        run_to_memory(attribution_pairs(events, max_gap="2 hours"), "ss_attr_mem")
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_attributed"),
@@ -335,9 +272,8 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     _require_single_file_replay(sf_dir, "streaming_dedup_events")
     events = events_stream_source(spark, sf_dir)
     deduped = dedup_within_watermark(events, ["user_id", "event_type"], watermark="10 minutes")
-    _run_to_memory(deduped, "ss_dedup_mem")
     return (
-        spark.table("ss_dedup_mem")
+        run_to_memory(deduped, "ss_dedup_mem")
         .groupBy("event_type")
         .agg(F.count("*").alias("n_unique_users"))
     )
@@ -365,9 +301,6 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted exactly once; results equal the batch join, which is what the
     oracle checks.
     """
-    for q in spark.streams.active:
-        if q.name == "stream_static_mem":
-            q.stop()
     stream = events_stream_source(spark, sf_dir)
     dims = F.broadcast(
         table(spark, sf_dir, "customer")
@@ -384,15 +317,7 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream.join(dims, "user_id").select(
         "event_id", "user_id", "segment", "nation", "event_type", "value"
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("stream_static_mem")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("stream_static_mem")
+    return run_to_memory(out, "stream_static_mem")
 
 
 _STREAM_OHLC_ORACLE = """
@@ -424,9 +349,6 @@ def streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_by/max_by carry 2 candidate rows per partial in the state store —
     O(1) state per (type, window) key at any event rate.
     """
-    for q in spark.streams.active:
-        if q.name == "stream_ohlc_mem":
-            q.stop()
     stream = events_stream_source(spark, sf_dir)
     us = F.unix_micros(F.col("ts"))
     ord_key = F.concat(
@@ -459,15 +381,7 @@ def streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "low",
         )
     )
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_ohlc_mem")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("stream_ohlc_mem")
+    return run_to_memory(out, "stream_ohlc_mem", output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -508,9 +422,6 @@ def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed sessions emit incrementally and state evicts). The session
     store MERGES windows when an event bridges two provisional sessions —
     the semantics the oracle's gaps-and-islands SQL re-derives."""
-    for q in spark.streams.active:
-        if q.name == "stream_sessions_mem":
-            q.stop()
     stream = events_stream_source(spark, sf_dir)
     out = (
         stream.groupBy(
@@ -524,15 +435,7 @@ def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_sessions_mem")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("stream_sessions_mem")
+    return run_to_memory(out, "stream_sessions_mem", output_mode="complete")
 
 
 # ---------------------------------------------------------------------------
@@ -605,9 +508,8 @@ def streaming_unattributed_views(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l.user_id").alias("user_id"),
         F.unix_micros(F.col("l.l_ts")).alias("view_us"),
     )
-    _run_to_memory(nulls, "stream_unattr_mem")
     return (
-        spark.table("stream_unattr_mem")
+        run_to_memory(nulls, "stream_unattr_mem")
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_unattributed"),
@@ -661,9 +563,8 @@ def streaming_attributed_views_semi(spark: SparkSession, sf_dir: str) -> DataFra
     out = j.select(
         F.col("user_id"), F.unix_micros(F.col("l_ts")).alias("view_us")
     )
-    _run_to_memory(out, "stream_semi_mem")
     return (
-        spark.table("stream_semi_mem")
+        run_to_memory(out, "stream_semi_mem")
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_attributed_views"),
@@ -757,9 +658,8 @@ def streaming_unmatched_both_sides(spark: SparkSession, sf_dir: str) -> DataFram
         F.coalesce(F.col("l.user_id"), F.col("r.user_id")).alias("user_id"),
         F.unix_micros(F.coalesce(F.col("l.l_ts"), F.col("r.r_ts"))).alias("ts_us"),
     )
-    _run_to_memory(unmatched, "stream_full_outer_mem")
     return (
-        spark.table("stream_full_outer_mem")
+        run_to_memory(unmatched, "stream_full_outer_mem")
         .groupBy("side", "user_id")
         .agg(
             F.count("*").alias("n_unmatched"),
@@ -795,13 +695,12 @@ def _shh_run(spark: SparkSession, sf_dir: str, mem_name: str) -> DataFrame:
 
     _require_single_file_replay(sf_dir, "streaming_heavy_hitters")
     stream = _shh_keyed(events_stream_source(spark, sf_dir))
-    _run_to_memory(
+    return run_to_memory(
         mg_heavy_hitters_stream(stream, k=_SHH_K, n_buckets=_SHH_BUCKETS),
         mem_name,
         output_mode="update",
         state_partitions=_SHH_BUCKETS,  # literal key domain: the 8 MG shards
     )
-    return spark.table(mem_name)
 
 
 @register("streaming_heavy_hitters", oracle=None)
@@ -918,13 +817,12 @@ def _sad_run(spark: SparkSession, sf_dir: str, mem_name: str) -> DataFrame:
     keyed = events_stream_source(spark, sf_dir).select(
         F.col("user_id").alias("sketch_key")
     )
-    _run_to_memory(
+    return run_to_memory(
         approx_distinct_stream(keyed),
         mem_name,
         output_mode="update",
         state_partitions=N_BUCKETS,  # literal key domain: the 4 sketch shards
     )
-    return spark.table(mem_name)
 
 
 @register(
@@ -1070,13 +968,12 @@ def _sq_run(spark: SparkSession, sf_dir: str, mem_name: str) -> DataFrame:
     binned = events_stream_source(spark, sf_dir).select(
         "event_type", bin_col(F.col("value")).alias("bin_idx")
     )
-    _run_to_memory(
+    return run_to_memory(
         quantile_stream(binned),
         mem_name,
         output_mode="update",
         state_partitions=8,  # key domain = event_type (~6 literal values)
     )
-    return spark.table(mem_name)
 
 
 @register(

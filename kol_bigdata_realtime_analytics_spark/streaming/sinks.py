@@ -14,6 +14,8 @@ pipelines HSETs (reference trending_stream.py:298-363 via `.collect()` at
   pipelined), never via the driver. The client factory is injected so tests
   use a plain dict and production passes a redis/cassandra client builder —
   and the engine stays import-clean when those libs are absent.
+- `run_to_memory`: the one runner for a BOUNDED stream into a memory sink
+  (the pattern every registered streaming query and the tests use).
 """
 
 from __future__ import annotations
@@ -22,6 +24,53 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def run_to_memory(
+    df: DataFrame,
+    name: str,
+    output_mode: str = "append",
+    state_partitions: int | None = None,
+) -> DataFrame:
+    """Run a bounded stream to a memory sink named `name` and return the
+    materialized table: stop a leftover query of that name (idempotent
+    re-runs), start, processAllAvailable, stop. For bounded sources (a
+    file dir) this makes a streaming query synchronous, as registered
+    queries and tests need; production swaps the sink for foreachBatch
+    and the trigger for processingTime, with the lineage above the sink
+    unchanged.
+
+    state_partitions: for stateful sketch streams whose key domain is a
+    LITERAL small set (event_type ~6 values, bucket = N_BUCKETS), the
+    state shuffle gets that many partitions instead of the session
+    default — sized by KEY CARDINALITY, not cluster cores, so the setting
+    is right at any scale (32+ state-store partitions for 6 keys pays
+    per-partition store commit/fsync overhead for empty partitions every
+    micro-batch; measured 2.9 s -> 1.9 s on streaming_quantile_sketch,
+    interleaved A/B, results identical — integer state folds are
+    partition-count-invariant). The streaming query fixes the value at
+    START, so the conf is restored immediately after."""
+    spark = df.sparkSession
+    for q in spark.streams.active:
+        if q.name == name:
+            q.stop()
+    old_parts = None
+    if state_partitions is not None:
+        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    try:
+        q = (
+            df.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+    finally:
+        if old_parts is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    q.processAllAvailable()
+    q.stop()
+    return spark.table(name)
 
 
 def foreach_batch_ranking_sink(

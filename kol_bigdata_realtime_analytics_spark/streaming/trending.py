@@ -29,6 +29,7 @@ from kol_bigdata_realtime_analytics_spark.functions.scoring import (
     trending_score,
     trending_velocity,
 )
+from kol_bigdata_realtime_analytics_spark.streaming.sinks import run_to_memory
 
 
 def windowed_engagement(
@@ -80,23 +81,7 @@ def run_trending_stream(
     output_mode: str = "complete",
 ) -> DataFrame:
     """Drive the trending plan over a STREAMING source into a memory sink and
-    return the materialized result table. For bounded sources (file dir),
-    processAllAvailable() makes this synchronous — the test/driver pattern.
-
-    Production swaps the sink for foreachBatch(partition-wise upsert) and the
-    trigger for processingTime; the lineage above the sink is unchanged.
-    """
-    # stop a leftover query with the same name (idempotent re-runs)
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    plan = scored(windowed_engagement(source_df))
-    query = (
-        plan.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    return the materialized result table (sinks.run_to_memory)."""
+    return run_to_memory(
+        scored(windowed_engagement(source_df)), query_name, output_mode=output_mode
     )
-    query.processAllAvailable()
-    query.stop()
-    return spark.table(query_name)

@@ -21,6 +21,7 @@ from kol_bigdata_realtime_analytics_spark.operators.similarity import (
     brute_force_topk,
     cosine_neardup_pairs,
     lsh_neardup_pairs,
+    rank_topk,
 )
 
 DOCS = [
@@ -246,6 +247,34 @@ def test_brute_force_topk(spark, vecs_df):
     ranked = [(r["c_id"], r["rank"]) for r in sorted(out, key=lambda r: r["rank"])]
     assert ranked[0][0] == 1  # nearest neighbour of 0 is 1
     assert out[0]["cosine"] <= 1.0
+
+
+def test_rank_topk_tie_break_type_and_cut(spark):
+    """The one top-k rank rule: equal (rounded) cosines resolve to the
+    lower c_id, rank is a BIGINT, and each q_id keeps exactly k rows when
+    it has more than k candidates and all of them when it has fewer."""
+    from pyspark.sql.types import LongType
+
+    scored = spark.createDataFrame(
+        [
+            # q 1: five candidates, a planted three-way tie at 0.9 listed
+            # out of id order, below a clear winner
+            (1, 30, 0.9),
+            (1, 10, 0.9),
+            (1, 20, 0.9),
+            (1, 40, 0.95),
+            (1, 50, 0.1),
+            # q 2: two candidates, fewer than k
+            (2, 7, 0.5),
+            (2, 3, 0.5),
+        ],
+        "q_id long, c_id long, cosine double",
+    )
+    out = rank_topk(scored, 3)
+    assert out.columns == ["q_id", "c_id", "cosine", "rank"]
+    assert out.schema["rank"].dataType == LongType()
+    got = sorted((r["q_id"], r["rank"], r["c_id"]) for r in out.collect())
+    assert got == [(1, 1, 40), (1, 2, 10), (1, 3, 20), (2, 1, 3), (2, 2, 7)]
 
 
 def test_cosine_neardup_blocked(spark, vecs_df):

@@ -146,9 +146,10 @@ def test_quality_classifier_auc_floor(spark):
 
 
 def test_hnsw_topk_matches_descent_semantics(spark):
-    """The top-1 of the 32-query page must agree with hnsw_descent_check's
-    found_id on the 3 probes the two queries share — same walk, same
-    constants, so divergence means the shared descent drifted."""
+    """The two queries run one walk by construction (hnsw_search._descend,
+    at 32 and at 3 probes). What this checks is that each query's beam is
+    independent of the page size: the top-1 of the 32-query page must
+    equal hnsw_descent_check's found_id on the 3 probes both pages hold."""
     top1 = {
         r["q_id"]: r["c_id"]
         for r in REGISTRY["ann_hnsw_topk"].fn(spark, SF).collect()
