@@ -315,6 +315,12 @@ def _cc_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
+#: duplicate_clusters runs its min-label fixpoint as a driver union-find
+#: while the symmetrized edge list and the touched labels, 2 * n_sym rows,
+#: fit under this bound; past it the distributed loop runs.
+CC_DRIVER_MAX_EDGES = 1_000_000
+
+
 def duplicate_clusters(
     nodes: DataFrame,
     edges: DataFrame,
@@ -410,7 +416,7 @@ def duplicate_clusters(
     labels_plan = all_nodes.join(touched, "node", "left_semi").select(
         "node", F.col("node").alias("label")
     )
-    # Driver union-find short-circuit (r11 opt): when the SYMMETRIZED edge
+    # Driver union-find short-circuit: when the SYMMETRIZED edge
     # list fits the driver comfortably, the min-label fixpoint is computed
     # with a union-find over the collected edges instead of iterated Spark
     # rounds — each distributed round costs a join + groupBy + checkpoint +
@@ -422,17 +428,14 @@ def duplicate_clusters(
     # This is the production shape too: distributed CC finishes with a
     # single-machine union-find once the edge worklist collapses below
     # memory scale; a 100 TB corpus's edge set exceeds the bound and takes
-    # the distributed loop below. Bound parameterised via env; the default
-    # (1M symmetrized edge rows) stays far under driver memory. Touched
+    # the distributed loop below. The bound, CC_DRIVER_MAX_EDGES (1M
+    # symmetrized edge rows), stays far under driver memory. Touched
     # labels are a subset of edge endpoints, so |labels| <= n_sym and
     # 2*n_sym bounds the total collected rows — the distributed loop's
     # bookkeeping (label checkpoint + convergence aggregate) is deferred
     # to its branch so the short-circuit never pays those two jobs.
-    import os as _os
-
-    cc_driver_max = int(_os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "1000000"))
     n_sym = sym.count()  # one tiny job on the already-checkpointed frame
-    if 2 * n_sym <= cc_driver_max:
+    if 2 * n_sym <= CC_DRIVER_MAX_EDGES:
         parent: dict = {}
 
         def _find(x):
@@ -443,7 +446,7 @@ def duplicate_clusters(
                 parent[x], x = r, parent[x]
             return r
 
-        for e in sym.toLocalIterator():  # bounded by cc_driver_max
+        for e in sym.toLocalIterator():  # bounded by CC_DRIVER_MAX_EDGES
             ra, rb = _find(e["src"]), _find(e["dst"])
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)

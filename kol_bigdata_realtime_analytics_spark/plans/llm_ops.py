@@ -2750,28 +2750,12 @@ def boilerplate_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # path, registered as an INVARIANT query: the bloom path must return
 # exactly the exact anti-join's survivors (no false negatives by
 # construction; false positives removed by the exact check on the maybe
-# fraction). The oracle recomputes the exact anti-join — so a hash match
-# proves the bloom path end-to-end.
+# fraction). The oracle is incremental_dedup_new_docs' exact anti-join
+# (_INCREMENTAL_ORACLE) — so a hash match proves the bloom path end-to-end.
 # ---------------------------------------------------------------------------
 
-_BLOOM_ANTIJOIN_ORACLE = f"""
-WITH corpus AS (
-  SELECT DISTINCT {DOC_FINGERPRINT_ORACLE_SQL.format(col="text")} AS fingerprint
-  FROM documents WHERE doc_id % 10 != 9
-),
-batch AS (
-  SELECT MIN(doc_id) AS doc_id,
-         {DOC_FINGERPRINT_ORACLE_SQL.format(col="text")} AS fingerprint
-  FROM documents WHERE doc_id % 10 = 9
-  GROUP BY 2
-)
-SELECT b.doc_id, b.fingerprint
-FROM batch b LEFT JOIN corpus c ON b.fingerprint = c.fingerprint
-WHERE c.fingerprint IS NULL
-""".strip()
 
-
-@register("bloom_antijoin_check", oracle=_BLOOM_ANTIJOIN_ORACLE)
+@register("bloom_antijoin_check", oracle=_INCREMENTAL_ORACLE)
 def bloom_antijoin_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`incremental_dedup_new_docs` re-run through the broadcast-Bloom
     prefilter (`operators/bloom.py`): definite-new rows (any unset bit)
@@ -4081,19 +4065,21 @@ def _bpe_train_driver(
     return merges
 
 
-def bpe_train(
-    words: DataFrame, n_merges: int, driver_max_words: int | None = None
-) -> list[tuple]:
+#: bpe_train runs its merge loop on the driver while the distinct-word
+#: vocabulary has at most this many words; past it the Spark loop runs.
+BPE_DRIVER_MAX_WORDS = 1_000_000
+
+
+def bpe_train(words: DataFrame, n_merges: int) -> list[tuple]:
     """The Sennrich merge loop over a (w: string) word frame — factored out
     of _bpe_merges so tests can pin it against an independent pure-Python
     BPE model on arbitrary word lists (the DuckDB oracle shares the
     wrapped-replace application strategy, so it cannot catch a common-mode
     bug in that encoding; the tuple-level Python model can).
 
-    Two interchangeable executions of the SAME merge sequence (r11 opt):
-    when the distinct-word vocabulary fits the driver comfortably
-    (default 1M words; env SPARK_GRAFT_BPE_DRIVER_MAX_WORDS, tests pass
-    driver_max_words=0 to force the distributed loop), the loop runs as
+    Two interchangeable executions of the SAME merge sequence: when the
+    distinct-word vocabulary fits the driver comfortably
+    (BPE_DRIVER_MAX_WORDS, 1M words), the loop runs as
     the classic in-memory trainer with INCREMENTAL pair counts — exactly
     how SentencePiece/HF tokenizers train after a distributed word count
     — touching only the words that contain each merged pair instead of
@@ -4125,13 +4111,7 @@ def bpe_train(
     # on 1 partition while a 100 TB vocab gets a handful. coalesce on the
     # checkpointed frame is narrow — no second materialization.
     n_words = vocab.count()
-    if driver_max_words is None:
-        import os as _os
-
-        driver_max_words = int(
-            _os.environ.get("SPARK_GRAFT_BPE_DRIVER_MAX_WORDS", "1000000")
-        )
-    if n_words <= driver_max_words:
+    if n_words <= BPE_DRIVER_MAX_WORDS:
         return _bpe_train_driver(
             [(r["sym"], int(r["freq"])) for r in vocab.collect()], n_merges
         )
@@ -6301,6 +6281,23 @@ def _mp_probe_literals(qb: str) -> list[str]:
     return [qb] + [f"xor({qb}, {1 << i})" for i in range(_MP_PLANES)]
 
 
+def _exact_topk_cte(name: str, source: str, k: int) -> str:
+    """DuckDB CTE `name` (q_id, c_id): each q0 probe's top-k by exact cosine
+    (ROUND 6, vec_id ASC on ties), self-matches excluded. `source` is the
+    FROM clause pairing the candidate table `b` with q0."""
+    return f"""{name} AS (
+      SELECT q_id, c_id FROM (
+        SELECT q0.q_id, b.vec_id AS c_id,
+               ROW_NUMBER() OVER (PARTITION BY q0.q_id ORDER BY
+                 ROUND(list_dot_product(q0.q_vec, b.vec)
+                       / (sqrt(list_dot_product(q0.q_vec, q0.q_vec))
+                          * sqrt(list_dot_product(b.vec, b.vec))), 6) DESC,
+                 b.vec_id ASC) AS rn
+        FROM {source} WHERE b.vec_id != q0.q_id
+      ) WHERE rn <= {k}
+    )"""
+
+
 def _mp_oracle_sql() -> str:
     from kol_bigdata_realtime_analytics_spark.operators.similarity import (
         lsh_bucket_sql,
@@ -6397,28 +6394,8 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_lsh_multiprobe_recall_check",
     oracle=f"""
     WITH {_mp_oracle_sql().lstrip()},
-    exact AS (
-      SELECT q_id, c_id FROM (
-        SELECT q0.q_id, b.vec_id AS c_id,
-               ROW_NUMBER() OVER (PARTITION BY q0.q_id ORDER BY
-                 ROUND(list_dot_product(q0.q_vec, b.vec)
-                       / (sqrt(list_dot_product(q0.q_vec, q0.q_vec))
-                          * sqrt(list_dot_product(b.vec, b.vec))), 6) DESC,
-                 b.vec_id ASC) AS rn
-        FROM base b, q0 WHERE b.vec_id != q0.q_id
-      ) WHERE rn <= 3
-    ),
-    single AS (
-      SELECT q_id, c_id FROM (
-        SELECT q0.q_id, b.vec_id AS c_id,
-               ROW_NUMBER() OVER (PARTITION BY q0.q_id ORDER BY
-                 ROUND(list_dot_product(q0.q_vec, b.vec)
-                       / (sqrt(list_dot_product(q0.q_vec, q0.q_vec))
-                          * sqrt(list_dot_product(b.vec, b.vec))), 6) DESC,
-                 b.vec_id ASC) AS rn
-        FROM base b JOIN q0 ON b.bkt = q0.q_bkt WHERE b.vec_id != q0.q_id
-      ) WHERE rn <= 3
-    )
+    {_exact_topk_cte("exact", "base b, q0", 3)},
+    {_exact_topk_cte("single", "base b JOIN q0 ON b.bkt = q0.q_bkt", 3)}
     SELECT CAST((SELECT COUNT(*) FROM q0) AS BIGINT) AS n_queries,
            CAST((SELECT COUNT(*) FROM exact) AS BIGINT) AS n_exact,
            CAST((SELECT COUNT(*) FROM exact e JOIN single s
@@ -6674,17 +6651,7 @@ def _knn_recall_oracle(sf_dir: str) -> str:
     return f"""
     WITH {head.lstrip()},
     q0 AS (SELECT vec_id AS q_id, vec AS q_vec FROM base0 WHERE vec_id < 5),
-    exact AS (
-      SELECT q_id, c_id FROM (
-        SELECT q0.q_id, b.vec_id AS c_id,
-               ROW_NUMBER() OVER (PARTITION BY q0.q_id ORDER BY
-                 ROUND(list_dot_product(q0.q_vec, b.vec)
-                       / (sqrt(list_dot_product(q0.q_vec, q0.q_vec))
-                          * sqrt(list_dot_product(b.vec, b.vec))), 6) DESC,
-                 b.vec_id ASC) AS rn
-        FROM base0 b, q0 WHERE b.vec_id != q0.q_id
-      ) WHERE rn <= {_KNN_K}
-    ),
+    {_exact_topk_cte("exact", "base0 b, q0", _KNN_K)},
     own AS (
       SELECT q_id, c_id FROM (
         SELECT s.q_id, s.c_id,
@@ -6924,17 +6891,7 @@ def _nn_gain_oracle(sf_dir: str) -> str:
       FROM knn i GROUP BY i.q_id
     ),
     q0 AS (SELECT vec_id AS q_id, vec AS q_vec FROM base0 WHERE vec_id < 5),
-    exact AS (
-      SELECT q_id, c_id FROM (
-        SELECT q0.q_id, b.vec_id AS c_id,
-               ROW_NUMBER() OVER (PARTITION BY q0.q_id ORDER BY
-                 ROUND(list_dot_product(q0.q_vec, b.vec)
-                       / (sqrt(list_dot_product(q0.q_vec, q0.q_vec))
-                          * sqrt(list_dot_product(b.vec, b.vec))), 6) DESC,
-                 b.vec_id ASC) AS rn
-        FROM base0 b, q0 WHERE b.vec_id != q0.q_id
-      ) WHERE rn <= {_KNN_K}
-    )
+    {_exact_topk_cte("exact", "base0 b, q0", _KNN_K)}
     SELECT CAST((SELECT COUNT(*) FROM knn) AS BIGINT) AS n_edges,
            floor((SELECT s FROM isum) * 1000000) / 1000000 AS init_sum_t6,
            floor((SELECT s FROM rsum) * 1000000) / 1000000 AS refined_sum_t6,

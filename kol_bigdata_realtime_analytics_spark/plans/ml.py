@@ -53,12 +53,10 @@ _PROFILE_SQL = """
   FROM customer
 """
 
-# weights mirrored from functions/ml_scoring.TRUST_MODEL; term order matters
-# (left-to-right IEEE addition must match the udf's sequential accumulate)
-_ML_TRUST_ORACLE = f"""
-WITH prof AS ({_PROFILE_SQL})
-SELECT c_custkey,
-       floor(100.0 / (1.0 + exp(-(
+# The trust score over a _PROFILE_SQL row, trunc6'd. Weights mirrored from
+# functions/ml_scoring.TRUST_MODEL; term order matters (left-to-right IEEE
+# addition must match the udf's sequential accumulate).
+_TRUST_SCORE_SQL = """floor(100.0 / (1.0 + exp(-(
          -1.5
          + 0.22 * ln(1 + GREATEST(followers, 0))
          + 0.15 * ln(1 + GREATEST(posts, 0))
@@ -66,7 +64,12 @@ SELECT c_custkey,
          + 1.2 * CASE WHEN verified THEN 1.0 ELSE 0.0 END
          + 0.3 * (age_days / 365.0)
          + -0.08 * LEAST(ff_ratio, 50.0)
-       ))) * 1000000) / 1000000 AS trust_ml
+       ))) * 1000000) / 1000000"""
+
+_ML_TRUST_ORACLE = f"""
+WITH prof AS ({_PROFILE_SQL})
+SELECT c_custkey,
+       {_TRUST_SCORE_SQL} AS trust_ml
 FROM prof
 """
 
@@ -312,15 +315,7 @@ def weighted_median_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ML_EVAL_ORACLE = f"""
 WITH prof AS ({_PROFILE_SQL}),
 sc AS (
-  SELECT floor(100.0 / (1.0 + exp(-(
-           -1.5
-           + 0.22 * ln(1 + GREATEST(followers, 0))
-           + 0.15 * ln(1 + GREATEST(posts, 0))
-           + 3.0 * engagement_rate
-           + 1.2 * CASE WHEN verified THEN 1.0 ELSE 0.0 END
-           + 0.3 * (age_days / 365.0)
-           + -0.08 * LEAST(ff_ratio, 50.0)
-         ))) * 1000000) / 1000000 AS s,
+  SELECT {_TRUST_SCORE_SQL} AS s,
          CASE WHEN verified THEN 1 ELSE 0 END AS y
   FROM prof
 ), b AS (
@@ -492,15 +487,7 @@ def success_scores_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CALIBRATION_ORACLE = f"""
 WITH prof AS ({_PROFILE_SQL}),
 sc AS (
-  SELECT floor(100.0 / (1.0 + exp(-(
-           -1.5
-           + 0.22 * ln(1 + GREATEST(followers, 0))
-           + 0.15 * ln(1 + GREATEST(posts, 0))
-           + 3.0 * engagement_rate
-           + 1.2 * CASE WHEN verified THEN 1.0 ELSE 0.0 END
-           + 0.3 * (age_days / 365.0)
-           + -0.08 * LEAST(ff_ratio, 50.0)
-         ))) * 1000000) / 1000000 AS s,
+  SELECT {_TRUST_SCORE_SQL} AS s,
          CASE WHEN verified THEN 1 ELSE 0 END AS y
   FROM prof
 )

@@ -128,6 +128,13 @@ def _viterbi_segments(
     return segments, vocab
 
 
+#: _viterbi_dp runs the DP on the driver only while the vocabulary has at
+#: most UNIGRAM_DRIVER_MAX_WORDS words AND at most UNIGRAM_DRIVER_MAX_CHARS
+#: characters; past either bound the distributed loop runs.
+UNIGRAM_DRIVER_MAX_WORDS = 200_000
+UNIGRAM_DRIVER_MAX_CHARS = 20_000_000
+
+
 def _viterbi_dp(
     vocab: DataFrame,
     costs: DataFrame,
@@ -140,33 +147,28 @@ def _viterbi_dp(
     (piece, cost) table. Pieces absent from `costs` drop out of the
     candidate join — pruning needs no special casing here.
 
-    Driver short-circuit (r11 opt, the bpe_vocab_train discipline): the
-    DP state is VOCABULARY-sized (distinct words, ~1e5-1e6 at 100 TB by
-    Heaps' law — the same bound the BPE trainer collects under), yet the
+    Driver short-circuit (the bpe_vocab_train discipline): the DP state
+    is VOCABULARY-sized (distinct words, ~1e5-1e6 at 100 TB by Heaps'
+    law — the same bound the BPE trainer collects under), yet the
     distributed loop pays max(len(w)) rounds of join + window + eager
-    checkpoint — pure scheduler floor at bench scale. Below
-    $SPARK_GRAFT_UNIGRAM_DRIVER_MAX_WORDS (default 200k) the identical
-    integer DP (same candidates, same (cost, j) tie-break, same
-    reachability semantics) runs over the collected vocab and the
+    checkpoint — pure scheduler floor at bench scale. Below the bounds
+    the identical integer DP (same candidates, same (cost, j) tie-break,
+    same reachability semantics) runs over the collected vocab and the
     SPARK-computed integer cost table — no float op is re-implemented,
     so results are bit-identical; equality of the two paths is pinned in
-    tests/test_unigram_lm_model.py. Above the bound the distributed loop
-    runs unchanged."""
-    import os as _os
-
-    driver_max = int(
-        _os.environ.get("SPARK_GRAFT_UNIGRAM_DRIVER_MAX_WORDS", "200000")
-    )
-    # char-volume bound (r11 advice): word COUNT alone under-estimates the
-    # driver DP's latency/memory on long-word vocabularies (state is
-    # O(total chars), work O(total chars x _MAX_PIECE)); both bounds must
-    # hold before the collect. Unknown char volume (no probe) counts as
-    # over-bound, falling back to the distributed loop.
-    char_max = int(
-        _os.environ.get("SPARK_GRAFT_UNIGRAM_DRIVER_MAX_CHARS", "20000000")
-    )
+    tests/test_unigram_lm_model.py. Above either bound the distributed
+    loop runs unchanged."""
+    # char-volume bound: word COUNT alone under-estimates the driver DP's
+    # latency/memory on long-word vocabularies (state is O(total chars),
+    # work O(total chars x _MAX_PIECE)); both bounds must hold before the
+    # collect. Unknown char volume (no probe) counts as over-bound,
+    # falling back to the distributed loop.
     n = vocab.count() if n_vocab is None else n_vocab
-    if n <= driver_max and n_chars is not None and n_chars <= char_max:
+    if (
+        n <= UNIGRAM_DRIVER_MAX_WORDS
+        and n_chars is not None
+        and n_chars <= UNIGRAM_DRIVER_MAX_CHARS
+    ):
         return _viterbi_dp_driver(vocab, costs, max_len)
     # state: best cost + path per (word, position); position 0 = empty
     state = vocab.select(

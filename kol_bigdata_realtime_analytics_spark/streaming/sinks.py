@@ -5,10 +5,13 @@ pipelines HSETs (reference trending_stream.py:298-363 via `.collect()` at
 :315) — a driver OOM at any real scale. The engine pattern:
 
 - `foreach_batch_ranking_sink`: per trigger, compute the SMALL top-k ranking
-  (executor-side aggregation; only k rows ever move) and atomically replace a
-  serving parquet table. Readers always see a complete snapshot (write temp,
-  then rename-style overwrite), which is the pre-materialized "ZSET" the
-  serving layer reads in O(1).
+  (executor-side aggregation; only k rows ever move) and rewrite a serving
+  parquet table with it, the pre-materialized "ZSET" the serving layer reads.
+  The rewrite is NOT atomic: `write.mode("overwrite")` deletes the table's
+  files and then writes new ones, so a concurrent reader can find no files
+  or vanished ones (FILE_NOT_EXIST; 4-10 of 49 concurrent reads failed per
+  hot-path run). ROADMAP direction 4 replaces it with immutable
+  per-epoch snapshots behind a commit log.
 - `foreach_partition_kv_sink`: when an external KV store (Redis/Cassandra) IS
   configured, write per-PARTITION from executors (connection per partition,
   pipelined), never via the driver. The client factory is injected so tests
@@ -79,7 +82,8 @@ def foreach_batch_ranking_sink(
     key_cols: list[str],
     k: int = 100,
 ):
-    """Returns a foreachBatch fn maintaining a top-k ranking parquet table."""
+    """Returns a foreachBatch fn that overwrites out_path with the batch's
+    top-k ranking each trigger. Not atomic for concurrent readers."""
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         ranked = (
@@ -87,7 +91,8 @@ def foreach_batch_ranking_sink(
             .limit(k)
             .withColumn("epoch_id", F.lit(epoch_id))
         )
-        # overwrite = atomic snapshot swap for parquet dir readers
+        # delete-then-write, not a swap: readers can catch it half-done
+        # (see the module docstring)
         ranked.write.mode("overwrite").parquet(out_path)
 
     return sink

@@ -1,15 +1,14 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for headline queries into plans/<round>/.
+"""Capture .explain("formatted") for headline queries into .scratch/plans/.
 
 Usage: python scripts/capture_plans.py <suffix> [query ...]
-  suffix: "before" or "after" (file name becomes plans/<round>/<q>_<suffix>.txt)
+  suffix: "before" or "after" (file name becomes .scratch/plans/<q>_<suffix>.txt)
   with no query list, captures every bench.HEADLINE query.
-  round dir comes from $PLAN_ROUND (default r12).
 
-The explain output is the round judge's evidence channel for plan-shape
-claims (Exchange counts, join strategies, PushedFilters, Python-eval
-nodes), so capture goes through the same registry entry points the bench
-times.
+The dumps are evidence for plan-shape claims (Exchange counts, join
+strategies, PushedFilters, Python-eval nodes), so capture goes through the
+same registry entry points the bench times. `.scratch/` is gitignored:
+quote the lines a claim rests on rather than committing the dumps.
 """
 
 from __future__ import annotations
@@ -29,9 +28,7 @@ def main() -> int:
     names = sys.argv[2:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("PLAN_ROUND", "r12"),
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch", "plans"
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="capture_plans")

@@ -1,10 +1,13 @@
 from __future__ import annotations
 
+import contextlib
+import importlib
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from kol_bigdata_realtime_analytics_spark.session import get_spark
 
@@ -15,27 +18,48 @@ def spark():
     yield s
 
 
+#: Each size-gated driver short-circuit: the module holding its bound, the
+#: bound's name, and its driver twin — the code only the driver branch runs:
+#: a function of the same module, or for CC the DataFrame method its
+#: union-find streams the edges through.
+GATES = {
+    "cc_edges": ("operators.dedup", "CC_DRIVER_MAX_EDGES", "toLocalIterator"),
+    "bpe_words": ("plans.llm_ops", "BPE_DRIVER_MAX_WORDS", "_bpe_train_driver"),
+    "unigram_words": ("plans.unigram_lm", "UNIGRAM_DRIVER_MAX_WORDS", "_viterbi_dp_driver"),
+    "unigram_chars": ("plans.unigram_lm", "UNIGRAM_DRIVER_MAX_CHARS", "_viterbi_dp_driver"),
+}
+
+
 @pytest.fixture
-def cc_distributed(spark, monkeypatch):
-    """Forces duplicate_clusters onto its distributed min-label loop and
-    yields the calls made to toLocalIterator, which only the driver
-    union-find branch uses — a test asserts the list stays empty. The
-    bound is -1, not 0: an empty edge set passes `2 * n_sym <= 0` and
-    would still take the union-find branch."""
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "-1")
-    cls = type(spark.range(0))
-    real = cls.toLocalIterator
+def forced(request, spark, monkeypatch):
+    """Returns a context manager that forces one gate (the indirect
+    parameter, a GATES key) onto its distributed branch: inside it the
+    gate's bound is -1, and on exit a spy on the gate's driver twin fails
+    the test if the twin ran. Code outside the block keeps the default
+    bound, so a test can take the driver branch's rows first and compare.
+    The bound is -1, not 0: an empty input passes `<= 0` and would still
+    take the driver branch."""
+    mod_name, bound, twin = GATES[request.param]
+    module = importlib.import_module(f"kol_bigdata_realtime_analytics_spark.{mod_name}")
+    owner = type(spark.range(0)) if twin == "toLocalIterator" else module
+    real = getattr(owner, twin)
     calls = []
 
-    def spy(self, *args, **kwargs):
-        calls.append(self)
-        return real(self, *args, **kwargs)
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
 
-    monkeypatch.setattr(cls, "toLocalIterator", spy)
-    list(spark.range(1).toLocalIterator())
-    assert len(calls) == 1  # the spy sits on the session's DataFrame class
-    calls.clear()
-    yield calls
+    monkeypatch.setattr(owner, twin, spy)
+
+    @contextlib.contextmanager
+    def distributed():
+        with monkeypatch.context() as m:
+            m.setattr(module, bound, -1)
+            before = len(calls)
+            yield
+        assert len(calls) == before, f"{twin} ran: the driver branch was taken"
+
+    return distributed
 
 
 SF_SMALL = "/root/testdata/sf0.001"

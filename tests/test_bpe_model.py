@@ -10,6 +10,7 @@ from __future__ import annotations
 import random
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from kol_bigdata_realtime_analytics_spark.plans.llm_ops import (
@@ -167,11 +168,12 @@ def test_bpe_byte_fallback_mixed_words(spark):
     assert got["π"] == 2
 
 
-def test_bpe_driver_and_distributed_paths_agree(spark):
+@pytest.mark.parametrize("forced", ["bpe_words"], indirect=True)
+def test_bpe_driver_and_distributed_paths_agree(spark, forced):
     """bpe_train has two interchangeable executions of the same merge
     sequence: the in-memory incremental-pair-count trainer (default for
-    small vocabularies) and the distributed Spark loop (forced with
-    driver_max_words=0). Pin them equal — and equal to the independent
+    small vocabularies) and the distributed Spark loop (forced by the
+    `forced` fixture). Pin them equal — and equal to the independent
     reference — on a corpus mixing runs, ties, multi-char re-merges and
     multi-byte chars, so neither path can drift from the other."""
     rng = random.Random(7)
@@ -183,7 +185,8 @@ def test_bpe_driver_and_distributed_paths_agree(spark):
         F.length("w") >= 2
     )
     driver = bpe_train(wdf, 10)
-    distributed = bpe_train(wdf, 10, driver_max_words=0)
+    with forced():
+        distributed = bpe_train(wdf, 10)
     assert driver == distributed, f"\ndriver: {driver}\ndist:   {distributed}"
     assert driver == _bpe_train_ref(words, 10)
 

@@ -1,4 +1,5 @@
-"""Independent pure-Python model pins for the r7 iterative operators.
+"""Independent pure-Python model pins for the iterative operators, and
+the convergence values of their fixpoint certificates.
 
 Same discipline as tests/test_bpe_model.py: the DuckDB oracles share the
 distributed implementation's algebraic strategy (unrolled CTEs of the same
@@ -13,6 +14,8 @@ from __future__ import annotations
 import math
 
 import pandas as pd
+
+from kol_bigdata_realtime_analytics_spark.plans import REGISTRY
 
 
 def test_bfs_layers_matches_python_model(spark):
@@ -306,3 +309,29 @@ def test_fwbw_first_noop_directed_cycle(spark):
     # both cones add one node per hop and stall at hop 3
     assert fwbw_first_noop(e_df, piv, 5) == 3
     assert fwbw_first_noop(e_df, piv, 2) == -1
+
+
+# The fixpoint certificates' convergence values: each iterative operator
+# reaches its fixpoint inside the round budget, with slack rounds after.
+
+
+def test_nn_descent_converges_inside_budget(spark, sf_small):
+    rows = {r["round"]: r for r in REGISTRY["nn_descent_fixpoint_check"].fn(spark, sf_small).collect()}
+    noop = [r for r in sorted(rows) if rows[r]["n_updates"] == 0]
+    assert noop, "no no-op round inside the budget — raise _NN_FIXPOINT_ROUNDS"
+    assert noop[0] < max(rows), "no slack round after convergence"
+    assert rows[max(rows)]["converged"]
+
+
+def test_pagerank_fixpoint_round3(spark, sf_small):
+    rows = {r["round"]: r["l1_delta_units"] for r in REGISTRY["pagerank_fixpoint_check"].fn(spark, sf_small).collect()}
+    assert rows[1] > 0 and rows[2] > 0, "bipartite graph should move mass in rounds 1-2"
+    for r in range(3, 11):
+        assert rows[r] == 0, f"round {r} moved {rows[r]} units — not at fixpoint"
+
+
+def test_cc_fixpoint_inside_budget(spark, sf_small):
+    rows = {r["round"]: r["n_changed"] for r in REGISTRY["dedup_clusters_fixpoint_check"].fn(spark, sf_small).collect()}
+    noop = [r for r in sorted(rows) if rows[r] == 0]
+    assert noop and noop[0] <= 4, f"pointer-doubling took {noop[:1]} rounds — log-diameter shape broken"
+    assert max(rows) > noop[0], "no slack round after convergence"

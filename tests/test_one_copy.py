@@ -1,6 +1,7 @@
-"""One definition per similarity-search shape: each routine the HNSW,
-top-k, bucket-dedup and bounded-stream families share is written once in
-the engine, so no test has to catch copies drifting apart. Runs no Spark."""
+"""One definition per shared shape: each routine the HNSW, top-k,
+bucket-dedup and bounded-stream families share, and each oracle fragment
+several DuckDB oracles share, is written once in the engine, so no test
+has to catch copies drifting apart. Runs no Spark."""
 
 from __future__ import annotations
 
@@ -36,6 +37,12 @@ def _sources() -> dict[str, str]:
         ),
         # the in-bucket pair expansion (dedup._bucket_pairs)
         ('F.sequence(F.lit(0), F.size(F.col("ds")) - 2)', "operators/dedup.py"),
+        # the trust-score oracle expression (ml._TRUST_SCORE_SQL)
+        ("+ 1.2 * CASE WHEN verified THEN 1.0 ELSE 0.0 END", "plans/ml.py"),
+        # the exact-cosine top-k oracle CTE (llm_ops._exact_topk_cte)
+        ("ROUND(list_dot_product(q0.q_vec, b.vec)", "plans/llm_ops.py"),
+        # the exact incremental-dedup anti-join oracle (llm_ops._INCREMENTAL_ORACLE)
+        ("FROM batch b LEFT JOIN corpus c ON b.fingerprint = c.fingerprint", "plans/llm_ops.py"),
     ],
 )
 def test_shape_written_once(shape, home):

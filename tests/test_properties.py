@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -171,11 +172,12 @@ def test_duplicate_clusters_matches_union_find(spark, edges, n_nodes):
     assert got == expected
 
 
-def test_duplicate_clusters_distributed_matches_union_find(spark, cc_distributed):
+@pytest.mark.parametrize("forced", ["cc_edges"], indirect=True)
+def test_duplicate_clusters_distributed_matches_union_find(spark, forced):
     """The union-find property above, on the distributed min-label loop
     instead of the driver union-find its small graphs otherwise select."""
-    test_duplicate_clusters_matches_union_find(spark)
-    assert not cc_distributed, "the driver union-find branch ran"
+    with forced():
+        test_duplicate_clusters_matches_union_find(spark)
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))

@@ -1,5 +1,6 @@
 """Tests: kafka wire parsing, catalog DDL generation, in-engine ML scoring,
-LSH ANN recall, native session windows, range join."""
+LSH ANN recall, native session windows, range join, and the quality
+classifier's training dynamics."""
 
 from __future__ import annotations
 
@@ -19,6 +20,7 @@ from kol_bigdata_realtime_analytics_spark.operators.similarity import (
     brute_force_topk,
     lsh_topk,
 )
+from kol_bigdata_realtime_analytics_spark.plans import REGISTRY
 from kol_bigdata_realtime_analytics_spark.sources import catalog
 from kol_bigdata_realtime_analytics_spark.sources.kafka import (
     VIDEO_EVENT_SCHEMA,
@@ -379,3 +381,42 @@ def test_warcish_parser_roundtrip_and_loud_failure():
     truncated = _warcish_record_bytes(42)[:-2]  # chop payload bytes
     with _pytest.raises(ValueError, match="Content-Length"):
         _parse_warcish(truncated)
+
+
+# The quality classifier's training dynamics and ranking quality.
+
+
+def test_quality_classifier_loss_strictly_decreases(spark):
+    """Training dynamics pin: the per-round mean cross-entropy must be
+    strictly decreasing over all 8 rounds (measured 0.693 -> 0.507 at
+    sf0.001) — both engines agreeing on a diverging trajectory would
+    still be wrong."""
+    rows = REGISTRY["quality_classifier_train"].fn(spark, SF).collect()
+    losses = {}
+    for r in rows:
+        losses[r["train_round"]] = r["mean_loss_t6"]
+    seq = [losses[k] for k in sorted(losses)]
+    assert len(seq) == 8
+    assert all(b < a for a, b in zip(seq, seq[1:])), seq
+    # round 1 is the zero-model loss: ln(2) truncated
+    assert abs(seq[0] - 0.693147) < 1e-6
+
+
+def test_quality_classifier_auc_floor(spark):
+    """The trained model must actually rank quality: AUC of score_micro
+    against the heuristic label >= 0.95 (measured 0.996-0.999 across
+    SFs) and accuracy beats the base rate."""
+    rows = REGISTRY["quality_classifier_score"].fn(spark, SF).collect()
+    scores = [(r["score_micro"], r["label"]) for r in rows]
+    n = len(scores)
+    npos = sum(l for _, l in scores)
+    ranked = sorted(scores)
+    rank_sum = sum(i + 1 for i, (_, l) in enumerate(ranked) if l == 1)
+    auc = (rank_sum - npos * (npos + 1) / 2) / (npos * (n - npos))
+    assert auc >= 0.95, auc
+    # 8 light GD rounds produce a near-perfect RANKER (the AUC pin above)
+    # whose probabilities aren't yet calibrated to the 0.5 cutoff — at
+    # sf0.001 it predicts all-positive, so accuracy equals the base rate
+    # exactly; pin >= (never worse than majority), not >
+    acc = sum(1 for r in rows if r["correct"]) / n
+    assert acc >= max(npos, n - npos) / n, acc

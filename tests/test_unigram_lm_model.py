@@ -11,6 +11,7 @@ import math
 from collections import Counter
 
 import duckdb
+import pytest
 
 from kol_bigdata_realtime_analytics_spark.plans.unigram_lm import (
     _MAX_PIECE,
@@ -137,16 +138,19 @@ def test_viterbi_dp_formulation_is_optimal():
         assert best[len(w)] == min(seg_costs(0)), (w, trial)
 
 
-def test_viterbi_driver_and_distributed_paths_agree(spark, sf_small, monkeypatch):
-    """The r11 driver short-circuit must produce bit-identical
-    segmentations to the distributed loop (same candidates, same integer
-    costs, same (cost, j) tie-break) — forced by dropping the word bound
-    to 0 so the second run takes the distributed path on the same data."""
+@pytest.mark.parametrize("forced", ["unigram_words", "unigram_chars"], indirect=True)
+def test_viterbi_driver_and_distributed_paths_agree(spark, sf_small, forced):
+    """The driver short-circuit must produce bit-identical segmentations
+    to the distributed loop (same candidates, same integer costs, same
+    (cost, j) tie-break). Each bound alone sends the second run down the
+    distributed path on the same data; under the chars bound the
+    vocabulary stays under the words bound, so only chars forces it."""
     from kol_bigdata_realtime_analytics_spark.plans import unigram_lm as ul
 
     segs_drv, _ = ul._viterbi_segments(spark, sf_small)
     drv = sorted((r["w"], r["c"], r["path"]) for r in segs_drv.collect())
-    monkeypatch.setenv("SPARK_GRAFT_UNIGRAM_DRIVER_MAX_WORDS", "0")
-    segs_dist, _ = ul._viterbi_segments(spark, sf_small)
-    dist = sorted((r["w"], r["c"], r["path"]) for r in segs_dist.collect())
-    assert drv == dist and len(drv) > 0
+    assert 0 < len(drv) <= ul.UNIGRAM_DRIVER_MAX_WORDS
+    with forced():
+        segs_dist, _ = ul._viterbi_segments(spark, sf_small)
+        dist = sorted((r["w"], r["c"], r["path"]) for r in segs_dist.collect())
+    assert drv == dist
