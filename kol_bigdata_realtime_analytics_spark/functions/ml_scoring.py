@@ -149,22 +149,13 @@ class _LogisticStandIn:
         return np.stack([1.0 - p1, p1], axis=1)
 
 
-def score_with_model(
-    spark: SparkSession,
-    df: DataFrame,
-    followers: str = "followers",
-    posts: str = "posts",
-    engagement_rate: str = "engagement_rate",
-    verified: str = "verified",
-    age_days: str = "age_days",
-    ff_ratio: str = "ff_ratio",
-    model=None,
-) -> Column:
-    """General scorer: broadcast model + vectorized pandas_udf over the
-    engineered feature columns. Returns a Column to attach with .withColumn."""
+def score_with_model(spark: SparkSession, df: DataFrame) -> Column:
+    """General scorer: broadcast model (load_model) + vectorized pandas_udf
+    over the features engineered from the raw profile columns of the same
+    names. Returns a Column to attach with .withColumn."""
     from pyspark.sql.functions import pandas_udf
 
-    bc = spark.sparkContext.broadcast(model if model is not None else load_model())
+    bc = spark.sparkContext.broadcast(load_model())
     names = [name for name, _ in TRUST_MODEL["weights"]]
 
     # features ride in ONE struct column so the udf arity is independent of
@@ -176,15 +167,7 @@ def score_with_model(
         X = np.stack([feats[n].to_numpy(dtype="float64") for n in names], axis=1)
         return pd.Series(bc.value.predict_proba(X)[:, 1] * 100.0)
 
-    feats = _features(
-        {
-            "followers": F.col(followers),
-            "posts": F.col(posts),
-            "engagement_rate": F.col(engagement_rate),
-            "verified": F.col(verified),
-            "age_days": F.col(age_days),
-            "ff_ratio": F.col(ff_ratio),
-        }
-    )
+    raw = ("followers", "posts", "engagement_rate", "verified", "age_days", "ff_ratio")
+    feats = _features({c: F.col(c) for c in raw})
     packed = F.struct(*[feats[n].alias(n) for n in names])
     return _score(packed)

@@ -25,9 +25,9 @@ def build_dim_platform(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(PLATFORMS, "platform_key int, platform_name string, platform_type string")
 
 
-def platform_key_expr(platform_col: str = "platform"):
+def platform_key_expr():
     """FK derivation when-chain (ref :419-435)."""
-    c = F.col(platform_col)
+    c = F.col("platform")
     expr = F.lit(None).cast("int")
     for key, name, _ in reversed(PLATFORMS):
         expr = F.when(c == name, key).otherwise(expr)
@@ -134,7 +134,7 @@ def build_fact_performance(content: DataFrame, dim_kol: DataFrame) -> DataFrame:
         .select(
             "content_id",
             "kol_key",
-            platform_key_expr("platform").alias("platform_key"),
+            platform_key_expr().alias("platform_key"),
             F.date_format(F.to_date("published_at"), "yyyyMMdd").cast("int").alias("date_key"),
             "views",
             "likes",
@@ -183,10 +183,7 @@ def latest_per_key(
 
 
 def sold_deltas(
-    timeseries: DataFrame,
-    key_col: str = "product_id",
-    value_col: str = "sold_count",
-    order_cols: tuple[str, ...] = ("scraped_at",),
+    timeseries: DataFrame, order_cols: tuple[str, ...] = ("scraped_at",)
 ) -> DataFrame:
     """Append-only sold-count timeseries -> per-observation sold_delta.
 
@@ -197,8 +194,8 @@ def sold_deltas(
     (key ORDER BY time): distributed, no collect, and the whole history's
     deltas come out of the same pass. First observation per key gets
     delta 0 (matching the reference's missing-cache default)."""
-    w = Window.partitionBy(key_col).orderBy(*[F.col(c).asc() for c in order_cols])
-    prev = F.lag(value_col).over(w)
+    w = Window.partitionBy("product_id").orderBy(*[F.col(c).asc() for c in order_cols])
+    prev = F.lag("sold_count").over(w)
     return timeseries.withColumn(
-        "sold_delta", F.col(value_col) - F.coalesce(prev, F.col(value_col))
+        "sold_delta", F.col("sold_count") - F.coalesce(prev, F.col("sold_count"))
     )

@@ -7,8 +7,7 @@ Two implementations with the same contract:
   shuffle per side on the key; correct everywhere, but the intermediate is
   O(per-key matches) — every left row pairs with EVERY earlier right row
   for its key before the dedup window keeps one. Use `left_unique` to slim
-  the dedup window partition to the left row's unique id, and `lookback`
-  to bound the fan-out when the semantics allow it.
+  the dedup window partition to the left row's unique id.
 - `as_of_join_pandas`: cogrouped applyInPandas with pd.merge_asof per key
   group — Arrow-batched, linear after the per-key sort, the scale path
   (registered for `asof_last_event_before_order`; r3 flagged the composed
@@ -30,16 +29,12 @@ def as_of_join(
     right_ts: str,
     right_cols: list[str],
     left_unique: list[str] | None = None,
-    lookback: Column | None = None,
 ) -> DataFrame:
     """Left as-of join (backward): latest right row with right_ts <= left_ts.
 
     left_unique: columns that uniquely identify a left row — the keep-latest
     window partitions on them alone (partitioning on every left column forces
     a wider sort key for zero extra correctness). Defaults to all left columns.
-    lookback: optional interval Column (e.g. F.expr("INTERVAL 90 DAYS")); when
-    given, only right rows with right_ts > left_ts - lookback match — bounds
-    the per-key fan-out at the cost of missing older-than-lookback rows.
     """
     r = right.select(
         F.col(key).alias("_r_key"),
@@ -47,8 +42,6 @@ def as_of_join(
         *[F.col(c) for c in right_cols],
     )
     cond = (left[key] == r["_r_key"]) & (r["_r_ts"] <= left[left_ts])
-    if lookback is not None:
-        cond = cond & (r["_r_ts"] > left[left_ts] - lookback)
     joined = left.join(r, cond, "left")
     part = [left[c] for c in (left_unique or left.columns)]
     w = Window.partitionBy(*part).orderBy(F.col("_r_ts").desc())

@@ -31,28 +31,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Default sizing: m = 2^20 bits (128 KiB bitmap), k = 5 hash functions.
+# Sizing: m = 2^20 bits (128 KiB bitmap), k = 5 hash functions.
 # FP rate ~ (1 - e^{-kn/m})^k: ~1e-4 at n=10k keys, ~2% at n=100k. For a
-# real index of n keys pick m ~ 10-15 bits/key; m is a parameter, the
-# bitmap table stays a broadcast-sized m/64 rows.
+# real index of n keys pick m ~ 10-15 bits/key; the bitmap table stays a
+# broadcast-sized m/64 rows.
 DEFAULT_M_BITS = 1 << 20
-DEFAULT_K = 5
+N_HASHES = 5
 
 
-def _positions(col, m_bits: int, k: int):
+def _positions(col, m_bits: int):
     """k bit positions for a key: pmod(xxhash64(key, seed), m)."""
-    return [F.pmod(F.xxhash64(col, F.lit(seed)), F.lit(m_bits)) for seed in range(k)]
+    return [F.pmod(F.xxhash64(col, F.lit(seed)), F.lit(m_bits)) for seed in range(N_HASHES)]
 
 
-def bloom_bitmap(
-    keys: DataFrame, key_col: str, m_bits: int = DEFAULT_M_BITS, k: int = DEFAULT_K
-) -> DataFrame:
+def bloom_bitmap(keys: DataFrame, key_col: str, m_bits: int = DEFAULT_M_BITS) -> DataFrame:
     """(word, bits) bitmap table for the key set: word = pos >> 6, bits =
     bit_or of (1 << (pos & 63)). At most m_bits/64 rows — broadcastable at
     any key count; build cost is one narrow groupBy over k rows per key."""
     pos = (
         keys.select(
-            F.explode(F.array(*_positions(F.col(key_col), m_bits, k))).alias("pos")
+            F.explode(F.array(*_positions(F.col(key_col), m_bits))).alias("pos")
         )
     )
     return (
@@ -66,15 +64,8 @@ def bloom_bitmap(
     )
 
 
-def with_bloom_maybe(
-    df: DataFrame,
-    key_col: str,
-    bitmap: DataFrame,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-    out_col: str = "bloom_maybe",
-) -> DataFrame:
-    """df + boolean `out_col`: True iff all k bits for df[key_col] are set
+def with_bloom_maybe(df: DataFrame, key_col: str, bitmap: DataFrame) -> DataFrame:
+    """df + boolean `bloom_maybe`: True iff all k bits for df[key_col] are set
     in the bitmap (key MAYBE in the set); False => key definitely absent.
 
     Plan shape: k scalar bit tests per row, each a broadcast hash join of
@@ -88,7 +79,7 @@ def with_bloom_maybe(
     bitmap = bitmap.localCheckpoint(eager=True)
     out = df
     tests = []
-    for i, pos in enumerate(_positions(F.col(key_col), m_bits, k)):
+    for i, pos in enumerate(_positions(F.col(key_col), DEFAULT_M_BITS)):
         bm = bitmap.select(
             F.col("word").alias(f"_bw{i}"), F.col("bits").alias(f"_bb{i}")
         )
@@ -106,17 +97,11 @@ def with_bloom_maybe(
     cond = tests[0]
     for t in tests[1:]:
         cond = cond & t
-    drop = [c for i in range(k) for c in (f"_bp{i}", f"_bw{i}", f"_bb{i}")]
-    return out.withColumn(out_col, cond).drop(*drop)
+    drop = [c for i in range(N_HASHES) for c in (f"_bp{i}", f"_bw{i}", f"_bb{i}")]
+    return out.withColumn("bloom_maybe", cond).drop(*drop)
 
 
-def bloom_anti_join(
-    batch: DataFrame,
-    index: DataFrame,
-    key_col: str,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
+def bloom_anti_join(batch: DataFrame, index: DataFrame, key_col: str) -> DataFrame:
     """batch rows whose key_col is NOT in index[key_col] — same result as
     `batch.join(index, key_col, "left_anti")`, but only the bloom-maybe
     fraction of the batch reaches the anti-join exchange; definite-new rows
@@ -127,8 +112,7 @@ def bloom_anti_join(
     scan is expensive. Exactness: no false
     negatives (definite-new is sound), and false positives are removed by
     the exact anti-join on the survivors."""
-    flagged = with_bloom_maybe(batch, key_col, bloom_bitmap(index, key_col, m_bits, k),
-                               m_bits, k)
+    flagged = with_bloom_maybe(batch, key_col, bloom_bitmap(index, key_col))
     definite_new = flagged.filter(~F.col("bloom_maybe")).drop("bloom_maybe")
     maybe = flagged.filter(F.col("bloom_maybe")).drop("bloom_maybe")
     # no distinct() on the index: anti-join semantics ignore duplicate

@@ -34,6 +34,12 @@ from kol_bigdata_realtime_analytics_spark.functions.text import doc_fingerprint_
 #: so the truncation is visible, never silent.
 DEFAULT_MAX_BUCKET = 10_000
 
+#: The MinHash family's shape (native and portable): hash lanes per
+#: signature, LSH bands (NUM_HASHES / BANDS rows each) and shingle width.
+NUM_HASHES = 32
+BANDS = 8
+SHINGLE_N = 3
+
 
 def exact_dedup_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Group identical (normalized) texts: fingerprint, keep_id = min(id), n_copies.
@@ -117,68 +123,55 @@ def shingle_hash_rows(
     )
 
 
-def minhash_signature_frame(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    shingle_n: int = 3,
-) -> DataFrame:
+def minhash_signature_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id_col, sig: array<long>) via the codegen'd shingle-hash path.
 
-    Classic MinHash family: per doc, min over its shingles of num_hashes
+    Classic MinHash family: per doc, min over its shingles of NUM_HASHES
     independent seeded hashes — the lane-agreement fraction of two
     signatures estimates their shingle-set Jaccard. This is the ONLY
     signature builder: shingle_hash_rows never materializes shingle
-    strings and the num_hashes min-aggregations run inside whole-stage
+    strings and the NUM_HASHES min-aggregations run inside whole-stage
     codegen with map-side combine. (An array-lambda Column form existed
     and was removed: HOF lambdas evaluate interpreted per shingle —
     PERF.md §2.1 — and the 8x scale audit caught the invariant check
     still on it, never finishing 40k docs; this shape signs them in
     seconds.)
 
-    Docs with fewer than shingle_n tokens emit no shingles and are absent
+    Docs with fewer than SHINGLE_N tokens emit no shingles and are absent
     from the output (minhash of an empty set is undefined) — filter or
     left-join accordingly.
     """
-    shingled = shingle_hash_rows(df, text_col, id_col, shingle_n)
+    shingled = shingle_hash_rows(df, text_col, id_col, SHINGLE_N)
     hashed = shingled.select(
-        "doc", *[F.xxhash64("h", F.lit(i)).alias(f"h{i}") for i in range(num_hashes)]
+        "doc", *[F.xxhash64("h", F.lit(i)).alias(f"h{i}") for i in range(NUM_HASHES)]
     )
     sig = hashed.groupBy("doc").agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
+        *[F.min(f"h{i}").alias(f"h{i}") for i in range(NUM_HASHES)]
     )
     return sig.select(
         F.col("doc").alias(id_col),
-        F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"),
+        F.array(*[f"h{i}" for i in range(NUM_HASHES)]).alias("sig"),
     )
 
 
-def _minhash_banded(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
+def _minhash_banded(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(doc, band, bucket) rows: banded MinHash signatures, one per doc/band."""
-    rows_per_band = num_hashes // bands
+    rows_per_band = NUM_HASHES // BANDS
     # Signatures via shingle-hash rows + flat hash columns + groupBy(min),
     # NOT an array-lambda Column form: higher-order-function
     # lambdas evaluate interpreted, outside whole-stage codegen — measured
     # ~5x slower than this shape, where shingle hashing (shingle_hash_rows,
-    # no shingle strings), all num_hashes xxhash64 columns, and the partial
+    # no shingle strings), all NUM_HASHES xxhash64 columns, and the partial
     # min-aggregation are fully codegen'd. min over a shingle MULTISET equals
     # min over the set, so occurrence rows need no dedup. The doc-key shuffle
-    # moves only one num_hashes-wide row per doc per partition (map-side
+    # moves only one NUM_HASHES-wide row per doc per partition (map-side
     # combine).
-    shingled = shingle_hash_rows(df, text_col, id_col, shingle_n)
+    shingled = shingle_hash_rows(df, text_col, id_col, SHINGLE_N)
     hashed = shingled.select(
-        "doc", *[F.xxhash64("h", F.lit(i)).alias(f"h{i}") for i in range(num_hashes)]
+        "doc", *[F.xxhash64("h", F.lit(i)).alias(f"h{i}") for i in range(NUM_HASHES)]
     )
     sig = hashed.groupBy("doc").agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
+        *[F.min(f"h{i}").alias(f"h{i}") for i in range(NUM_HASHES)]
     )
     # band buckets as flat columns too: band b = xxhash64 over its row slice
     return sig.select(
@@ -192,7 +185,7 @@ def _minhash_banded(
                             *[F.col(f"h{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
                         ).alias("bucket"),
                     )
-                    for b in range(bands)
+                    for b in range(BANDS)
                 ]
             )
         ).alias("bb"),
@@ -230,17 +223,11 @@ def _bucket_pairs(
 
 
 def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
+    df: DataFrame, text_col: str, id_col: str, max_bucket: int = DEFAULT_MAX_BUCKET
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via banded MinHash LSH.
 
-    rows_per_band = num_hashes / bands; two docs collide if ANY band of their
+    rows_per_band = NUM_HASHES / BANDS; two docs collide if ANY band of their
     signatures matches exactly. The bucket join shuffles (band_idx, band_hash)
     — tiny keys — then pairs generate within buckets only.
 
@@ -256,7 +243,7 @@ def minhash_lsh_candidates(
     minhash_lsh_skipped_buckets with the same arguments to see exactly what
     was skipped and how big it was.
     """
-    banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n)
+    banded = _minhash_banded(df, text_col, id_col)
     return (
         _bucket_pairs(banded, ["band", "bucket"], F.col("doc"), max_bucket)
         .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
@@ -265,13 +252,7 @@ def minhash_lsh_candidates(
 
 
 def minhash_lsh_skipped_buckets(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
+    df: DataFrame, text_col: str, id_col: str, max_bucket: int = DEFAULT_MAX_BUCKET
 ) -> DataFrame:
     """(band, bucket, bucket_n) for every bucket the candidate join skipped.
 
@@ -279,7 +260,7 @@ def minhash_lsh_skipped_buckets(
     minhash_lsh_candidates (same args) to count/audit truncation. Plain
     count aggregation — no lists materialize regardless of bucket size.
     """
-    banded = _minhash_banded(df, text_col, id_col, num_hashes, bands, shingle_n)
+    banded = _minhash_banded(df, text_col, id_col)
     return (
         banded.groupBy("band", "bucket")
         .agg(F.count("*").alias("bucket_n"))
@@ -325,7 +306,6 @@ def duplicate_clusters(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "doc_id",
-    max_iterations: int = 25,
 ) -> DataFrame:
     """Near-dup PAIRS -> duplicate CLUSTERS: connected components + canonical.
 
@@ -486,7 +466,7 @@ def duplicate_clusters(
         F.count("*").alias("n"),
     ).collect()[0]
     label_state = (row0["s"], row0["n"])
-    for _ in range(max_iterations if label_state[0] is not None else 0):
+    for _ in range(25 if label_state[0] is not None else 0):  # round budget
         new_labels = _cc_round(sym, labels).localCheckpoint(eager=False)
         row = new_labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
@@ -848,13 +828,13 @@ def simhash_skipped_buckets(
 HASH52_MOD = 1 << 52
 
 
-def minhash_lane_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
+def minhash_lane_params(num_hashes: int) -> list[tuple[int, int]]:
     """Literal (a, b) pairs for the universal-hash lanes l_i = (a_i*h + b_i)
     mod 2^52. Same LCG discipline as _seeded_planes: pure-Python, seeded,
     reproducible anywhere, embedded as literals in BOTH engines. `a` is odd
     and < 2^11 so a*h + b < 2^63 — no BIGINT overflow in either engine
     (DuckDB raises on overflow; Spark would silently wrap)."""
-    state = seed
+    state = 7  # the LCG seed
     out = []
     for _ in range(num_hashes):
         state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
@@ -872,14 +852,7 @@ def _hash52_col(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 13), 16, 10).cast("long")
 
 
-def minhash_portable_banded(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
+def minhash_portable_banded(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(doc, band, bucket) rows from the PORTABLE MinHash family.
 
     Pipeline (each step oracle-derivable):
@@ -891,29 +864,29 @@ def minhash_portable_banded(
 
     Same scale shape as _minhash_banded: shingles never materialize as
     strings (only the n token-hash longs ride the lead() window), the
-    num_hashes min-aggregations run codegen'd with map-side combine, and
-    the doc-key shuffle moves one num_hashes-wide row per doc/partition.
+    NUM_HASHES min-aggregations run codegen'd with map-side combine, and
+    the doc-key shuffle moves one NUM_HASHES-wide row per doc/partition.
     """
     from pyspark.sql.window import Window
 
-    rows_per_band = num_hashes // bands
-    lanes = minhash_lane_params(num_hashes)
+    rows_per_band = NUM_HASHES // BANDS
+    lanes = minhash_lane_params(NUM_HASHES)
     tok = df.select(
         F.col(id_col).alias("doc"),
         F.posexplode(tokens(F.col(text_col))).alias("pos", "t"),
     ).select("doc", "pos", _hash52_col(F.col("t")).alias("g0"))
     w = Window.partitionBy("doc").orderBy("pos")
     gcols = [F.col("g0")] + [
-        F.lead("g0", i).over(w).alias(f"g{i}") for i in range(1, shingle_n)
+        F.lead("g0", i).over(w).alias(f"g{i}") for i in range(1, SHINGLE_N)
     ]
     sh = (
         tok.select("doc", *gcols)
-        .filter(F.col(f"g{shingle_n - 1}").isNotNull())
+        .filter(F.col(f"g{SHINGLE_N - 1}").isNotNull())
         .select(
             "doc",
             _hash52_col(
                 F.concat_ws(
-                    "|", *[F.col(f"g{i}").cast("string") for i in range(shingle_n)]
+                    "|", *[F.col(f"g{i}").cast("string") for i in range(SHINGLE_N)]
                 )
             ).alias("hs"),
         )
@@ -925,7 +898,7 @@ def minhash_portable_banded(
     sig = (
         sh.select("doc", *lane_cols)
         .groupBy("doc")
-        .agg(*[F.min(f"l{i}").alias(f"l{i}") for i in range(num_hashes)])
+        .agg(*[F.min(f"l{i}").alias(f"l{i}") for i in range(NUM_HASHES)])
     )
     return sig.select(
         "doc",
@@ -946,33 +919,23 @@ def minhash_portable_banded(
                             )
                         ).alias("bucket"),
                     )
-                    for b in range(bands)
+                    for b in range(BANDS)
                 ]
             )
         ).alias("bb"),
     ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
-def minhash_lsh_candidates_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
+def minhash_lsh_candidates_portable(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Banded MinHash-LSH candidate pairs (id_a < id_b), portable family.
 
     Identical candidate semantics and scale shape to minhash_lsh_candidates
-    (one groupBy on the bucket key, in-bucket pair expansion, max_bucket
-    guard) — only the hash family differs, which is what lets a DuckDB
-    oracle re-derive the full pair set for a value-hash check."""
-    banded = minhash_portable_banded(
-        df, text_col, id_col, num_hashes, bands, shingle_n
-    )
+    (one groupBy on the bucket key, in-bucket pair expansion,
+    DEFAULT_MAX_BUCKET guard) — only the hash family differs, which is what
+    lets a DuckDB oracle re-derive the full pair set for a value-hash check."""
+    banded = minhash_portable_banded(df, text_col, id_col)
     return (
-        _bucket_pairs(banded, ["band", "bucket"], F.col("doc"), max_bucket)
+        _bucket_pairs(banded, ["band", "bucket"], F.col("doc"), DEFAULT_MAX_BUCKET)
         .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
         .distinct()
     )
@@ -1019,14 +982,8 @@ def simhash_portable_signature(df: DataFrame, text_col: str, id_col: str) -> Dat
     return votes.select("doc", packed.cast("long").alias("sim"))
 
 
-def simhash_neardup_pairs_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """SimHash near-dup pairs (hamming <= max_hamming), portable family.
+def simhash_neardup_pairs_portable(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """SimHash near-dup pairs (hamming <= 3), portable family.
 
     4 x 13-bit chunk banding over the 52-bit portable signature; pair
     generation, hot-bucket guard, and the hamming-before-distinct ordering
@@ -1043,13 +1000,13 @@ def simhash_neardup_pairs_portable(
     )
     return (
         _bucket_pairs(
-            banded, ["chunk_idx", "chunk"], F.struct("doc", "sim"), max_bucket
+            banded, ["chunk_idx", "chunk"], F.struct("doc", "sim"), DEFAULT_MAX_BUCKET
         )
         .select(
             F.col("p.a.doc").alias("id_a"),
             F.col("p.b.doc").alias("id_b"),
             hamming64(F.col("p.a.sim"), F.col("p.b.sim")).cast("long").alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .distinct()
     )

@@ -20,14 +20,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: PageRank damping: a float for pagerank, the rational 17/20 for the
+#: exact-integer forms.
+DAMPING = 0.85
+DAMPING_NUM, DAMPING_DEN = 17, 20
+#: Rounds of pagerank and of the residual certificate.
+PR_ROUNDS = 10
+#: Largest node count whose per-round rank/label vector is broadcast
+#: (~16 bytes/node, ≈ 80 MB); above it the joins co-shuffle instead.
+BROADCAST_NODE_LIMIT = 5_000_000
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    n_iter: int = 10,
-) -> DataFrame:
-    """Weighted PageRank over an edge list (src, dst, weight), fixed
-    iteration count.
+
+def pagerank(edges: DataFrame) -> DataFrame:
+    """Weighted PageRank over an edge list (src, dst, weight), PR_ROUNDS
+    fixed rounds, damping DAMPING.
 
     Out-edge weights are normalized per src once up front; each round every
     node distributes `damping * rank` along its normalized out-edges and
@@ -35,7 +41,7 @@ def pagerank(
     (no out-edges) leak their damped mass — the standard simplification;
     ranks still order influence, which is what the leaderboard consumes.
 
-    Fixed n_iter (no convergence probe): rank deltas shrink geometrically
+    Fixed round count (no convergence probe): rank deltas shrink geometrically
     (damping^k), so 10 rounds give ~2 decimal digits more precision than
     any downstream trunc6 needs, and a fixed loop keeps the job graph
     identical run to run.
@@ -63,7 +69,7 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
-    base = (1.0 - damping) / n
+    base = (1.0 - DAMPING) / n
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     # ranks is O(nodes) — orders of magnitude smaller than edges — so it
     # broadcasts and the edge list NEVER shuffles inside the loop; only the
@@ -71,7 +77,7 @@ def pagerank(
     # node set exceeds executor memory, drop the hints and bucket both
     # edges and ranks by key instead (co-partitioned SMJ, zero edge
     # shuffle per round all the same).
-    for _ in range(n_iter):
+    for _ in range(PR_ROUNDS):
         contribs = norm.join(
             F.broadcast(ranks), norm["src"] == ranks["node"]
         ).select(F.col("dst").alias("node"), (F.col("p") * F.col("rank")).alias("c"))
@@ -83,7 +89,7 @@ def pagerank(
             )
             .select(
                 "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))).alias(
+                (F.lit(base) + F.lit(DAMPING) * F.coalesce(F.col("c"), F.lit(0.0))).alias(
                     "rank"
                 ),
             )
@@ -97,22 +103,17 @@ PAGERANK_SCALE = 10**12
 
 
 def pagerank_fixedpoint(
-    edges: DataFrame,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    n_iter: int = 10,
-    broadcast_ranks: bool | None = None,
-    broadcast_node_limit: int = 5_000_000,
+    edges: DataFrame, n_iter: int = PR_ROUNDS, broadcast_ranks: bool | None = None
 ) -> DataFrame:
     """PageRank with EXACT integer arithmetic — bit-identical on any engine
     and any summation order, so an external SQL oracle can hash-match it
     (the float variant above is reproducible only to summation order).
 
     Rank mass is carried as long micro-units (PAGERANK_SCALE = 1e12 == rank
-    1.0); damping is the rational damping_num/damping_den (17/20 = 0.85).
+    1.0); damping is the rational DAMPING_NUM/DAMPING_DEN (17/20 = 0.85).
     Each round, per edge: contrib = (rank_src * weight) div out_w (floor
     division — weights must be INTEGER, e.g. interaction counts), then
-    rank' = (1-d)*SCALE div N + (damping_num * sum(contribs)) div damping_den.
+    rank' = (1-d)*SCALE div N + (DAMPING_NUM * sum(contribs)) div DAMPING_DEN.
     Long sums of longs are exact and order-independent — the same
     determinism idiom as the DECIMAL moment sums in correlation_qty_price.
 
@@ -127,22 +128,20 @@ def pagerank_fixedpoint(
 
     Join strategy (r3 advice): the per-iteration rank vector and contribution
     aggregate are BROADCAST only while |nodes| fits a broadcast (~16 bytes/
-    node; the default threshold 5e6 nodes ≈ 80 MB). Above that the same
+    node; BROADCAST_NODE_LIMIT = 5e6 nodes ≈ 80 MB). Above that the same
     joins run as hash-shuffle joins — edges are checkpointed once and
     co-shuffle on src/node each round instead, trading per-round exchanges
     for unbounded node counts. Override with broadcast_ranks=True/False.
 
     Returns (node, rank_fp: long).
     """
-    norm, nodes, ranks, base_fp, bc = _pr_setup(
-        edges, damping_num, damping_den, broadcast_ranks, broadcast_node_limit
-    )
+    norm, nodes, ranks, base_fp, bc = _pr_setup(edges, broadcast_ranks)
     for _ in range(n_iter):
-        ranks = _pr_round(norm, nodes, ranks, base_fp, damping_num, damping_den, bc)
+        ranks = _pr_round(norm, nodes, ranks, base_fp, bc)
     return ranks
 
 
-def _pr_setup(edges, damping_num, damping_den, broadcast_ranks, broadcast_node_limit):
+def _pr_setup(edges, broadcast_ranks):
     """The pagerank_fixedpoint preamble, shared with the residual
     certificate: pinned normalized edges (src, dst, weight, out_w), pinned
     node set, the unpinned initial rank frame, the base mass and the
@@ -160,14 +159,14 @@ def _pr_setup(edges, damping_num, damping_den, broadcast_ranks, broadcast_node_l
     )
     n = nodes.count()
     if broadcast_ranks is None:
-        broadcast_ranks = n <= broadcast_node_limit
+        broadcast_ranks = n <= BROADCAST_NODE_LIMIT
     bc = F.broadcast if broadcast_ranks else (lambda df: df)
-    base_fp = ((damping_den - damping_num) * PAGERANK_SCALE) // (damping_den * n)
+    base_fp = ((DAMPING_DEN - DAMPING_NUM) * PAGERANK_SCALE) // (DAMPING_DEN * n)
     ranks = nodes.select("node", F.lit(PAGERANK_SCALE // n).cast("long").alias("rank_fp"))
     return norm, nodes, ranks, base_fp, bc
 
 
-def _pr_round(norm, nodes, ranks, base_fp, damping_num, damping_den, bc):
+def _pr_round(norm, nodes, ranks, base_fp, bc):
     """One exact-integer PageRank round (the pagerank_fixedpoint body),
     checkpointed — the residual certificate calls it too, so it measures
     the shipped operator's dynamics by construction."""
@@ -187,34 +186,25 @@ def _pr_round(norm, nodes, ranks, base_fp, damping_num, damping_den, bc):
             "node",
             (
                 F.lit(base_fp)
-                + F.expr(f"({damping_num} * coalesce(c, 0L)) div {damping_den}")
+                + F.expr(f"({DAMPING_NUM} * coalesce(c, 0L)) div {DAMPING_DEN}")
             ).cast("long").alias("rank_fp"),
         )
         .localCheckpoint(eager=True)
     )
 
 
-def pagerank_fixedpoint_residuals(
-    edges: DataFrame,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    n_iter: int = 10,
-    broadcast_ranks: bool | None = None,
-    broadcast_node_limit: int = 5_000_000,
-) -> DataFrame:
-    """(round, l1_delta_units, converged) per round: runs the
+def pagerank_fixedpoint_residuals(edges: DataFrame) -> DataFrame:
+    """(round, l1_delta_units, converged) per round 1..PR_ROUNDS: runs the
     pagerank_fixedpoint loop itself (its _pr_setup and _pr_round) and emits
     each round's total integer rank movement sum(|r_k - r_{k-1}|) — exact
     long sums of longs, so the whole convergence trajectory is hashable.
     converged = (l1_delta_units = 0): integer dynamics make the fixpoint
     a literal no-op, not a tolerance."""
-    norm, nodes, ranks, base_fp, bc = _pr_setup(
-        edges, damping_num, damping_den, broadcast_ranks, broadcast_node_limit
-    )
+    norm, nodes, ranks, base_fp, bc = _pr_setup(edges, None)
     ranks = ranks.localCheckpoint(eager=True)
     out = None
-    for r in range(1, n_iter + 1):
-        nxt = _pr_round(norm, nodes, ranks, base_fp, damping_num, damping_den, bc)
+    for r in range(1, PR_ROUNDS + 1):
+        nxt = _pr_round(norm, nodes, ranks, base_fp, bc)
         delta = (
             nxt.join(
                 ranks.select(
@@ -426,8 +416,8 @@ def oversized_baskets(
     )
 
 
-def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Global triangle count over an undirected edge list.
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Global triangle count over an undirected edge list (src, dst).
 
     Degree-oriented enumeration (the MapReduce-classic trick): orient every
     undirected edge from the LOWER-(degree, id) endpoint to the higher, so
@@ -466,8 +456,8 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     """
     und = (
         edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
+            F.least(F.col("src"), F.col("dst")).alias("a"),
+            F.greatest(F.col("src"), F.col("dst")).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -681,9 +671,7 @@ def _lpa_round(e: DataFrame, labels: DataFrame, bc) -> DataFrame:
     )
 
 
-def label_propagation(
-    edges: DataFrame, n_rounds: int, broadcast_node_limit: int = 5_000_000
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_rounds: int) -> DataFrame:
     """Deterministic label propagation over a DIRECTED edge list (src, dst):
     labels start as node ids; each round every node adopts the most
     frequent label among its in-neighbors (count desc, label asc
@@ -704,11 +692,11 @@ def label_propagation(
     src ∪ dst, so sink-only nodes are initialized too."""
     e = _long_edges(edges).localCheckpoint(eager=False)
     labels = _lpa_init(e).localCheckpoint(eager=True)
-    # labels are O(nodes): while they fit a broadcast (~16 bytes/node —
-    # the pagerank_fixedpoint threshold), ship them to the edge partitions
-    # so the edge list never shuffles inside the loop; above the limit the
-    # hint is dropped and both sides co-shuffle (r11 opt, guide §3.1)
-    bc = F.broadcast if labels.count() <= broadcast_node_limit else (lambda df: df)
+    # labels are O(nodes): while they fit a broadcast, ship them to the
+    # edge partitions so the edge list never shuffles inside the loop;
+    # above the limit the hint is dropped and both sides co-shuffle (r11
+    # opt, guide §3.1)
+    bc = F.broadcast if labels.count() <= BROADCAST_NODE_LIMIT else (lambda df: df)
     # TWO rounds per pinned frame (r12 opt, the bfs_layers fold): the
     # intermediate round's label frame is lazily checkpoint-MARKED, so the
     # next round's vote join and carry join share one computation inside

@@ -33,16 +33,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: A changelog's op column and its two ops.
+OP_COL = "op"
+UPSERT = "U"
+DELETE = "D"
+
 
 def merge_changelog(
     base: DataFrame,
     delta: DataFrame,
     key: str,
-    op_col: str = "op",
-    upsert_op: str = "U",
-    delete_op: str = "D",
     broadcast_delta: bool = True,
-    validate_unique_keys: bool = True,
 ) -> DataFrame:
     """Apply ``delta`` (key + op + full payload columns) onto ``base``.
 
@@ -56,52 +57,46 @@ def merge_changelog(
     ``delta`` must carry the same payload columns as ``base`` (values for
     delete rows are ignored) and AT MOST ONE ROW PER KEY — like Delta/
     Iceberg MERGE INTO, which raise on multiple source matches, a
-    duplicate-key delta is rejected (``validate_unique_keys``): silently
-    joining it would multiply matched base rows and make the outcome
-    order-dependent. NOTE: this validation is an EAGER Spark action at call
-    time (a groupBy+limit(5).collect over the DELTA side only — never the
-    base) — plan construction is no longer fully lazy when it is on. Pass
-    ``validate_unique_keys=False`` for a purely lazy plan if the delta's
-    key-uniqueness is already guaranteed upstream.
+    duplicate-key delta is rejected: silently joining it would multiply
+    matched base rows and make the outcome order-dependent. NOTE: this
+    validation is an EAGER Spark action at call time (a
+    groupBy+limit(5).collect over the DELTA side only — never the base).
     Squash a multi-op CDC stream to its latest op per key upstream.
     Output schema = base schema + ``merge_action`` (carry|update|insert)
     so callers can audit what the merge did.
     """
-    if validate_unique_keys:
-        dup = (
-            delta.groupBy(key).count().filter(F.col("count") > 1).limit(5).collect()
+    dup = delta.groupBy(key).count().filter(F.col("count") > 1).limit(5).collect()
+    if dup:
+        raise ValueError(
+            f"delta has multiple rows for key(s) {[r[key] for r in dup]}; "
+            "MERGE requires at most one source row per key — squash the "
+            "changelog to its latest op per key first"
         )
-        if dup:
-            raise ValueError(
-                f"delta has multiple rows for key(s) {[r[key] for r in dup]}; "
-                "MERGE requires at most one source row per key — squash the "
-                "changelog to its latest op per key first"
-            )
     payload = [c for c in base.columns if c != key]
     d = delta.select(
         F.col(key),
-        F.col(op_col).alias("__op"),
+        F.col(OP_COL).alias("__op"),
         *[F.col(c).alias(f"__new_{c}") for c in payload],
     )
     d_b = F.broadcast(d) if broadcast_delta else d
 
     matched = base.join(d_b, key, "left")
     survivors = matched.filter(
-        F.col("__op").isNull() | (F.col("__op") != F.lit(delete_op))
+        F.col("__op").isNull() | (F.col("__op") != F.lit(DELETE))
     ).select(
         F.col(key),
         *[
-            F.when(F.col("__op") == upsert_op, F.col(f"__new_{c}"))
+            F.when(F.col("__op") == UPSERT, F.col(f"__new_{c}"))
             .otherwise(F.col(c))
             .alias(c)
             for c in payload
         ],
-        F.when(F.col("__op") == upsert_op, F.lit("update"))
+        F.when(F.col("__op") == UPSERT, F.lit("update"))
         .otherwise(F.lit("carry"))
         .alias("merge_action"),
     )
 
-    upserts = delta.filter(F.col(op_col) == upsert_op)
+    upserts = delta.filter(F.col(OP_COL) == UPSERT)
     if broadcast_delta:
         # Inserts = upserts whose key is NOT in base. Deriving the present
         # set from `matched` would re-execute the full-width base scan for
@@ -137,7 +132,7 @@ def changelog_from_snapshots(
     return (
         j.filter(F.col("__new_fp").isNull() | (~F.col("__new_fp").eqNullSafe(F.col("__old_fp"))))
         .withColumn(
-            "op", F.when(F.col("__new_fp").isNull(), F.lit("D")).otherwise(F.lit("U"))
+            OP_COL, F.when(F.col("__new_fp").isNull(), F.lit(DELETE)).otherwise(F.lit(UPSERT))
         )
         .drop("__old_fp", "__new_fp")
     )

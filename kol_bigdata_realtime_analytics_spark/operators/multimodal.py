@@ -153,6 +153,8 @@ def decode_features(df: DataFrame, codec: str = "auto") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 RESIZE_SCHEMA = "doc_id long, out_len long, width long, height long"
+#: resize_images' output width and height, in pixels.
+_RESIZE_PX = 64
 
 
 def _resize_stub(target_w: int, target_h: int):
@@ -207,15 +209,13 @@ def _resize_real(target_w: int, target_h: int):
     return fn
 
 
-def resize_images(
-    df: DataFrame, target_w: int = 64, target_h: int = 64, codec: str = "auto"
-) -> DataFrame:
+def resize_images(df: DataFrame, codec: str = "auto") -> DataFrame:
     """Arrow-batched resize over (doc_id, payload) rows."""
     fn = _choose(
         codec,
         _pil_available(),
-        _resize_real(target_w, target_h),
-        _resize_stub(target_w, target_h),
+        _resize_real(_RESIZE_PX, _RESIZE_PX),
+        _resize_stub(_RESIZE_PX, _RESIZE_PX),
     )
     par = df.sparkSession.sparkContext.defaultParallelism
     return (
@@ -230,6 +230,8 @@ def resize_images(
 # ---------------------------------------------------------------------------
 
 FRAME_SCHEMA = "doc_id long, frame_idx long, frame_len long"
+#: sample_frames keeps every _FRAME_EVERY-th frame.
+_FRAME_EVERY = 4
 
 
 def _frame_sample_stub(every_n: int):
@@ -294,10 +296,10 @@ def _frame_sample_real(every_n: int):
     return fn
 
 
-def sample_frames(df: DataFrame, every_n: int = 4, codec: str = "auto") -> DataFrame:
+def sample_frames(df: DataFrame, codec: str = "auto") -> DataFrame:
     """Every-Nth-frame sampling over (doc_id, payload) rows."""
     fn = _choose(
-        codec, _av_available(), _frame_sample_real(every_n), _frame_sample_stub(every_n)
+        codec, _av_available(), _frame_sample_real(_FRAME_EVERY), _frame_sample_stub(_FRAME_EVERY)
     )
     par = df.sparkSession.sparkContext.defaultParallelism
     return (

@@ -23,48 +23,37 @@ from pyspark.sql import functions as F
 
 from kol_bigdata_realtime_analytics_spark import artifacts
 
+#: The embeddings table's id and vector columns, which the search operators read.
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+#: Neighbours per query of the approximate top-k operators.
+TOP_K = 3
+#: Rows of the deterministic fit sample (hash_sample, hash_sample_offline).
+SAMPLE_SIZE = 4096
+#: Lloyd rounds of every quantizer fit (k-means, PQ, residual PQ).
+LLOYD_ITERS = 20
+#: Bits of a binary (sign) code: two packed 32-bit halves.
+CODE_BITS = 64
+
 
 def as_double_vec(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product, sequential fold order (i = 0..dim-1) in both forms.
-
-    With a known `dim`, unrolls to a flat chain of GetArrayItem multiplies;
-    without, uses zip_with/aggregate. Identical float results: both sum
-    left-to-right, matching DuckDB's list_dot_product order.
-
-    MEASURED (sf0.1, dim=64, local[32]): the unrolled form is SLOWER —
-    brute-force top-k 1.3 s (lambda) vs 2.4 s (unrolled), blocked pair join
-    1.7 s vs 6.5 s steady-state. The 128-node expression tree blows the
-    per-expression codegen budget and the tree is duplicated into pushed-down
-    filters, so it evaluates interpreted per pair — worse than the
-    HigherOrderFunction loop it was meant to beat. Callers therefore default
-    to dim=None; the unrolled path stays for SMALL dims (<=16), where it does
-    win, and as the recorded experiment.
-    """
-    if dim is not None:
-        terms = [F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(dim)]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
+def dot(a: Column, b: Column) -> Column:
+    """Dot product as a zip_with/aggregate fold, left to right (i = 0..dim-1),
+    matching DuckDB's list_dot_product order. Unrolling it into a chain of
+    GetArrayItem multiplies measured slower: 2.4 s against 1.3 s for the
+    fold (brute-force top-k, sf0.1, dim=64, local[32])."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def norm(a: Column, dim: int | None = None) -> Column:
-    if dim is not None:
-        terms = [F.element_at(a, i + 1) * F.element_at(a, i + 1) for i in range(dim)]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return F.sqrt(out)
+def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (norm(a) * norm(b))
 
 
 def rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -82,31 +71,24 @@ def rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def brute_force_topk(
-    candidates: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    dim: int | None = None,
-) -> DataFrame:
+def brute_force_topk(candidates: DataFrame, queries: DataFrame, k: int = TOP_K) -> DataFrame:
     """Exact cosine top-k per query: (q_id, c_id, cosine) with rank <= k.
 
     queries is broadcast (small side); ranking sorts on ROUND(cos, 6) with an
     id tie-break so results are engine-independent.
     """
     q = queries.select(
-        F.col(id_col).alias("q_id"), as_double_vec(F.col(vec_col)).alias("q_vec")
+        F.col(ID_COL).alias("q_id"), as_double_vec(F.col(VEC_COL)).alias("q_vec")
     )
     c = candidates.select(
-        F.col(id_col).alias("c_id"), as_double_vec(F.col(vec_col)).alias("c_vec")
+        F.col(ID_COL).alias("c_id"), as_double_vec(F.col(VEC_COL)).alias("c_vec")
     )
     scored = (
         c.join(F.broadcast(q), F.col("c_id") != F.col("q_id"))
         .select(
             "q_id",
             "c_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec"), dim), 6).alias("cosine"),
+            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine"),
         )
     )
     return rank_topk(scored, k)
@@ -114,11 +96,8 @@ def brute_force_topk(
 
 def cosine_neardup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str | None = "label",
     threshold: float = 0.95,
-    dim: int | None = None,
 ) -> DataFrame:
     """Pairs (a < b) with cosine >= threshold, equi-blocked by block_col.
 
@@ -126,14 +105,14 @@ def cosine_neardup_pairs(
     join is a plain shuffle-hash join on the block key.
     """
     base = df.select(
-        F.col(id_col).alias("vid"),
+        F.col(ID_COL).alias("vid"),
         *( [F.col(block_col).alias("blk")] if block_col else [] ),
-        as_double_vec(F.col(vec_col)).alias("vec"),
+        as_double_vec(F.col(VEC_COL)).alias("vec"),
     )
     # per-ROW norm before the pairing (not per pair): O(n·dim) instead of
     # O(pairs·dim)
-    base = base.withColumn("nrm", norm(F.col("vec"), dim))
-    if block_col and dim is None:
+    base = base.withColumn("nrm", norm(F.col("vec")))
+    if block_col:
         # blocked + fold-order dot: ONE cogrouped Arrow pass scores each
         # block's pair matrix vectorized (bucket_pair_scores) — each vector
         # crosses the Python boundary once per block membership instead of
@@ -173,7 +152,7 @@ def cosine_neardup_pairs(
             F.col("a.vid").alias("id_a"),
             F.col("b.vid").alias("id_b"),
             F.round(
-                dot(F.col("a.vec"), F.col("b.vec"), dim) / (F.col("a.nrm") * F.col("b.nrm")), 6
+                dot(F.col("a.vec"), F.col("b.vec")) / (F.col("a.nrm") * F.col("b.nrm")), 6
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
@@ -281,13 +260,13 @@ def _seeded_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]
     return planes
 
 
-def lsh_bucket_id(vec_col: Column, dim: int, n_planes: int = 8, seed: int = 42) -> Column:
+def lsh_bucket_id(vec_col: Column, dim: int, n_planes: int = 8) -> Column:
     """Random-hyperplane LSH bucket: n_planes sign bits packed into a long.
 
     Cosine-similar vectors agree on most sign bits -> land in the same bucket
     with high probability. Planes are literal arrays (broadcast as constants
     into codegen — no side channel)."""
-    planes = _seeded_planes(dim, n_planes, seed)
+    planes = _seeded_planes(dim, n_planes)
     bucket = F.lit(0).cast("long")
     v = as_double_vec(vec_col)
     for i, p in enumerate(planes):
@@ -343,9 +322,6 @@ def lsh_topk(
     candidates: DataFrame,
     queries: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
     n_planes: int = 6,
     n_tables: int = 4,
 ) -> DataFrame:
@@ -363,10 +339,10 @@ def lsh_topk(
 
     buckets = _lsh_buckets_udf(dim, n_planes, n_tables)
     c = candidates.select(
-        F.col(id_col).alias("c_id"), as_double_vec(F.col(vec_col)).alias("c_vec")
+        F.col(ID_COL).alias("c_id"), as_double_vec(F.col(VEC_COL)).alias("c_vec")
     ).select("c_id", "c_vec", F.posexplode(buckets(F.col("c_vec"))).alias("t", "b"))
     q = queries.select(
-        F.col(id_col).alias("q_id"), as_double_vec(F.col(vec_col)).alias("q_vec")
+        F.col(ID_COL).alias("q_id"), as_double_vec(F.col(VEC_COL)).alias("q_vec")
     ).select("q_id", "q_vec", F.posexplode(buckets(F.col("q_vec"))).alias("t", "b"))
     # score per bucket-match, THEN dedup: a pair hit in several tables is
     # re-scored (cheap, codegen'd) so the dedup shuffle moves only narrow
@@ -378,7 +354,7 @@ def lsh_topk(
         .groupBy("q_id", "c_id")
         .agg(F.first("cosine").alias("cosine"))
     )
-    return rank_topk(scored, k)
+    return rank_topk(scored, TOP_K)
 
 
 def lsh_bucket_sql(vec_expr: str, dim: int, n_planes: int = 8, seed: int = 42) -> str:
@@ -405,26 +381,17 @@ def lsh_bucket_sql(vec_expr: str, dim: int, n_planes: int = 8, seed: int = 42) -
 def lsh_neardup_pairs(
     df: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
     threshold: float = 0.95,
 ) -> DataFrame:
     """Scale path for cosine_neardup_pairs: block by LSH bucket instead of a
     semantic label; verify candidates with the exact cosine."""
     with_bucket = df.select(
-        F.col(id_col).alias(id_col),
-        F.col(vec_col).alias(vec_col),
-        lsh_bucket_id(F.col(vec_col), dim, n_planes).alias("lsh_bucket"),
+        F.col(ID_COL).alias(ID_COL),
+        F.col(VEC_COL).alias(VEC_COL),
+        lsh_bucket_id(F.col(VEC_COL), dim, n_planes).alias("lsh_bucket"),
     )
-    return cosine_neardup_pairs(
-        with_bucket, id_col=id_col, vec_col=vec_col, block_col="lsh_bucket",
-        # dim deliberately NOT forwarded to the verify: dim=64 selects the
-        # unrolled dot, which blows the codegen budget and runs interpreted
-        # per PAIR (§2.1b: 1.7 s lambda vs 6.5 s unrolled on this exact
-        # shape). Float results are identical (both fold left-to-right).
-        threshold=threshold,
-    )
+    return cosine_neardup_pairs(with_bucket, block_col="lsh_bucket", threshold=threshold)
 
 
 def _sample_fingerprint(sample) -> tuple | None:
@@ -449,9 +416,9 @@ def _sample_fingerprint(sample) -> tuple | None:
 
 def hash_sample(
     candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_size: int = 4096,
+    id_col: str = ID_COL,
+    vec_col: str = VEC_COL,
+    sample_size: int = SAMPLE_SIZE,
     cache_key=None,
 ):
     """Deterministic bounded sample as a numpy array: the `sample_size` rows
@@ -502,11 +469,10 @@ def _sample_fit(
 
 def kmeans_centroids(
     candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = ID_COL,
+    vec_col: str = VEC_COL,
     n_centroids: int = 8,
-    sample_size: int = 4096,
-    max_iter: int = 20,
+    sample_size: int = SAMPLE_SIZE,
     sample=None,
     cache_key=None,
 ) -> list[list[float]]:
@@ -534,7 +500,7 @@ def kmeans_centroids(
         Xn = X / nrm
         k = min(n_centroids, len(Xn))
         C = Xn[:k].copy()
-        for _ in range(max_iter):
+        for _ in range(LLOYD_ITERS):
             assign = np.argmax(Xn @ C.T, axis=1)
             new_c = np.empty_like(C)
             for j in range(k):
@@ -550,22 +516,13 @@ def kmeans_centroids(
         return [[float(x) for x in c] for c in C]
 
     return _sample_fit(
-        "kmeans", fit, (n_centroids, max_iter),
+        "kmeans", fit, (n_centroids,),
         candidates, id_col, vec_col, sample_size, sample, cache_key,
     )
 
 
 def ivf_topk(
-    candidates: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    dim: int | None = None,
-    sample_size: int = 4096,
-    cache_key=None,
+    candidates: DataFrame, queries: DataFrame, n_centroids: int = 8, cache_key=None
 ) -> DataFrame:
     """Approximate cosine top-k: IVF (inverted-file) coarse quantizer.
 
@@ -573,56 +530,49 @@ def ivf_topk(
     bounded sample (kmeans_centroids above) and broadcast; every candidate
     vector is assigned to its nearest centroid (one broadcast nested-loop
     over n_centroids rows — no shuffle of the corpus itself). Search phase:
-    each query probes only its n_probe nearest centroids' lists, so the
-    scored fraction is ~n_probe/n_centroids of the corpus. At 100 TB the
+    each query probes only its 2 nearest centroids' lists, so the
+    scored fraction is ~2/n_centroids of the corpus. At 100 TB the
     assignment is a one-off write of a `cent_id` partition column; searches
-    then prune to n_probe partitions. Output contract matches
+    then prune to 2 partitions. Output contract matches
     brute_force_topk; recall is approximate (tests bound it against the
     exact scorer on clustered data, where a non-representative quantizer
     measurably fails).
     """
-    centroids = kmeans_centroids(
-        candidates,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_centroids=n_centroids,
-        sample_size=sample_size,
-        cache_key=cache_key,
-    )
+    centroids = kmeans_centroids(candidates, n_centroids=n_centroids, cache_key=cache_key)
     cents = candidates.sparkSession.createDataFrame(
         [(i, v) for i, v in enumerate(centroids)],
         "cent_id long, cent_vec array<double>",
     )
     base = candidates.select(
-        F.col(id_col).alias("c_id"), as_double_vec(F.col(vec_col)).alias("c_vec")
+        F.col(ID_COL).alias("c_id"), as_double_vec(F.col(VEC_COL)).alias("c_vec")
     )
     wc = Window.partitionBy("c_id").orderBy(F.col("cent_cos").desc(), F.col("cent_id").asc())
     assigned = (
         base.crossJoin(F.broadcast(cents))
-        .select("c_id", "c_vec", "cent_id", cosine(F.col("c_vec"), F.col("cent_vec"), dim).alias("cent_cos"))
+        .select("c_id", "c_vec", "cent_id", cosine(F.col("c_vec"), F.col("cent_vec")).alias("cent_cos"))
         .withColumn("rn", F.row_number().over(wc))
         .filter(F.col("rn") == 1)
         .select("c_id", "c_vec", "cent_id")
     )
     qbase = queries.select(
-        F.col(id_col).alias("q_id"), as_double_vec(F.col(vec_col)).alias("q_vec")
+        F.col(ID_COL).alias("q_id"), as_double_vec(F.col(VEC_COL)).alias("q_vec")
     )
     wq = Window.partitionBy("q_id").orderBy(F.col("cent_cos").desc(), F.col("cent_id").asc())
     probed = (
         qbase.crossJoin(F.broadcast(cents))
-        .select("q_id", "q_vec", "cent_id", cosine(F.col("q_vec"), F.col("cent_vec"), dim).alias("cent_cos"))
+        .select("q_id", "q_vec", "cent_id", cosine(F.col("q_vec"), F.col("cent_vec")).alias("cent_cos"))
         .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
+        .filter(F.col("rn") <= 2)
         .select("q_id", "q_vec", "cent_id")
     )
     scored = (
         assigned.join(F.broadcast(probed), "cent_id")
         .filter(F.col("c_id") != F.col("q_id"))
-        .select("q_id", "c_id", F.round(cosine(F.col("q_vec"), F.col("c_vec"), dim), 6).alias("cosine"))
+        .select("q_id", "c_id", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine"))
         .groupBy("q_id", "c_id")
         .agg(F.first("cosine").alias("cosine"))
     )
-    return rank_topk(scored, k)
+    return rank_topk(scored, TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -650,13 +600,7 @@ def quantize_int8(vec_col: Column) -> tuple[Column, Column]:
     return scale, codes
 
 
-def int8_topk_matmul(
-    candidates: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-) -> DataFrame:
+def int8_topk_matmul(candidates: DataFrame, queries: DataFrame) -> DataFrame:
     """int8 cosine top-k where scoring is ONE numpy matmul per Arrow batch.
 
     The scale path for int8 rescoring (PERF.md §5): `ann_int8_topk` proves
@@ -679,8 +623,8 @@ def int8_topk_matmul(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    _, qcodes_expr = quantize_int8(F.col(vec_col))
-    qrows = queries.select(F.col(id_col).alias("q_id"), qcodes_expr.alias("codes")).collect()
+    _, qcodes_expr = quantize_int8(F.col(VEC_COL))
+    qrows = queries.select(F.col(ID_COL).alias("q_id"), qcodes_expr.alias("codes")).collect()
     Q = np.array([r["codes"] for r in qrows], dtype="int64")  # (nq, dim)
     qn2 = (Q * Q).sum(axis=1)
     keep = qn2 > 0
@@ -697,9 +641,9 @@ def int8_topk_matmul(
             cos = dots / (qnorm[None, :] * cn[:, None])
         return pd.Series(list(cos))
 
-    _, ccodes_expr = quantize_int8(F.col(vec_col))
+    _, ccodes_expr = quantize_int8(F.col(VEC_COL))
     scored = (
-        candidates.select(F.col(id_col).alias("c_id"), ccodes_expr.alias("codes"))
+        candidates.select(F.col(ID_COL).alias("c_id"), ccodes_expr.alias("codes"))
         .select("c_id", F.posexplode(_cosines(F.col("codes"))).alias("qpos", "cos_raw"))
         .select(
             # lit() of a small Python int types as INT; the id contract is
@@ -713,17 +657,16 @@ def int8_topk_matmul(
         .filter((F.col("c_id") != F.col("q_id")) & ~F.isnan("cos_raw"))
         .select("q_id", "c_id", F.round("cos_raw", 6).alias("cosine"))
     )
-    return rank_topk(scored, k)
+    return rank_topk(scored, TOP_K)
 
 
 def pq_codebooks(
     candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = ID_COL,
+    vec_col: str = VEC_COL,
     m: int = 8,
     ksub: int = 16,
-    sample_size: int = 4096,
-    max_iter: int = 20,
+    sample_size: int = SAMPLE_SIZE,
     sample=None,
     cache_key=None,
 ) -> list[list[list[float]]]:
@@ -744,12 +687,12 @@ def pq_codebooks(
     hash_sample() array, to share one collect across several fits.
     """
     return _sample_fit(
-        "pq", lambda X: _pq_fit(X, m, ksub, max_iter), (m, ksub, max_iter),
+        "pq", lambda X: _pq_fit(X, m, ksub), (m, ksub),
         candidates, id_col, vec_col, sample_size, sample, cache_key,
     )
 
 
-def _pq_fit(X, m: int, ksub: int, max_iter: int) -> list[list[list[float]]]:
+def _pq_fit(X, m: int, ksub: int) -> list[list[list[float]]]:
     """The per-subspace L2 Lloyd fit shared by pq_codebooks (raw vectors)
     and pq_residual_codebooks (coarse-quantizer residuals). Deterministic:
     init = first ksub rows of the (hash-ordered) input per subspace, argmin
@@ -765,7 +708,7 @@ def _pq_fit(X, m: int, ksub: int, max_iter: int) -> list[list[list[float]]]:
         Xs = X[:, s * dsub : (s + 1) * dsub]
         k = min(ksub, len(Xs))
         C = Xs[:k].copy()
-        for _ in range(max_iter):
+        for _ in range(LLOYD_ITERS):
             d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             assign = np.argmin(d2, axis=1)  # ties -> lowest index
             new_c = np.empty_like(C)
@@ -818,12 +761,11 @@ def coarse_anchors(X, coarse):
 def pq_residual_codebooks(
     candidates: DataFrame,
     coarse: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = ID_COL,
+    vec_col: str = VEC_COL,
     m: int = 8,
     ksub: int = 16,
-    sample_size: int = 4096,
-    max_iter: int = 20,
+    sample_size: int = SAMPLE_SIZE,
     sample=None,
     cache_key=None,
 ) -> list[list[list[float]]]:
@@ -841,12 +783,12 @@ def pq_residual_codebooks(
 
     def fit(X):
         A = coarse_anchors(X, coarse)
-        return _pq_fit(X - A[_coarse_assign(X, coarse)], m, ksub, max_iter)
+        return _pq_fit(X - A[_coarse_assign(X, coarse)], m, ksub)
 
     # the coarse centroids' CONTENT is part of the fit identity — two
     # same-length coarse sets under one cache_key must not share residual
     # codebooks (the same hole as a discarded explicit sample)
-    params = (_sample_fingerprint(coarse), m, ksub, max_iter)
+    params = (_sample_fingerprint(coarse), m, ksub)
     return _sample_fit(
         "pq_res", fit, params,
         candidates, id_col, vec_col, sample_size, sample, cache_key,
@@ -911,8 +853,8 @@ def pq_encode_residual_udf(books: list[list[list[float]]], anchors):
 def _adc_query_payload(
     queries: DataFrame,
     books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = ID_COL,
+    vec_col: str = VEC_COL,
 ):
     """(q_ids, qnorms, flat LUTs, code offsets, flat centroid norms^2) for
     ADC scoring — the per-query serving payload shared by pq_adc_topk and
@@ -943,12 +885,10 @@ def _adc_query_payload(
 def pq_adc_topk(
     candidates: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
+    k: int = TOP_K,
     m: int = 8,
     ksub: int = 16,
-    sample_size: int = 4096,
+    sample_size: int = SAMPLE_SIZE,
     cache_key=None,
     sample=None,
 ) -> DataFrame:
@@ -972,12 +912,10 @@ def pq_adc_topk(
     from pyspark.sql.functions import pandas_udf
 
     books = pq_codebooks(
-        candidates, id_col=id_col, vec_col=vec_col, m=m, ksub=ksub,
-        sample_size=sample_size, cache_key=cache_key, sample=sample,
+        candidates, m=m, ksub=ksub, sample_size=sample_size, cache_key=cache_key,
+        sample=sample,
     )
-    q_ids, _, qn, lut2, offsets, cent_n2 = _adc_query_payload(
-        queries, books, id_col=id_col, vec_col=vec_col
-    )
+    q_ids, _, qn, lut2, offsets, cent_n2 = _adc_query_payload(queries, books)
 
     @pandas_udf("array<double>")
     def _adc(codes: pd.Series) -> pd.Series:
@@ -992,7 +930,7 @@ def pq_adc_topk(
 
     encode = pq_encode_udf(books)
     scored = (
-        candidates.select(F.col(id_col).alias("c_id"), as_double_vec(F.col(vec_col)).alias("v"))
+        candidates.select(F.col(ID_COL).alias("c_id"), as_double_vec(F.col(VEC_COL)).alias("v"))
         .select("c_id", encode(F.col("v")).alias("codes"))
         .select("c_id", F.posexplode(_adc(F.col("codes"))).alias("qpos", "cos_raw"))
         .select(
@@ -1013,14 +951,14 @@ def pq_adc_topk(
 def ivfpq_topk(
     candidates: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str = ID_COL,
+    vec_col: str = VEC_COL,
     k: int = 3,
     n_centroids: int = 8,
     n_probe: int = 2,
     m: int = 8,
     ksub: int = 16,
-    sample_size: int = 4096,
+    sample_size: int = SAMPLE_SIZE,
     cache_key=None,
     residual: bool = False,
 ) -> DataFrame:
@@ -1187,10 +1125,8 @@ def ivfpq_topk(
 
 def pca_fit(
     candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_components: int = 16,
-    sample_size: int = 4096,
+    sample_size: int = SAMPLE_SIZE,
     sample=None,
     cache_key=None,
 ) -> tuple[list[float], list[list[float]]]:
@@ -1219,7 +1155,7 @@ def pca_fit(
 
     return _sample_fit(
         "pca", fit, (n_components,),
-        candidates, id_col, vec_col, sample_size, sample, cache_key,
+        candidates, ID_COL, VEC_COL, sample_size, sample, cache_key,
     )
 
 
@@ -1243,10 +1179,8 @@ def pca_project_udf(mean: list[float], components: list[list[float]]):
 
 def opq_rotation(
     candidates: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 8,
-    sample_size: int = 4096,
+    sample_size: int = SAMPLE_SIZE,
     sample=None,
     cache_key=None,
 ) -> list[list[float]]:
@@ -1266,7 +1200,7 @@ def opq_rotation(
     memoized like every quantizer fit."""
     return _sample_fit(
         "opq_rot", lambda X: _opq_fit(X, m), (m,),
-        candidates, id_col, vec_col, sample_size, sample, cache_key,
+        candidates, ID_COL, VEC_COL, sample_size, sample, cache_key,
     )
 
 
@@ -1306,12 +1240,9 @@ def _opq_fit(X, m: int) -> list[list[float]]:
 def opq_topk(
     candidates: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
     m: int = 8,
     ksub: int = 16,
-    sample_size: int = 4096,
+    sample_size: int = SAMPLE_SIZE,
     cache_key=None,
 ) -> DataFrame:
     """OPQ ANN: rotate by the eigenvalue-balanced PCA basis (opq_rotation),
@@ -1322,15 +1253,11 @@ def opq_topk(
     are fit on the ROTATED sample (one shared collect — the corpus is
     never collected). Same output contract as pq_adc_topk. This is Faiss's
     standard 100 TB preprocessing: OPQMatrix -> PQ."""
-    X = hash_sample(
-        candidates, id_col=id_col, vec_col=vec_col, sample_size=sample_size,
-        cache_key=cache_key,
-    )
+    X = hash_sample(candidates, sample_size=sample_size, cache_key=cache_key)
     import numpy as np
 
     R = opq_rotation(
-        candidates, id_col=id_col, vec_col=vec_col, m=m,
-        sample_size=sample_size, sample=X, cache_key=cache_key,
+        candidates, m=m, sample_size=sample_size, sample=X, cache_key=cache_key
     )
     # fold rotation (r10): sequential over-dims product instead of a BLAS
     # matmul, so every rotated float is oracle-derivable bit-for-bit (the
@@ -1338,14 +1265,13 @@ def opq_topk(
     # the same fold or the fitted books drift in the last ulp
     rot = rotation_fold_udf(R)
     rc = candidates.select(
-        F.col(id_col), rot(as_double_vec(F.col(vec_col))).alias(vec_col)
+        F.col(ID_COL), rot(as_double_vec(F.col(VEC_COL))).alias(VEC_COL)
     )
     rq = queries.select(
-        F.col(id_col), rot(as_double_vec(F.col(vec_col))).alias(vec_col)
+        F.col(ID_COL), rot(as_double_vec(F.col(VEC_COL))).alias(VEC_COL)
     )
     return pq_adc_topk(
-        rc, rq, id_col=id_col, vec_col=vec_col, k=k, m=m, ksub=ksub,
-        sample_size=sample_size, cache_key=cache_key,
+        rc, rq, m=m, ksub=ksub, sample_size=sample_size, cache_key=cache_key,
         sample=fold_project(X, np.array(R, dtype="float64").T),
     )
 
@@ -1385,7 +1311,7 @@ def dequantize_mse(vec_col: Column, scale: Column, codes: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def binary_code_cols(vec_col: Column, dim: int = 64) -> tuple[Column, Column]:
+def binary_code_cols(vec_col: Column) -> tuple[Column, Column]:
     """1-bit (sign) binary quantization of a float vector into two packed
     longs (lo = dims 0..31, hi = dims 32..63): bit i = (x_i > 0).
 
@@ -1402,10 +1328,10 @@ def binary_code_cols(vec_col: Column, dim: int = 64) -> tuple[Column, Column]:
     scan projection — no UDF, no shuffle."""
     v = as_double_vec(vec_col)
     halves = []
-    for lo in (0, dim // 2):
+    for lo in (0, CODE_BITS // 2):
         halves.append(
             F.aggregate(
-                F.sequence(F.lit(0), F.lit(dim // 2 - 1)),
+                F.sequence(F.lit(0), F.lit(CODE_BITS // 2 - 1)),
                 F.lit(0).cast("long"),
                 lambda acc, i: acc
                 + F.when(
@@ -1430,18 +1356,18 @@ def hamming64(lo_a: Column, hi_a: Column, lo_b: Column, hi_b: Column) -> Column:
     ).cast("long")
 
 
-def binary_code_sql(vec_expr: str, dim: int = 64) -> tuple[str, str]:
+def binary_code_sql(vec_expr: str) -> tuple[str, str]:
     """DuckDB expressions computing the SAME (lo, hi) packed sign-bit codes
     as binary_code_cols: both engines evaluate the identical widened-double
     `> 0` test per dimension, and bit packing is integer — codes match
     bit-for-bit, which keeps the Hamming top-k oracle hash-exact."""
     out = []
-    for lo in (0, dim // 2):
+    for lo in (0, CODE_BITS // 2):
         out.append(
             "CAST(list_sum(list_transform(range(1, {n}), i -> "
             "CASE WHEN ({v})[i + {lo}] > 0 THEN (1::BIGINT << (i - 1)) "
             "ELSE 0::BIGINT END)) AS BIGINT)".format(
-                n=dim // 2 + 1, v=vec_expr, lo=lo
+                n=CODE_BITS // 2 + 1, v=vec_expr, lo=lo
             )
         )
     return out[0], out[1]
@@ -1461,14 +1387,14 @@ _XXH_P4 = 9650029242287828579
 _XXH_P5 = 2870177450012600261
 
 
-def xxh64_long(v: int, seed: int = 42) -> int:
+def xxh64_long(v: int) -> int:
     """XXH64 of one 8-byte little-endian long with Spark XxHash64's exact
     semantics (seed 42, result as SIGNED long) — validated bit-for-bit
     against F.xxhash64 in tests/test_r10_certificates.py. Pure Python so
     oracle generators can reproduce hash_sample's ordering without a
     SparkSession."""
     v &= _XXH_M
-    h = (seed + _XXH_P5 + 8) & _XXH_M
+    h = (42 + _XXH_P5 + 8) & _XXH_M  # Spark's xxhash64 seed
     k = (v * _XXH_P2) & _XXH_M
     k = ((k << 31) | (k >> 33)) & _XXH_M
     k = (k * _XXH_P1) & _XXH_M
@@ -1482,7 +1408,7 @@ def xxh64_long(v: int, seed: int = 42) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def hash_sample_offline(sf_dir: str, sample_size: int = 4096):
+def hash_sample_offline(sf_dir: str):
     """numpy twin of hash_sample(table(embeddings), ...): same rows, same
     order (ascending signed xxhash64(vec_id), then vec_id), same float64
     widening — read via DuckDB, no Spark. Memoized in the session artifact
@@ -1500,9 +1426,9 @@ def hash_sample_offline(sf_dir: str, sample_size: int = 4096):
             f"SELECT vec_id, embedding::DOUBLE[] FROM '{path}'"
         ).fetchall()
         rows.sort(key=lambda r: (xxh64_long(int(r[0])), int(r[0])))
-        return np.array([r[1] for r in rows[:sample_size]], dtype="float64")
+        return np.array([r[1] for r in rows[:SAMPLE_SIZE]], dtype="float64")
 
-    return artifacts.cached("sample_offline", sf_dir, (sample_size,), collect)
+    return artifacts.cached("sample_offline", sf_dir, (), collect)
 
 
 def fold_project(X, P):

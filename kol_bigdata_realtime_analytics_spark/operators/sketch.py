@@ -65,9 +65,8 @@ def count_min_estimate(
     key_col: str,
     width: int = DEFAULT_WIDTH,
     depth: int = DEFAULT_DEPTH,
-    out_col: str = "cm_estimate",
 ) -> DataFrame:
-    """(key_col, out_col): the count-min point estimate per DISTINCT key.
+    """(key_col, cm_estimate): the count-min point estimate per DISTINCT key.
 
     Output carries ONLY those two columns — non-key columns of `keys` are
     dropped and duplicate key rows collapse (the groupBy is part of the
@@ -84,7 +83,7 @@ def count_min_estimate(
     return (
         probes.join(F.broadcast(sketch), ["d", "bucket"], "left")
         .groupBy(key_col)
-        .agg(F.min(F.coalesce("cnt", F.lit(0))).alias(out_col))
+        .agg(F.min(F.coalesce("cnt", F.lit(0))).alias("cm_estimate"))
     )
 
 
@@ -92,14 +91,12 @@ def count_min_estimate(
 # Fast-AGMS (count-sketch) join-size estimation
 # ---------------------------------------------------------------------------
 
+#: The AGMS grid's buckets per row and rows.
+AGMS_WIDTH = 256
+AGMS_DEPTH = 5
 
-def agms_build(
-    df: DataFrame,
-    key_col: str,
-    width: int = 256,
-    depth: int = 5,
-    weight_col: str | None = None,
-) -> DataFrame:
+
+def agms_build(df: DataFrame, key_col: str, weight_col: str | None = None) -> DataFrame:
     """(d, bucket, s) signed counter grid — the fast-AGMS / count-sketch.
 
     Each key gets a bucket h_d(k) AND a sign s_d(k) in {-1, +1} per depth
@@ -118,9 +115,9 @@ def agms_build(
     """
     sign = [
         (F.pmod(F.xxhash64(F.col(key_col), F.lit(1_000_003 + d)), F.lit(2)) * 2 - 1)
-        for d in range(depth)
+        for d in range(AGMS_DEPTH)
     ]
-    bucket = _buckets(F.col(key_col), width, depth)
+    bucket = _buckets(F.col(key_col), AGMS_WIDTH, AGMS_DEPTH)
     w = (F.col(weight_col) if weight_col else F.lit(1)).cast("long")
     pos = df.select(
         F.posexplode(

@@ -530,7 +530,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5)
     # cache_key: the coarse quantizer is a deterministic model artifact —
     # fit once per (data, params), not once per query (r5 verdict ask #3)
-    return ivf_topk(emb, queries, k=3, n_centroids=8, n_probe=2, cache_key=sf_dir)
+    return ivf_topk(emb, queries, n_centroids=8, cache_key=sf_dir)
 
 
 def _np8_sum(terms: list[str]) -> str:
@@ -1021,7 +1021,7 @@ def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    return opq_topk(emb, queries, k=3, m=8, ksub=16, cache_key=sf_dir)
+    return opq_topk(emb, queries, m=8, ksub=16, cache_key=sf_dir)
 
 
 #: anisotropic OPQ fixture: dims 0,1 carry +-4 high-variance lattices, a
@@ -1110,8 +1110,8 @@ def ann_opq_distortion_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rejects raw double Averages on principle)
     return errs.agg(
         F.count("*").alias("n_vectors"),
-        davg(F.element_at("e", 2), 6).alias("_rot"),
-        davg(F.element_at("e", 1), 6).alias("_plain"),
+        davg(F.element_at("e", 2)).alias("_rot"),
+        davg(F.element_at("e", 1)).alias("_plain"),
     ).select(
         "n_vectors",
         (F.col("_rot") < F.col("_plain")).alias("opq_beats_plain"),
@@ -1624,9 +1624,13 @@ def correlation_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle_sql(n_iter: int = 10) -> str:
+#: Rounds of supplier_influence_pagerank, and of its unrolled oracle.
+_PR_ROUNDS = 10
+
+
+def _pagerank_oracle_sql() -> str:
     """Generate the unrolled-iteration DuckDB oracle for fixed-point
-    PageRank: w0..w{n_iter} chained CTEs, each one integer round identical
+    PageRank: w0..w{_PR_ROUNDS} chained CTEs, each one integer round identical
     to pagerank_fixedpoint's (floor divisions at the same points, exact
     long sums), so the hash comparison is EXACT, not tolerance-based."""
     scale = 10**12
@@ -1648,7 +1652,7 @@ w0 AS (
   SELECT node, CAST({scale} // nn.n AS BIGINT) AS rank_fp FROM nodes, nn
 )"""
     rounds = []
-    for k in range(1, n_iter + 1):
+    for k in range(1, _PR_ROUNDS + 1):
         rounds.append(f""",
 w{k} AS (
   SELECT nd.node,
@@ -1663,11 +1667,11 @@ w{k} AS (
 SELECT node - 10000000 AS supp_key,
        rank_fp,
        (rank_fp // 1000000) / 1000000.0 AS rank
-FROM w{n_iter} WHERE node >= 10000000"""
+FROM w{_PR_ROUNDS} WHERE node >= 10000000"""
     return (head + "".join(rounds) + tail).strip()
 
 
-@register("supplier_influence_pagerank", oracle=_pagerank_oracle_sql(10))
+@register("supplier_influence_pagerank", oracle=_pagerank_oracle_sql())
 def supplier_influence_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank influence over the customer->supplier purchase graph
     (edge weight = number of lineitems bought, via orders⋈lineitem), 10
@@ -1694,7 +1698,7 @@ def supplier_influence_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("weight"))
     )
-    ranks = pagerank_fixedpoint(edges, damping_num=17, damping_den=20, n_iter=10)
+    ranks = pagerank_fixedpoint(edges, n_iter=_PR_ROUNDS)
     return ranks.filter(F.col("node") >= 10_000_000).select(
         (F.col("node") - 10_000_000).alias("supp_key"),
         "rank_fp",
@@ -1708,7 +1712,7 @@ def _pagerank_fixpoint_oracle() -> str:
     movement. Reuses _pagerank_oracle_sql's chain verbatim (split at its
     final SELECT) so the certified dynamics and the certified query can
     never diverge."""
-    full = _pagerank_oracle_sql(10)
+    full = _pagerank_oracle_sql()
     head = full[: full.rindex("SELECT node - 10000000")]
     # MATERIALIZED each round CTE: 20 scalar subqueries over a 10-deep
     # inlined chain re-expand exponentially in DuckDB (the BFS-oracle
@@ -1760,9 +1764,7 @@ def pagerank_fixpoint_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("weight"))
     )
-    return pagerank_fixedpoint_residuals(
-        edges, damping_num=17, damping_den=20, n_iter=10
-    ).orderBy("round")
+    return pagerank_fixedpoint_residuals(edges).orderBy("round")
 
 
 # ---------------------------------------------------------------------------

@@ -294,8 +294,8 @@ def asof_last_event_before_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash shuffle + per-key sort with a running last(ignorenulls) carry —
     linear in |orders| + |events|, entirely JVM-side, the shape that
     survives 100×. (operators/asof.py keeps the composed form — slimmed
-    dedup window + optional lookback bound — and the cogrouped merge_asof
-    pandas form as alternatives.)
+    dedup window — and the cogrouped merge_asof pandas form as
+    alternatives.)
     """
     from kol_bigdata_realtime_analytics_spark.operators.asof import as_of_join_union
 

@@ -133,7 +133,7 @@ def ann_lsh_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_check(
         spark,
         sf_dir,
-        lambda emb, q: lsh_topk(emb, q, dim=64, k=3, n_planes=4, n_tables=8),
+        lambda emb, q: lsh_topk(emb, q, dim=64, n_planes=4, n_tables=8),
         bound=0.4,
     )
 
@@ -150,7 +150,7 @@ def ann_ivf_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_check(
         spark,
         sf_dir,
-        lambda emb, q: ivf_topk(emb, q, k=3, n_centroids=8, n_probe=2, cache_key=sf_dir),
+        lambda emb, q: ivf_topk(emb, q, n_centroids=8, cache_key=sf_dir),
         bound=0.25,
     )
 
@@ -478,7 +478,7 @@ def minhash_estimate_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # estimate side: fraction of agreeing minhash lanes — the codegen'd
     # signature frame (the array-lambda form ran interpreted per shingle
     # and never finished the 8x scale audit; see minhash_signature_frame)
-    sig = minhash_signature_frame(docs, "text", "doc_id", 32).localCheckpoint(eager=True)
+    sig = minhash_signature_frame(docs, "text", "doc_id").localCheckpoint(eager=True)
     tc = docs.select("doc_id", token_count("text").alias("tc")).localCheckpoint(eager=True)
     pairs = (
         tc.alias("a")

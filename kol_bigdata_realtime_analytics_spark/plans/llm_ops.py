@@ -1655,7 +1655,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # loose buckets (4 bits x 8 tables): TESTDATA embeddings are near-random
     # (top-3 cosine ~0.3), so tighter buckets would kill recall; with real
     # clustered embeddings raise n_planes for a smaller scanned fraction
-    return lsh_topk(emb, queries, dim=64, k=3, n_planes=4, n_tables=8)
+    return lsh_topk(emb, queries, dim=64, n_planes=4, n_tables=8)
 
 
 @register(
@@ -1769,7 +1769,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kol_bigdata_realtime_analytics_spark.operators.multimodal import resize_images
 
     docs = table(spark, sf_dir, "documents")
-    return resize_images(with_binary_payload(docs, "text", "doc_id"), 64, 64, codec="stub")
+    return resize_images(with_binary_payload(docs, "text", "doc_id"), codec="stub")
 
 
 @register(
@@ -1797,7 +1797,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kol_bigdata_realtime_analytics_spark.operators.multimodal import sample_frames
 
     docs = table(spark, sf_dir, "documents")
-    return sample_frames(with_binary_payload(docs, "text", "doc_id"), every_n=4, codec="stub")
+    return sample_frames(with_binary_payload(docs, "text", "doc_id"), codec="stub")
 
 
 @register(
@@ -2279,7 +2279,7 @@ def ann_int8_matmul_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kol_bigdata_realtime_analytics_spark.operators.similarity import int8_topk_matmul
 
     emb = table(spark, sf_dir, "embeddings")
-    return int8_topk_matmul(emb, emb.filter(F.col("vec_id") < 5), k=3)
+    return int8_topk_matmul(emb, emb.filter(F.col("vec_id") < 5))
 
 
 # ---------------------------------------------------------------------------
@@ -3162,8 +3162,7 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     pairs = lsh_neardup_pairs(
-        emb, dim=64, id_col="vec_id", vec_col="embedding",
-        n_planes=4, threshold=0.35,
+        emb, dim=64, n_planes=4, threshold=0.35,
     ).select("id_a", "id_b")
     nodes = emb.select(F.col("vec_id").alias("doc_id"))
     return duplicate_clusters(nodes, pairs, id_col="doc_id").select(
@@ -5619,7 +5618,7 @@ def rag_index_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = emb.select(
         "vec_id",
         scale.alias("scale"),
-        lsh_bucket_id(F.col("embedding"), dim=64, n_planes=_RAG_PLANES, seed=42).alias(
+        lsh_bucket_id(F.col("embedding"), dim=64, n_planes=_RAG_PLANES).alias(
             "bucket"
         ),
     )
@@ -6517,9 +6516,7 @@ def _knn_scored(
     return full if max_q is None else full.filter(F.col("vec_id") < max_q)
 
 
-def _knn_scored_build(
-    spark: SparkSession, sf_dir: str, probe_bits: int, max_q: int | None = None
-) -> DataFrame:
+def _knn_scored_build(spark: SparkSession, sf_dir: str, probe_bits: int) -> DataFrame:
     """The uncached kNN-graph build (see _knn_scored)."""
     from kol_bigdata_realtime_analytics_spark.operators.similarity import (
         as_double_vec,
@@ -6545,8 +6542,7 @@ def _knn_scored_build(
         ],
     )
     # fresh projections per side: the self-join reads one checkpointed scan
-    q_src = base if max_q is None else base.filter(F.col("vec_id") < max_q)
-    q = q_src.select(
+    q = base.select(
         F.col("vec_id").alias("q_id"),
         F.col("vec").alias("q_vec"),
         F.col("nrm").alias("q_nrm"),
@@ -7494,14 +7490,13 @@ def _fused_layer_topk(per_layer, k: int) -> DataFrame:
     )
 
 
-def _probe_cols(probe_bits: int = None):
+def _probe_cols():
     """The multi-probe bucket array: own bucket + single-bit flips."""
-    bits = _KNN_PROBE_BITS if probe_bits is None else probe_bits
     return F.array(
         F.col("bkt"),
         *[
             F.col("bkt").bitwiseXOR(F.lit(1 << i).cast("long"))
-            for i in range(bits)
+            for i in range(_KNN_PROBE_BITS)
         ],
     )
 

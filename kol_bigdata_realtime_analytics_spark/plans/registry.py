@@ -156,6 +156,8 @@ def get_oracles(sf_dir: str = DRIVER_SF_DIR) -> dict[str, str]:
 # ---------------------------------------------------------------------------
 
 _DEC = "decimal(18,6)"
+#: davg / sql_davg truncate at 6 decimals: floor(x * 10^6) / 10^6.
+_AVG_P = 10**6
 
 
 def _as_col(col):
@@ -171,20 +173,22 @@ def dsum(col, scale: int = 2):
     return F.round(F.sum(_as_col(col).cast(_DEC)), scale).cast("double")
 
 
-def davg(col, scale: int = 6):
+def davg(col):
     """Order-proof truncated average: decimal sum -> double / count, floored
-    at `scale` decimals.
+    at 6 decimals.
 
     Truncation, NOT round: the decimal sum makes the quotient a CLEAN
-    rational, which can land exactly on a half-tie at scale+1 digits —
+    rational, which can land exactly on a half-tie at 7 digits —
     where Spark (HALF_UP on the shortest decimal repr) and DuckDB (round
     the binary value) disagree (caught live: composite_leaderboard at
     sf0.1). floor(x * 10^s) is a total function of the double's binary
     value, identical in every engine."""
     from pyspark.sql import functions as F
 
-    p = 10**scale
-    return F.floor((F.sum(_as_col(col).cast(_DEC)).cast("double") / F.count(_as_col(col))) * p) / p
+    return (
+        F.floor((F.sum(_as_col(col).cast(_DEC)).cast("double") / F.count(_as_col(col))) * _AVG_P)
+        / _AVG_P
+    )
 
 
 def dsum_raw(col):
@@ -207,14 +211,13 @@ def sql_dsum(expr: str, scale: int = 2) -> str:
     return f"CAST(ROUND(SUM(CAST(CAST({expr} AS DOUBLE) AS DECIMAL(18,6))), {scale}) AS DOUBLE)"
 
 
-def sql_davg(expr: str, scale: int = 6) -> str:
+def sql_davg(expr: str) -> str:
     """DuckDB oracle fragment matching davg() exactly (truncated average).
 
     CAST-to-DOUBLE-first for the same encoding fence as sql_dsum."""
-    p = 10**scale
     return (
         f"floor(CAST(SUM(CAST(CAST({expr} AS DOUBLE) AS DECIMAL(18,6))) AS DOUBLE)"
-        f" / COUNT({expr}) * {p}) / {p}"
+        f" / COUNT({expr}) * {_AVG_P}) / {_AVG_P}"
     )
 
 

@@ -17,6 +17,7 @@ from kol_bigdata_realtime_analytics_spark.plans.registry import (
     register,
     table,
 )
+from kol_bigdata_realtime_analytics_spark.streaming.heavy_hitters import MG_BUCKETS, MG_K
 from kol_bigdata_realtime_analytics_spark.streaming.sinks import run_to_memory
 from kol_bigdata_realtime_analytics_spark.streaming.trending import run_trending_stream
 
@@ -236,7 +237,7 @@ def stream_stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFra
 
     events = events_stream_source(spark, sf_dir)
     return (
-        run_to_memory(attribution_pairs(events, max_gap="2 hours"), "ss_attr_mem")
+        run_to_memory(attribution_pairs(events), "ss_attr_mem")
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_attributed"),
@@ -271,7 +272,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _require_single_file_replay(sf_dir, "streaming_dedup_events")
     events = events_stream_source(spark, sf_dir)
-    deduped = dedup_within_watermark(events, ["user_id", "event_type"], watermark="10 minutes")
+    deduped = dedup_within_watermark(events, ["user_id", "event_type"])
     return (
         run_to_memory(deduped, "ss_dedup_mem")
         .groupBy("event_type")
@@ -498,9 +499,7 @@ def streaming_unattributed_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = interval_join(
         views,
         clicks,
-        key="user_id",
         max_gap="10 minutes",
-        left_watermark="10 minutes",
         right_watermark="20 minutes",
         how="leftOuter",
     )
@@ -554,9 +553,7 @@ def streaming_attributed_views_semi(spark: SparkSession, sf_dir: str) -> DataFra
     j = interval_join(
         views,
         clicks,
-        key="user_id",
         max_gap="10 minutes",
-        left_watermark="10 minutes",
         right_watermark="20 minutes",
         how="leftSemi",
     )
@@ -643,9 +640,7 @@ def streaming_unmatched_both_sides(spark: SparkSession, sf_dir: str) -> DataFram
     j = interval_join(
         views,
         clicks,
-        key="user_id",
         max_gap="10 minutes",
-        left_watermark="10 minutes",
         right_watermark="20 minutes",
         how="fullOuter",
     )
@@ -673,10 +668,6 @@ def streaming_unmatched_both_sides(spark: SparkSession, sf_dir: str) -> DataFram
 # Streaming heavy hitters — bounded-state Misra-Gries via stateful shards.
 # ---------------------------------------------------------------------------
 
-_SHH_K = 8
-_SHH_BUCKETS = 8
-
-
 def _shh_keyed(df: DataFrame) -> DataFrame:
     """Same in-plan hot-key derivation as heavy_hitters_hotkeys (user_id
     % 7 -> -1) so genuine heavy keys exist over uniform TESTDATA."""
@@ -696,10 +687,10 @@ def _shh_run(spark: SparkSession, sf_dir: str, mem_name: str) -> DataFrame:
     _require_single_file_replay(sf_dir, "streaming_heavy_hitters")
     stream = _shh_keyed(events_stream_source(spark, sf_dir))
     return run_to_memory(
-        mg_heavy_hitters_stream(stream, k=_SHH_K, n_buckets=_SHH_BUCKETS),
+        mg_heavy_hitters_stream(stream),
         mem_name,
         output_mode="update",
-        state_partitions=_SHH_BUCKETS,  # literal key domain: the 8 MG shards
+        state_partitions=MG_BUCKETS,  # literal key domain: the 8 MG shards
     )
 
 
@@ -720,12 +711,12 @@ WITH keyed AS (
   SELECT CASE WHEN user_id % 7 = 0 THEN -1 ELSE user_id END AS hot_key
   FROM events
 ),
-b AS (SELECT hot_key, ((hot_key % {_SHH_BUCKETS}) + {_SHH_BUCKETS}) % {_SHH_BUCKETS} AS bucket FROM keyed),
+b AS (SELECT hot_key, ((hot_key % {MG_BUCKETS}) + {MG_BUCKETS}) % {MG_BUCKETS} AS bucket FROM keyed),
 c AS (SELECT bucket, hot_key, CAST(COUNT(*) AS BIGINT) AS cnt FROM b GROUP BY 1, 2),
 nb AS (SELECT bucket, CAST(SUM(cnt) AS BIGINT) AS n_b FROM c GROUP BY 1),
 heavy AS (
   SELECT c.bucket, c.hot_key FROM c JOIN nb USING (bucket)
-  WHERE c.cnt * {_SHH_K + 1} > nb.n_b
+  WHERE c.cnt * {MG_K + 1} > nb.n_b
 )
 SELECT CAST((SELECT COUNT(*) FROM heavy) AS BIGINT) AS n_true_heavy,
        CAST(0 AS BIGINT) AS n_missed,
@@ -746,13 +737,13 @@ def streaming_heavy_hitters_check(spark: SparkSession, sf_dir: str) -> DataFrame
     cand = _shh_run(spark, sf_dir, "shh_check_mem")
     keyed = _shh_keyed(table(spark, sf_dir, "events"))
     c = keyed.groupBy(
-        F.pmod(F.col("hot_key"), F.lit(_SHH_BUCKETS)).cast("long").alias("bucket"),
+        F.pmod(F.col("hot_key"), F.lit(MG_BUCKETS)).cast("long").alias("bucket"),
         "hot_key",
     ).agg(F.count("*").alias("cnt"))
     nb = c.groupBy("bucket").agg(F.sum("cnt").alias("n_b"))
     heavy = (
         c.join(nb, "bucket")
-        .filter(F.col("cnt") * (_SHH_K + 1) > F.col("n_b"))
+        .filter(F.col("cnt") * (MG_K + 1) > F.col("n_b"))
         .select("bucket", "hot_key")
     )
     missed = heavy.join(
@@ -763,7 +754,7 @@ def streaming_heavy_hitters_check(spark: SparkSession, sf_dir: str) -> DataFrame
     n_heavy = heavy.agg(F.count("*").cast("long").alias("n_true_heavy"))
     n_missed = missed.agg(F.count("*").cast("long").alias("n_missed"))
     bound = cand.agg(
-        (F.count("*") <= _SHH_BUCKETS * _SHH_K).alias("state_bound_ok")
+        (F.count("*") <= MG_BUCKETS * MG_K).alias("state_bound_ok")
     )
     return n_heavy.crossJoin(n_missed).crossJoin(bound)
 

@@ -75,9 +75,7 @@ def _pieces(vocab: DataFrame) -> DataFrame:
     )
 
 
-def _viterbi_segments(
-    spark: SparkSession, sf_dir: str, costs_fn=None
-) -> tuple[DataFrame, DataFrame]:
+def _viterbi_segments(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Viterbi-segment every vocabulary word under fixed-point costs.
 
     Returns (segments, vocab): segments = (w, c, path) where path is the
@@ -90,17 +88,9 @@ def _viterbi_segments(
     comparison is exact. The loop runs max(len(w)) rounds (data-derived
     scalar), each round ONE equi-join of the vocab-sized state frame
     against the piece-cost table plus one argmin window partitioned by
-    word — no corpus data inside the loop.
-
-    `costs_fn`, when given, maps the seed (piece, cnt) inventory to the
-    (piece, cnt) table to actually train on — the pruning hook (EM round
-    2 restricts to the surviving inventory; missing pieces simply drop
-    out of the DP join, and single characters are always retained so
-    every word stays segmentable)."""
+    word — no corpus data inside the loop."""
     vocab = _vocab(spark, sf_dir).localCheckpoint(eager=True)
     pieces = _pieces(vocab)
-    if costs_fn is not None:
-        pieces = costs_fn(pieces)
     tot = pieces.agg(F.sum("cnt").alias("tot"))
     costs = (
         pieces.crossJoin(F.broadcast(tot))

@@ -68,21 +68,3 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Read every TESTDATA parquet table lazily and register temp views.
-
-    Returns {name: DataFrame}. Registration means queries can be written in
-    either the DataFrame API or spark.sql — Catalyst produces the same plan.
-    """
-    from kol_bigdata_realtime_analytics_spark.plans.registry import table
-
-    dfs = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            dfs[name] = df
-    return dfs

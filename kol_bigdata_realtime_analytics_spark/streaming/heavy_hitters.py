@@ -26,6 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+#: Counters per bucket summary and buckets (stateful shards) of the stream.
+MG_K = 8
+MG_BUCKETS = 8
+
 OUTPUT_SCHEMA = "bucket long, candidate_key long, mg_weight long"
 STATE_SCHEMA = "keys array<long>, counts array<long>"
 
@@ -63,22 +67,20 @@ def _mg_fn_factory(k: int):
     return fn
 
 
-def mg_heavy_hitters_stream(
-    keyed: DataFrame, k: int = 8, n_buckets: int = 8
-) -> DataFrame:
+def mg_heavy_hitters_stream(keyed: DataFrame) -> DataFrame:
     """Streaming MG candidates over a frame with a `hot_key` long column.
 
     Each micro-batch updates the per-bucket summaries and emits the current
     candidate set (update semantics: downstream sinks upsert on
     (bucket, candidate_key)). The shuffle per batch moves events once
-    (groupBy bucket); emitted rows are <= n_buckets * k per batch.
+    (groupBy bucket); emitted rows are <= MG_BUCKETS * MG_K per batch.
     """
     bucketed = keyed.select(
         F.col("hot_key").cast("long").alias("hot_key"),
-        F.pmod(F.col("hot_key"), F.lit(n_buckets)).cast("long").alias("bucket"),
+        F.pmod(F.col("hot_key"), F.lit(MG_BUCKETS)).cast("long").alias("bucket"),
     )
     return bucketed.groupBy("bucket").applyInPandasWithState(
-        _mg_fn_factory(k),
+        _mg_fn_factory(MG_K),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",

@@ -22,6 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Event-time watermark delay of interval_join's left side and of
+#: dedup_within_watermark's state.
+WATERMARK = "10 minutes"
+
 _INTERVAL_UNIT_SECONDS = {
     "second": 1,
     "seconds": 1,
@@ -44,105 +48,72 @@ def _interval_seconds(interval: str) -> int:
 def interval_join(
     left: DataFrame,
     right: DataFrame,
-    key: str = "user_id",
-    left_ts: str = "l_ts",
-    right_ts: str = "r_ts",
     max_gap: str = "10 minutes",
-    left_watermark: str = "10 minutes",
     right_watermark: str | None = None,
     how: str = "inner",
 ) -> DataFrame:
-    """Equi-key + event-time-interval join of two (streaming) frames.
+    """Equi-key + event-time-interval join of two (streaming) frames on
+    ``user_id``; the left side's time is ``l_ts``, the right side's ``r_ts``.
 
-    Matches right rows with ``left_ts < right_ts <= left_ts + max_gap``.
+    Matches right rows with ``l_ts < r_ts <= l_ts + max_gap``.
 
     Watermark contract: for an INNER stream-stream join Spark accepts any
     watermark pair and never errors — the watermarks plus the interval
     condition only determine how long each side's join state is retained
     (left rows stay joinable until the right watermark passes
-    ``left_ts + max_gap``). OUTER interval joins (``how="leftOuter"`` etc.)
+    ``l_ts + max_gap``). OUTER interval joins (``how="leftOuter"`` etc.)
     additionally require the time bound in the condition (present here) so
     NULL-padded rows can emit once the other side is provably closed: a
     left row's NULL result emits when the GLOBAL watermark
     (min of both sides' under the default multipleWatermarkPolicy=min)
-    passes ``left_ts + max_gap`` — rows closer to the stream's end than
+    passes ``l_ts + max_gap`` — rows closer to the stream's end than
     that stay in state and never emit in a bounded replay, which any
     oracle of an outer stream must account for. To keep left state
     retention tight and correct for any ``max_gap``, the right watermark
-    defaults to ``left_watermark + max_gap`` instead of a fixed constant.
+    defaults to ``WATERMARK + max_gap`` instead of a fixed constant.
     """
     if right_watermark is None:
         right_watermark = (
-            f"{_interval_seconds(left_watermark) + _interval_seconds(max_gap)} seconds"
+            f"{_interval_seconds(WATERMARK) + _interval_seconds(max_gap)} seconds"
         )
     cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (F.col(f"r.{right_ts}") > F.col(f"l.{left_ts}"))
-        & (F.col(f"r.{right_ts}") <= F.col(f"l.{left_ts}") + F.expr(f"INTERVAL {max_gap}"))
+        (F.col("l.user_id") == F.col("r.user_id"))
+        & (F.col("r.r_ts") > F.col("l.l_ts"))
+        & (F.col("r.r_ts") <= F.col("l.l_ts") + F.expr(f"INTERVAL {max_gap}"))
     )
     return (
-        left.withWatermark(left_ts, left_watermark)
+        left.withWatermark("l_ts", WATERMARK)
         .alias("l")
-        .join(right.withWatermark(right_ts, right_watermark).alias("r"), cond, how)
+        .join(right.withWatermark("r_ts", right_watermark).alias("r"), cond, how)
     )
 
 
-def attribution_pairs(
-    events: DataFrame,
-    key: str = "user_id",
-    view_type: str = "view",
-    click_type: str = "click",
-    max_gap: str = "2 hours",
-) -> DataFrame:
+def attribution_pairs(events: DataFrame) -> DataFrame:
     """Click attribution over one event stream: each click pairs with every
-    view by the same user in the preceding `max_gap`.
+    view by the same user in the preceding 2 hours.
 
-    Pair-level output (key, gap_us) is APPEND-safe — the streaming query
+    Pair-level output (user_id, gap_us) is APPEND-safe — the streaming query
     emits each matched pair exactly once as the watermark closes it, so the
     set of emitted rows equals the batch join and any downstream aggregate
     of the sink is deterministic. Gaps are exact epoch-microsecond integers
     (no float/second-truncation ambiguity vs the oracle)."""
-    views = events.filter(F.col("event_type") == view_type).select(
-        key, F.col("ts").alias("l_ts")
+    views = events.filter(F.col("event_type") == "view").select(
+        "user_id", F.col("ts").alias("l_ts")
     )
-    clicks = events.filter(F.col("event_type") == click_type).select(
-        key, F.col("ts").alias("r_ts")
+    clicks = events.filter(F.col("event_type") == "click").select(
+        "user_id", F.col("ts").alias("r_ts")
     )
-    pairs = interval_join(views, clicks, key=key, max_gap=max_gap)
+    pairs = interval_join(views, clicks, max_gap="2 hours")
     gap_us = F.unix_micros(F.col("r.r_ts")) - F.unix_micros(F.col("l.l_ts"))
-    return pairs.select(F.col(f"l.{key}").alias(key), gap_us.alias("gap_us"))
+    return pairs.select(F.col("l.user_id").alias("user_id"), gap_us.alias("gap_us"))
 
 
-def attributed_clicks(
-    events: DataFrame,
-    key: str = "user_id",
-    view_type: str = "view",
-    click_type: str = "click",
-    max_gap: str = "2 hours",
-) -> DataFrame:
-    """Per-user attribution summary over the interval-joined pairs."""
-    return (
-        attribution_pairs(events, key, view_type, click_type, max_gap)
-        .groupBy(key)
-        .agg(
-            F.count("*").alias("n_attributed"),
-            F.min("gap_us").alias("min_gap_us"),
-            F.max("gap_us").alias("max_gap_us"),
-        )
-    )
-
-
-def dedup_within_watermark(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def dedup_within_watermark(df: DataFrame, keys: list[str]) -> DataFrame:
     """Watermark-bounded exact dedup for at-least-once streams.
 
     State per key expires once the watermark passes it — bounded memory at
     any throughput, the property plain dropDuplicates lacks on streams.
-    Re-deliveries arriving later than `watermark` are NOT deduped (that is
-    the documented contract; size the watermark to the source's re-delivery
-    horizon)."""
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    Re-deliveries arriving later than WATERMARK after ``ts`` are NOT deduped
+    (that is the documented contract; size the watermark to the source's
+    re-delivery horizon)."""
+    return df.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(keys)

@@ -4,11 +4,12 @@ The reference SPECIFIES momentum (README.md:748-756) but never implements it
 — its streaming UDF receives prev_engagement=None and hardcodes baselines
 (reference trending_stream.py:279-283; the Redis-lookup velocity hack at
 kafka_profile_stream.py:153-169 reads previous state per row in Python).
-This module implements it properly, twice:
+This module implements it properly, in two forms:
 
-- `momentum_batch`   : window-function form (lag frame avg) — SQL-expressible,
-  duckdb-oracle checkable, used by the batch/serving path.
-- `momentum_stream`  : true streaming stateful operator via
+- `momentum_batch`   : window-function form (RANGE frame avg) — the
+  reference semantics; SQL-expressible, duckdb-oracle checkable, used by
+  the batch/serving path.
+- `momentum_stream`  : the one streaming form, a stateful operator via
   applyInPandasWithState keyed by KOL: state = open tumbling windows +
   the last 3 closed-window velocities; windows close when the event-time
   watermark passes their end, emitting velocity + momentum + trending score.
@@ -22,8 +23,8 @@ windows therefore restarts at momentum 0 — deliberate, because it is the only
 definition where per-key streaming state is both bounded AND *expirable*
 (closed velocities older than 4 slots behind the watermark can never feed a
 future window, so idle keys can be dropped from the state store entirely; a
-rows-based "last 3 ever" would pin every key forever). All three forms share
-this definition and tests assert they agree row-for-row, including across a
+rows-based "last 3 ever" would pin every key forever). Both forms share this
+definition and tests assert they agree row-for-row, including across a
 >3-window idle gap.
 """
 
@@ -38,13 +39,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kol_bigdata_realtime_analytics_spark.functions.scoring import (
-    trending_label,
     trending_raw,
     trending_score,
     trending_velocity,
 )
 
 WINDOW_SECONDS = 300
+#: The events columns both forms read: event time, KOL key, engagement value.
+TS_COL, KEY_COL, VALUE_COL = "ts", "user_id", "value"
 _N_MOMENTUM = 3
 _WMS = WINDOW_SECONDS * 1000
 
@@ -58,12 +60,7 @@ STATE_SCHEMA = (
 )
 
 
-def momentum_batch(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
+def momentum_batch(events: DataFrame) -> DataFrame:
     """Batch semantics: tumbling 5-min windows per key; momentum = avg
     velocity over the windows in the previous 3 window slots (RANGE frame
     on window_start_ms — 0 after an idle gap of >= 3 windows, matching the
@@ -72,10 +69,10 @@ def momentum_batch(
     # registry's order-proof rule, PERF.md §3) then casts back to double so
     # velocity/score math is IEEE over the identical value in every engine.
     agg = events.groupBy(
-        F.window(ts_col, f"{WINDOW_SECONDS} seconds").alias("w"), F.col(key_col).alias("key")
+        F.window(TS_COL, f"{WINDOW_SECONDS} seconds").alias("w"), F.col(KEY_COL).alias("key")
     ).agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(18,6)")).cast("double").alias("engagement"),
+        F.sum(F.col(VALUE_COL).cast("decimal(18,6)")).cast("double").alias("engagement"),
     )
     vel = trending_velocity(F.col("engagement"), F.col("n_events"))
     with_vel = agg.select(
@@ -208,172 +205,20 @@ def _momentum_fn(
         )
 
 
-def _prepared(
-    events: DataFrame, ts_col: str, key_col: str, value_col: str, watermark: str
-) -> DataFrame:
-    """The (ts, key, value) input of both streaming forms. value is put on
-    the DECIMAL(18,6) grid momentum_batch sums on: a float32-encoded file
-    widens to doubles with digits past the sixth decimal, which the batch's
-    exact sum drops and a float fold would keep."""
-    return events.select(
-        F.col(ts_col).alias("ts"),
-        F.col(key_col).alias("key"),
-        F.col(value_col).cast("decimal(18,6)").cast("double").alias("value"),
-    ).withWatermark("ts", watermark)
-
-
-def momentum_stream(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    value_col: str = "value",
-    watermark: str = "5 minutes",
-) -> DataFrame:
-    """Streaming form: watermarked, keyed, O(1)-state-per-key momentum op."""
-    prepared = _prepared(events, ts_col, key_col, value_col, watermark)
+def momentum_stream(events: DataFrame) -> DataFrame:
+    """Streaming form: watermarked, keyed, O(1)-state-per-key momentum op.
+    value is put on the DECIMAL(18,6) grid momentum_batch sums on: a
+    float32-encoded file widens to doubles with digits past the sixth
+    decimal, which the batch's exact sum drops and a float fold would keep."""
+    prepared = events.select(
+        F.col(TS_COL).alias("ts"),
+        F.col(KEY_COL).alias("key"),
+        F.col(VALUE_COL).cast("decimal(18,6)").cast("double").alias("value"),
+    ).withWatermark("ts", "5 minutes")
     return prepared.groupBy("key").applyInPandasWithState(
         _momentum_fn,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def attach_label(df: DataFrame) -> DataFrame:
-    return df.withColumn("label", trending_label(F.col("trending_score")))
-
-
-# ---------------------------------------------------------------------------
-# transformWithState form — Spark 4's arbitrary-stateful API. Same semantics
-# as momentum_stream, but state lives in named ValueStates (RocksDB-backed;
-# the provider is REQUIRED by this API) and window-close wake-ups are real
-# registered event-time timers instead of GroupState timeouts.
-# ---------------------------------------------------------------------------
-
-_OPEN_SCHEMA = "ws array<long>, n array<long>, eng array<double>"
-_CLOSED_SCHEMA = "ws array<long>, vel array<double>"
-
-
-def _ts_ms(series: pd.Series) -> pd.Series:
-    """Epoch millis regardless of the batch's datetime64 unit (ns vs us)."""
-    return series.astype("datetime64[ns]").astype("int64") // 10**6
-
-
-try:  # pyspark >= 4.0
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor as _SPBase
-except ImportError:  # pragma: no cover - older pyspark
-    _SPBase = object
-
-
-class _MomentumProcessor(_SPBase):
-    """StatefulProcessor: per-key open tumbling windows + last-3 velocities."""
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        self.open = handle.getValueState("open", _OPEN_SCHEMA)
-        self.closed = handle.getValueState("closed", _CLOSED_SCHEMA)
-
-    # -- state (de)serialization ------------------------------------------
-    def _load(self) -> dict:
-        sd = {"open": {}, "closed": []}
-        if self.open.exists():
-            ws, n, eng = self.open.get()
-            sd["open"] = {w: [c, e] for w, c, e in zip(ws, n, eng)}
-        if self.closed.exists():
-            ws, vel = self.closed.get()
-            sd["closed"] = list(zip(ws, vel))
-        return sd
-
-    def _store(self, sd: dict, wm: int) -> None:
-        if sd["open"]:
-            self.open.update(
-                (
-                    list(sd["open"].keys()),
-                    [v[0] for v in sd["open"].values()],
-                    [v[1] for v in sd["open"].values()],
-                )
-            )
-            nxt = min(ws + _WMS for ws in sd["open"])
-            self.handle.registerTimer(max(nxt, wm + 1))
-        else:
-            self.open.clear()
-        if sd["closed"]:
-            self.closed.update(
-                ([w for w, _ in sd["closed"]], [v for _, v in sd["closed"]])
-            )
-            if not sd["open"]:
-                # closed-only state feeds future momentum; wake when the
-                # newest entry expires so idle keys leave the store
-                last = max(w for w, _ in sd["closed"])
-                self.handle.registerTimer(max(last + (_N_MOMENTUM + 1) * _WMS, wm + 1))
-        else:
-            self.closed.clear()
-
-    @staticmethod
-    def _emit(key, emitted):
-        return pd.DataFrame(
-            {
-                "window_start_ms": [e[0] for e in emitted],
-                "key": [key[0]] * len(emitted),
-                "n_events": [e[1] for e in emitted],
-                "engagement": [e[2] for e in emitted],
-                "velocity": [e[3] for e in emitted],
-                "momentum": [e[4] for e in emitted],
-                "trending_score": [e[5] for e in emitted],
-            }
-        )
-
-    # -- processing --------------------------------------------------------
-    def handleInputRows(self, key, rows, timerValues):
-        sd = self._load()
-        for pdf in rows:
-            ws_series = _ts_ms(pdf["ts"]) // (WINDOW_SECONDS * 1000) * (WINDOW_SECONDS * 1000)
-            for ws, grp in pdf.groupby(ws_series):
-                slot = sd["open"].setdefault(int(ws), [0, 0.0])
-                slot[0] += len(grp)
-                slot[1] += float(grp["value"].sum())
-        wm = timerValues.getCurrentWatermarkInMs()
-        emitted = _close_windows(sd, wm)
-        sd["closed"] = _expire_closed(sd["closed"], wm)
-        self._store(sd, wm)
-        if emitted:
-            yield self._emit(key, emitted)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        sd = self._load()
-        wm = timerValues.getCurrentWatermarkInMs()
-        emitted = _close_windows(sd, wm)
-        sd["closed"] = _expire_closed(sd["closed"], wm)
-        self._store(sd, wm)
-        if emitted:
-            yield self._emit(key, emitted)
-
-    def close(self) -> None:
-        pass
-
-
-def momentum_tws(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    value_col: str = "value",
-    watermark: str = "5 minutes",
-) -> DataFrame:
-    """momentum_stream on the transformWithState API (Spark 4).
-
-    Identical output contract/semantics to momentum_stream; tests assert all
-    three forms (batch window, applyInPandasWithState, transformWithState)
-    agree row-for-row on replay. transformWithState REQUIRES the RocksDB
-    state-store provider — set it before the query starts:
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    """
-    proc = _MomentumProcessor()
-    prepared = _prepared(events, ts_col, key_col, value_col, watermark)
-    return prepared.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
     )

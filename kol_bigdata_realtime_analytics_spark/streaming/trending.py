@@ -56,11 +56,10 @@ def windowed_engagement(
     )
 
 
-def scored(windows: DataFrame, momentum_col: str | None = None) -> DataFrame:
+def scored(windows: DataFrame) -> DataFrame:
     """Attach velocity / trending score / label columns (all native exprs)."""
     vel = trending_velocity(F.col("engagement"), F.col("n_events"))
-    mom = F.col(momentum_col) if momentum_col else None
-    raw = trending_raw(vel, F.col("n_events"), momentum=mom)
+    raw = trending_raw(vel, F.col("n_events"))
     score = trending_score(raw)
     return windows.select(
         F.col("w.start").alias("window_start"),
@@ -75,13 +74,11 @@ def scored(windows: DataFrame, momentum_col: str | None = None) -> DataFrame:
 
 
 def run_trending_stream(
-    spark,
-    source_df: DataFrame,
-    query_name: str = "trending_stream",
-    output_mode: str = "complete",
+    spark, source_df: DataFrame, query_name: str = "trending_stream"
 ) -> DataFrame:
-    """Drive the trending plan over a STREAMING source into a memory sink and
-    return the materialized result table (sinks.run_to_memory)."""
+    """Drive the trending plan over a STREAMING source into a memory sink in
+    complete mode and return the materialized result table
+    (sinks.run_to_memory)."""
     return run_to_memory(
-        scored(windowed_engagement(source_df)), query_name, output_mode=output_mode
+        scored(windowed_engagement(source_df)), query_name, output_mode="complete"
     )

@@ -17,12 +17,13 @@ Usage: python scripts/oracle_channel_audit.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import pandas as pd  # noqa: F401 — toPandas/fetchdf materialization under test
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kol_bigdata_realtime_analytics_spark.plans import REGISTRY  # noqa: E402
 from kol_bigdata_realtime_analytics_spark.session import TABLES  # noqa: E402

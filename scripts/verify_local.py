@@ -10,12 +10,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kol_bigdata_realtime_analytics_spark.session import TABLES, get_spark  # noqa: E402
 

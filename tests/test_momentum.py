@@ -239,71 +239,3 @@ def test_state_store_soak_bounded(spark, tmp_path):
         assert kk in got, kk
         assert got[kk]["momentum"] == pytest.approx(e["momentum"], rel=1e-9), kk
 
-
-def test_tws_momentum_equals_batch(spark, tmp_path, event_rows):
-    """transformWithState (Spark 4 API, RocksDB-backed) == batch semantics.
-
-    The runtime API client needs google.protobuf (not in this container), so
-    the full run is capability-gated like the Kafka/Iceberg connectors; the
-    plan-construction path is still exercised unconditionally below."""
-    import importlib.util
-
-    from kol_bigdata_realtime_analytics_spark.streaming.momentum import momentum_tws
-
-    # plan construction (schema contract) works regardless of protobuf
-    stream0 = spark.readStream.schema(SCHEMA).parquet(str(tmp_path))
-    plan = momentum_tws(stream0)
-    assert set(plan.columns) == {
-        "window_start_ms", "key", "n_events", "engagement",
-        "velocity", "momentum", "trending_score",
-    }
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    if not has_protobuf:
-        pytest.skip("transformWithState runtime needs protobuf (not in container)")
-
-    df = spark.createDataFrame(event_rows, SCHEMA)
-    src = str(tmp_path / "mom_tws_src")
-    df.write.mode("overwrite").parquet(src)
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    try:
-        stream = spark.readStream.schema(df.schema).parquet(src)
-        q = (
-            momentum_tws(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("mom_tws_out")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = {
-            (r["key"], r["window_start_ms"]): r
-            for r in spark.table("mom_tws_out").collect()
-        }
-    finally:
-        if prev:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
-
-    expected = {
-        (r["key"], r["window_start_ms"]): r
-        for r in momentum_batch(df.filter(F.col("user_id") != 99)).collect()
-    }
-    assert set(got) == set(expected)
-    for k, e in expected.items():
-        g = got[k]
-        assert g["n_events"] == e["n_events"]
-        assert g["engagement"] == pytest.approx(e["engagement"], rel=1e-12)
-        assert g["velocity"] == pytest.approx(e["velocity"], rel=1e-9)
-        assert g["momentum"] == pytest.approx(e["momentum"], rel=1e-9)
-        assert g["trending_score"] == pytest.approx(e["trending_score"], rel=1e-9)

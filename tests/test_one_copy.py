@@ -5,6 +5,7 @@ has to catch copies drifting apart. Runs no Spark."""
 
 from __future__ import annotations
 
+import ast
 import os
 
 import pytest
@@ -61,3 +62,125 @@ def test_bounded_streams_go_through_the_one_runner(path):
         src = fh.read()
     assert '.format("memory")' not in src
     assert "run_to_memory(" in src
+
+
+#: Modules holding deployment settings or outside request input: their
+#: options stay configurable, so the census below skips them.
+_CONFIGURABLE = (
+    "sources/", "serving.py", "streaming/sinks.py", "session.py", "operators/index_store.py",
+)
+#: Options a benchmark file passes at their default value. Benchmark files
+#: do not change, so these stay.
+_BENCH_PINNED = {
+    f"streaming/trending.py:windowed_engagement({p})"
+    for p in ("ts_col", "key_col", "value_col", "window_duration", "watermark")
+}
+
+
+def _trees() -> dict[str, ast.Module]:
+    """Every Python file that can call into the engine, by repo-relative path."""
+    paths = [os.path.join(REPO, f) for f in ("bench.py", "__spark_entry__.py")]
+    for d in ("kol_bigdata_realtime_analytics_spark", "tests", "scripts", "perfbench"):
+        for root, _, files in os.walk(os.path.join(REPO, d)):
+            paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    out = {}
+    for p in paths:
+        with open(p) as fh:
+            out[os.path.relpath(p, REPO)] = ast.parse(fh.read())
+    return out
+
+
+def _module(rel: str) -> str:
+    return rel[:-3].replace("/", ".").removesuffix(".__init__")
+
+
+def _literals(tree: ast.Module) -> dict[str, str]:
+    """Module-level names bound to a literal (NAME = 3, A, B = 1, 2)."""
+    out = {}
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and len(node.targets) == 1:
+            target, value = node.targets[0], node.value
+            pairs = (
+                zip(target.elts, value.elts)
+                if isinstance(target, ast.Tuple) and isinstance(value, ast.Tuple)
+                else [(target, value)]
+            )
+            for name, val in pairs:
+                try:
+                    out[name.id] = repr(ast.literal_eval(val))
+                except (AttributeError, ValueError, TypeError, SyntaxError):
+                    pass
+    return out
+
+
+def test_every_option_has_a_caller():
+    """An optional parameter of an engine function must be passed a
+    non-default value by some call site in the repo; otherwise it is a
+    constant wearing an option's clothes and its default belongs in the
+    body. Call sites are matched by function name (a name shared by two
+    functions pools their calls, which can only hide a hit); a call with
+    *args or **kwargs counts as passing everything. Names bound to a
+    literal at module level, or imported from a module that binds them,
+    compare by value."""
+    trees = _trees()
+    literals = {_module(rel): _literals(t) for rel, t in trees.items()}
+
+    def value(node, rel):
+        try:
+            return repr(ast.literal_eval(node))
+        except (ValueError, TypeError, SyntaxError):
+            pass
+        if isinstance(node, ast.Name):
+            here = literals[_module(rel)]
+            if node.id in here:
+                return here[node.id]
+            for imp in ast.walk(trees[rel]):
+                if isinstance(imp, ast.ImportFrom) and imp.module in literals:
+                    for alias in imp.names:
+                        if (alias.asname or alias.name) == node.id:
+                            return literals[imp.module].get(alias.name, ast.dump(node))
+        return ast.dump(node)
+
+    calls: dict[str, list] = {}
+    for rel, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                calls.setdefault(name, []).append((rel, node))
+
+    hits = []
+    for rel, tree in trees.items():
+        sub = rel.removeprefix("kol_bigdata_realtime_analytics_spark/")
+        if sub == rel or sub.startswith(_CONFIGURABLE):
+            continue
+        for owner in ast.walk(tree):
+            for fn in ast.iter_child_nodes(owner):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                a = fn.args
+                pos = a.posonlyargs + a.args
+                skip = 1 if isinstance(owner, ast.ClassDef) else 0
+                first = len(pos) - len(a.defaults)
+                opts = [(p.arg, i - skip, d) for i, (p, d) in enumerate(
+                    zip(pos[first:], a.defaults), first)]
+                opts += [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+                for param, idx, default in opts:
+                    want = value(default, rel)
+                    varies = False
+                    for crel, call in calls.get(fn.name, []):
+                        if any(isinstance(x, ast.Starred) for x in call.args) or any(
+                            k.arg is None for k in call.keywords
+                        ):
+                            varies = True
+                            break
+                        got = [k.value for k in call.keywords if k.arg == param]
+                        if not got and idx is not None and idx < len(call.args):
+                            got = [call.args[idx]]
+                        if got and value(got[0], crel) != want:
+                            varies = True
+                            break
+                    tag = f"{sub}:{fn.name}({param})"
+                    if not varies and tag not in _BENCH_PINNED:
+                        hits.append(tag)
+    assert not hits, f"{len(hits)} options only ever receive their default: {hits}"

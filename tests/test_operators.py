@@ -309,7 +309,7 @@ def test_ivf_topk_recall_on_testdata(spark, sf_small):
     emb = table(spark, sf_small, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = {(r["q_id"], r["c_id"]) for r in brute_force_topk(emb, queries, k=3).collect()}
-    approx = {(r["q_id"], r["c_id"]) for r in ivf_topk(emb, queries, k=3, n_centroids=8, n_probe=2).collect()}
+    approx = {(r["q_id"], r["c_id"]) for r in ivf_topk(emb, queries, n_centroids=8).collect()}
     assert len(approx & exact) / len(exact) >= 0.2  # random-ish vectors; probing 1/4 of lists
     # every query must still return a full top-k (lists are non-empty)
     per_q = {}
@@ -362,7 +362,7 @@ def test_ivf_kmeans_recall_on_clustered_data(spark):
     exact = {(r["q_id"], r["c_id"]) for r in brute_force_topk(emb, queries, k=3).collect()}
     approx = {
         (r["q_id"], r["c_id"])
-        for r in ivf_topk(emb, queries, k=3, n_centroids=4, n_probe=2).collect()
+        for r in ivf_topk(emb, queries, n_centroids=4).collect()
     }
     assert len(approx & exact) / len(exact) >= 0.9
 
@@ -470,7 +470,7 @@ def test_opq_topk_contract_and_clustered_recall(spark):
         )
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     queries = emb.filter(F.col("vec_id").isin([0, 1, 2, 3]))
-    out = opq_topk(emb, queries, k=3, m=2, ksub=4, sample_size=80).collect()
+    out = opq_topk(emb, queries, m=2, ksub=4, sample_size=80).collect()
     assert len(out) == 12
     assert all(
         set(r.asDict()) == {"q_id", "c_id", "cosine", "rank"} for r in out
@@ -751,7 +751,7 @@ def test_pagerank_matches_numpy(spark):
         (3, 0, 1.0), (3, 2, 3.0), (4, 3, 1.0),  # 1 also reached from 0 only
     ]
     df = spark.createDataFrame(edges, "src long, dst long, weight double")
-    got = {r["node"]: r["rank"] for r in pagerank(df, 0.85, n_iter=10).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(df).collect()}
 
     nodes = sorted({s for s, _, _ in edges} | {d for _, d, _ in edges})
     idx = {n: i for i, n in enumerate(nodes)}
@@ -793,7 +793,7 @@ def test_pagerank_fixedpoint_tracks_float(spark):
     flt = {
         r["node"]: r["rank"]
         for r in pagerank(
-            df.selectExpr("src", "dst", "CAST(weight AS DOUBLE) AS weight"), 0.85, 10
+            df.selectExpr("src", "dst", "CAST(weight AS DOUBLE) AS weight")
         ).collect()
     }
     assert fp1.keys() == flt.keys()
@@ -825,7 +825,7 @@ def test_int8_matmul_on_pruned_candidates(spark, sf_small):
     queries = emb.filter(F.col("vec_id") < 5)
     got = {
         (r["q_id"], r["c_id"], r["rank"])
-        for r in int8_topk_matmul(cand, queries, k=3).collect()
+        for r in int8_topk_matmul(cand, queries).collect()
     }
 
     # expected: quantize + exact integer cosine in numpy over the same subset
@@ -1859,7 +1859,7 @@ def test_hash_sample_offline_matches_spark(spark, sf_small):
 
     emb = table(spark, sf_small, "embeddings")
     X_spark = hash_sample(emb, sample_size=4096)
-    X_off = hash_sample_offline(sf_small, sample_size=4096)
+    X_off = hash_sample_offline(sf_small)
     assert X_spark.shape == X_off.shape
     assert np.array_equal(X_spark, X_off)
 

@@ -271,7 +271,7 @@ def test_lsh_topk_recall(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 10)
     exact = brute_force_topk(emb, queries, k=3).select("q_id", "c_id").collect()
-    approx = lsh_topk(emb, queries, dim=64, k=3, n_planes=4, n_tables=8)
+    approx = lsh_topk(emb, queries, dim=64, n_planes=4, n_tables=8)
     got = {(r.q_id, r.c_id) for r in approx.select("q_id", "c_id").collect()}
     want = {(r.q_id, r.c_id) for r in exact}
     recall = len(got & want) / len(want)

@@ -72,12 +72,12 @@ def test_interval_join_stream_equals_batch(spark, tmp_path):
     batch_df.write.mode("overwrite").parquet(src)
 
     stream = spark.readStream.schema(batch_df.schema).parquet(src)
-    out = attribution_pairs(stream, max_gap="2 hours")
+    out = attribution_pairs(stream)
     q = out.writeStream.outputMode("append").format("memory").queryName("t_ssj").start()
     q.processAllAvailable()
     q.stop()
     got = {tuple(r) for r in spark.table("t_ssj").collect()}
-    want = {tuple(r) for r in attribution_pairs(batch_df, max_gap="2 hours").collect()}
+    want = {tuple(r) for r in attribution_pairs(batch_df).collect()}
     assert got == want
     assert len(got) > 0
     # every gap respects the interval bound
@@ -120,8 +120,7 @@ def test_full_outer_interval_join_emits_both_sides(spark, tmp_path):
         "user_id", F.col("ts").alias("r_ts")
     )
     j = interval_join(
-        views, clicks, key="user_id", max_gap="10 minutes",
-        left_watermark="10 minutes", right_watermark="20 minutes",
+        views, clicks, max_gap="10 minutes", right_watermark="20 minutes",
         how="fullOuter",
     )
     out = j.filter(F.col("r.r_ts").isNull() | F.col("l.l_ts").isNull()).select(
@@ -151,7 +150,7 @@ def test_dedup_within_watermark_collapses_redeliveries(spark, tmp_path):
     batch_df.write.mode("overwrite").parquet(src)
 
     stream = spark.readStream.schema(batch_df.schema).parquet(src)
-    out = dedup_within_watermark(stream, ["user_id", "event_type"], watermark="10 minutes")
+    out = dedup_within_watermark(stream, ["user_id", "event_type"])
     q = out.writeStream.outputMode("append").format("memory").queryName("t_ssd").start()
     q.processAllAvailable()
     q.stop()
@@ -433,7 +432,7 @@ def test_streaming_heavy_hitters_state_merges_across_batches(spark, tmp_path):
         if q.name == "shh_state_test":
             q.stop()
     q = (
-        mg_heavy_hitters_stream(stream, k=8, n_buckets=8)
+        mg_heavy_hitters_stream(stream)
         .writeStream.outputMode("update")
         .format("memory")
         .queryName("shh_state_test")
