@@ -76,7 +76,7 @@ def _roundtrip_oracle(sf_dir: str) -> str:
         _hnsw_insert_oracle,
         _hnsw_level_sql,
         _knn_oracle_base_sql,
-        _minhash_banded_ctes,
+        _minhash_band_ctes,
     )
     from kol_bigdata_realtime_analytics_spark.functions.text import (
         DOC_FINGERPRINT_ORACLE_SQL,
@@ -144,7 +144,7 @@ def _roundtrip_oracle(sf_dir: str) -> str:
             "dedup_bands",
             "CAST(band AS VARCHAR) || '|' || CAST(bucket AS VARCHAR)",
             "0",
-            f"WITH {_minhash_banded_ctes('c', ' AND doc_id % 10 <> 0')} "
+            f"WITH {_minhash_band_ctes('c', ' AND doc_id % 10 <> 0')} "
             "SELECT DISTINCT band, bucket FROM bandedc",
         ),
         f"""

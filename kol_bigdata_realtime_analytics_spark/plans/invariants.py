@@ -25,8 +25,14 @@ from kol_bigdata_realtime_analytics_spark.functions.text import (
     token_count,
 )
 from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-    minhash_signature_frame,
+    NUM_HASHES,
+    SHINGLE_N,
+    SIMHASH_MAX_HAMMING,
+    hamming64,
+    minhash_signature,
     shingle_hash_rows,
+    simhash_neardup_pairs,
+    simhash_signature,
 )
 from kol_bigdata_realtime_analytics_spark.operators.similarity import (
     brute_force_topk,
@@ -431,8 +437,8 @@ def pca_variance_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MinHash signature fidelity vs exact n-gram Jaccard (certifies
-# minhash_lsh_candidates' signature machinery)
+# MinHash signature fidelity vs exact n-gram Jaccard (certifies the
+# signature lanes minhash_lsh_candidates bands)
 # ---------------------------------------------------------------------------
 
 _MINHASH_EST_ORACLE = f"""
@@ -448,18 +454,19 @@ def minhash_estimate_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """|signature-estimated Jaccard - exact shingle Jaccard| <= 0.4 per pair.
 
     Companion to `minhash_lsh_candidates` (hash-certified since r10): for every
-    consecutive-id doc pair (both docs long enough to shingle), the 32-hash
-    MinHash estimate must track the EXACT 3-gram Jaccard computed from
-    distinct shingle-hash rows. 32 hashes bound the estimator std at ~0.09,
-    so 0.4 is a >4-sigma margin — and the hashes are seeded, so the check is
-    fully deterministic.
+    consecutive-id doc pair (both docs long enough to shingle), the agreement
+    fraction of the 32 lanes of dedup.minhash_signature — the signature the
+    query bands — must track the EXACT 3-gram Jaccard computed from distinct
+    shingle-hash rows. 32 lanes bound the estimator std at ~0.09, so 0.4 is
+    a >4-sigma margin — and the lanes are literal, so the check is fully
+    deterministic.
     """
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     # exact side: distinct shingle-hash rows -> per-doc set size + pair
     # overlap. The three shared frames (shingle rows, signatures, token
     # counts) are pinned: each feeds 2-3 join branches, and unpinned the
     # corpus re-tokenized once per branch (plan audit: 8 scans -> 1).
-    sh = shingle_hash_rows(docs, "text", "doc_id", 3).distinct().localCheckpoint(eager=True)
+    sh = shingle_hash_rows(docs, "text", "doc_id", SHINGLE_N).distinct().localCheckpoint(eager=True)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
     # shuffle_hash hint: BOTH sides are the corpus-sized shingle frame, and
     # the checkpointed RDD's stats mislead the planner into BROADCASTING it
@@ -475,10 +482,17 @@ def minhash_estimate_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("x.doc").alias("doc_id"))
         .agg(F.count("*").alias("n_inter"))
     )
-    # estimate side: fraction of agreeing minhash lanes — the codegen'd
-    # signature frame (the array-lambda form ran interpreted per shingle
-    # and never finished the 8x scale audit; see minhash_signature_frame)
-    sig = minhash_signature_frame(docs, "text", "doc_id").localCheckpoint(eager=True)
+    # estimate side: fraction of agreeing minhash lanes of the codegen'd
+    # signature frame (an array-lambda signature ran interpreted per
+    # shingle and never finished the 8x scale audit; PERF.md §6)
+    sig = (
+        minhash_signature(docs, "text", "doc_id")
+        .select(
+            F.col("doc").alias("doc_id"),
+            F.array(*[f"l{i}" for i in range(NUM_HASHES)]).alias("sig"),
+        )
+        .localCheckpoint(eager=True)
+    )
     tc = docs.select("doc_id", token_count("text").alias("tc")).localCheckpoint(eager=True)
     pairs = (
         tc.alias("a")
@@ -493,7 +507,7 @@ def minhash_estimate_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda v: v,
             )
         ).cast("double")
-        / 32
+        / NUM_HASHES
     )
     joined = (
         pairs.join(sig.select(F.col("doc_id"), F.col("sig").alias("sig_a")), "doc_id")
@@ -673,23 +687,19 @@ def rolling_hll_users_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT TRUE AS pigeonhole_complete, TRUE AS found_pairs_nonempty",
 )
 def simhash_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Every pair within hamming <= 3 is found by the 4x16-bit banding.
+    """Every pair within hamming <= 3 is found by the 4 x 13-bit banding.
 
     Unlike the probabilistic LSH recall checks, SimHash banding's
     guarantee is EXACT (pigeonhole: 3 bit flips touch <= 3 of 4 chunks, so
     one chunk always matches) — this certifies the implementation, not a
-    bound. Ground truth = brute-force hamming over the signatures of a
-    bounded doc slice UNIONED WITH A PLANTED COPY of itself (hamming-0
+    bound. Ground truth = brute-force hamming over dedup.simhash_signature
+    of a bounded doc slice UNIONED WITH A PLANTED COPY of itself (hamming-0
     pairs by construction, so the check can never pass vacuously at any
-    sf). An anti-join of exact pairs against the banded candidates must
-    be empty. Companion to `simhash_neardups` (hash-certified since r10).
+    sf); candidates = dedup.simhash_neardup_pairs over the same slice, the
+    pair function `simhash_neardups` runs. An anti-join of exact pairs
+    against the candidates must be empty. Companion to `simhash_neardups`
+    (hash-certified since r10).
     """
-    from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-        hamming64,
-        simhash_neardup_pairs,
-        with_simhash,
-    )
-
     docs = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 400)
@@ -698,17 +708,16 @@ def simhash_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.unionByName(
         docs.withColumn("doc_id", F.col("doc_id") + F.lit(1_000_000))
     )
-    # signatures once for the brute-force side (<= 800 rows; broadcast)
-    sig = with_simhash(base, "text", "doc_id").localCheckpoint(eager=True)
+    # signatures for the brute-force side (<= 800 rows; broadcast); the
+    # candidate side signs the same slice again inside the pair function
+    sig = simhash_signature(base, "text", "doc_id").localCheckpoint(eager=True)
     a, b = sig.alias("a"), sig.alias("b")
     exact = (
         a.join(F.broadcast(b), F.col("a.doc") < F.col("b.doc"))
-        .filter(hamming64(F.col("a.sim"), F.col("b.sim")) <= 3)
+        .filter(hamming64(F.col("a.sim"), F.col("b.sim")) <= SIMHASH_MAX_HAMMING)
         .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
     )
-    cand = simhash_neardup_pairs(
-        base, "text", "doc_id", max_hamming=3, sig=sig
-    ).select("id_a", "id_b")
+    cand = simhash_neardup_pairs(base, "text", "doc_id").select("id_a", "id_b")
     missed = exact.join(cand, ["id_a", "id_b"], "left_anti")
     return (
         exact.agg(F.count("*").alias("n_exact"))

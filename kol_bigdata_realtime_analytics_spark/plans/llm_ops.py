@@ -3,10 +3,9 @@ multimodal — the north-star extensions (BASELINE.json), run on the
 `documents` and `embeddings` TESTDATA tables.
 
 Oracle-checked where DuckDB can express the op (exact dedup, Jaccard,
-cosine, text metrics, fingerprints). The registered MinHash-LSH / SimHash
-queries run PORTABLE hash families (hash52/md5 + literal LCG lanes) so
-their oracles re-derive the full candidate sets; the xxhash64 operators
-remain the library fast path, bounded by pytest against exact variants.
+cosine, text metrics, fingerprints). MinHash-LSH / SimHash run the one
+hash family of each in operators/dedup (hash52/md5 + literal LCG lanes),
+so their oracles re-derive the full candidate sets.
 """
 
 from __future__ import annotations
@@ -35,9 +34,18 @@ from kol_bigdata_realtime_analytics_spark.functions.text import (
     token_count,
 )
 from kol_bigdata_realtime_analytics_spark.operators.dedup import (
+    BANDS,
+    DEFAULT_MAX_BUCKET,
+    HASH52_MOD,
+    NUM_HASHES,
+    SIMHASH_BITS,
+    SIMHASH_CHUNKS,
+    SIMHASH_MAX_HAMMING,
     _cc_round,
     exact_dedup_fingerprints,
     jaccard_pairs,
+    minhash_banded,
+    minhash_lane_params,
     minhash_lsh_candidates,
     simhash_neardup_pairs,
 )
@@ -872,27 +880,23 @@ def corpus_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MinHash-LSH + SimHash — PORTABLE hash family (hash52/md5 base hashes,
-# literal LCG lanes), so the DuckDB oracle re-derives the ENTIRE candidate
-# set bit-for-bit: the knn_graph_build literal-plane discipline applied to
-# the text-dedup family (r9 verdict ask #2). The xxhash64 operators remain
-# the library fast path; pytest still bounds both families against exact
-# Jaccard. Mirrors reference MinHash/SimHash dedup semantics (SURVEY §2).
+# MinHash-LSH + SimHash (operators/dedup: hash52/md5 base hashes, literal
+# LCG lanes), so the DuckDB oracle re-derives the ENTIRE candidate set
+# bit-for-bit: the knn_graph_build literal-plane discipline applied to the
+# text-dedup family (r9 verdict ask #2). Mirrors reference MinHash/SimHash
+# dedup semantics (SURVEY §2).
 # ---------------------------------------------------------------------------
 
 
-def _minhash_banded_ctes(suffix: str = "", where: str = "") -> str:
-    """CTE chain toks{s} .. banded{s}: the portable MinHash banding
-    pipeline in DuckDB SQL, suffix-parameterized so one oracle can band
-    two document subsets (the incremental-dedup index/batch split)."""
-    from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-        HASH52_MOD,
-        minhash_lane_params,
-    )
+def _minhash_band_ctes(suffix: str = "", where: str = "") -> str:
+    """CTE chain toks{s} .. banded{s}: dedup.minhash_banded in DuckDB SQL,
+    suffix-parameterized so one oracle can band two document subsets (the
+    incremental-dedup index/batch split)."""
     from kol_bigdata_realtime_analytics_spark.plans.registry import sql_hash52
 
     s = suffix
-    lanes = minhash_lane_params(32)
+    rows_per_band = NUM_HASHES // BANDS
+    lanes = minhash_lane_params(NUM_HASHES)
     lane_sql = ",\n         ".join(
         f"MIN(({a} * hs + {b}) % {HASH52_MOD}) AS l{i}"
         for i, (a, b) in enumerate(lanes)
@@ -904,12 +908,13 @@ def _minhash_banded_ctes(suffix: str = "", where: str = "") -> str:
             h=sql_hash52(
                 "concat_ws('|', "
                 + ", ".join(
-                    f"CAST(l{i} AS VARCHAR)" for i in range(b * 4, (b + 1) * 4)
+                    f"CAST(l{i} AS VARCHAR)"
+                    for i in range(b * rows_per_band, (b + 1) * rows_per_band)
                 )
                 + ")"
             ),
         )
-        for b in range(8)
+        for b in range(BANDS)
     )
     return f"""toks{s} AS (
   SELECT doc_id AS doc, regexp_split_to_array(trim(text), '\\s+') AS ts
@@ -934,13 +939,9 @@ banded{s} AS MATERIALIZED (
 )"""
 
 
-def _minhash_portable_oracle() -> str:
-    from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET,
-    )
-
+def _minhash_oracle() -> str:
     return f"""
-WITH {_minhash_banded_ctes()},
+WITH {_minhash_band_ctes()},
 bc AS (
   SELECT band, bucket FROM banded GROUP BY band, bucket
   HAVING COUNT(*) > 1 AND COUNT(*) <= {DEFAULT_MAX_BUCKET}
@@ -952,30 +953,24 @@ JOIN bc ON bc.band = a.band AND bc.bucket = a.bucket
 """
 
 
-@register("minhash_lsh_candidates", oracle=_minhash_portable_oracle())
+@register("minhash_lsh_candidates", oracle=_minhash_oracle())
 def minhash_lsh_candidates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded MinHash-LSH near-dup candidate pairs, HASH-certified: base
     hashes are hash52 (md5 prefix — identical in both engines), the 32
     signature lanes are literal-LCG universal hashes (a_i*h + b_i) mod
     2^52, and band buckets re-hash the lane values — so the DuckDB oracle
-    re-derives the full candidate set value-for-value. Candidate
-    semantics (8 bands x 4 rows, in-bucket pairs, max_bucket guard)
-    match the xxhash64 library operator; one md5 replaces one xxhash64
-    per token/shingle and 3 integer ops replace each of the 32 lane
-    xxhash64s, so the scan stays whole-stage-codegen'd end to end."""
-    from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-        minhash_lsh_candidates_portable,
-    )
-
-    return minhash_lsh_candidates_portable(
-        table(spark, sf_dir, "documents"), "text", "doc_id"
-    )
+    re-derives the full candidate set value-for-value (8 bands x 4 rows,
+    in-bucket pairs, DEFAULT_MAX_BUCKET guard). Each lane is 3 integer
+    ops, so the scan stays whole-stage-codegen'd end to end;
+    minhash_estimate_check certifies the same 32 lanes against exact
+    shingle Jaccard."""
+    return minhash_lsh_candidates(table(spark, sf_dir, "documents"), "text", "doc_id")
 
 
 # ---------------------------------------------------------------------------
 # Incremental cross-run dedup (r9 verdict ask #8): dedup a NEW batch
 # against an EXISTING corpus's persisted fingerprint index — exact md5
-# fingerprints + portable MinHash band buckets — without rescanning the
+# fingerprints + MinHash band buckets — without rescanning the
 # corpus per batch. The production shape continuous ingest needs: the
 # index frames here are exactly what a real pipeline persists beside the
 # corpus (the ann_index_delta_append frozen-index pattern applied to
@@ -989,8 +984,8 @@ def minhash_lsh_candidates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_incremental_oracle() -> str:
     fp = DOC_FINGERPRINT_ORACLE_SQL.format(col="text")
     return f"""
-WITH {_minhash_banded_ctes('c', ' AND doc_id % 10 <> 0')},
-{_minhash_banded_ctes('b', ' AND doc_id % 10 = 0')},
+WITH {_minhash_band_ctes('c', ' AND doc_id % 10 <> 0')},
+{_minhash_band_ctes('b', ' AND doc_id % 10 = 0')},
 cfp AS (
   SELECT DISTINCT {fp} AS fp FROM documents
   WHERE trim(COALESCE(text, '')) != '' AND doc_id % 10 <> 0
@@ -1033,7 +1028,7 @@ LEFT JOIN fbb ON fbb.doc = b.doc_id
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental batch dedup against a frozen corpus index: the batch
     (doc_id % 10 = 0) probes the corpus's persisted artifacts — distinct
-    exact fingerprints + distinct portable-MinHash band buckets — plus
+    exact fingerprints + distinct MinHash band buckets — plus
     its own earlier-id rows, and emits the full per-doc decision vector
     (exact/fuzzy x corpus/batch) with the survivor flag, all under the
     driver hash. The corpus text is scanned once to BUILD the index (in
@@ -1054,14 +1049,11 @@ def _dedup_corpus_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The corpus's persistable dedup-index artifacts: (distinct exact md5
-    fingerprints, distinct portable-MinHash band buckets). One corpus pass
+    fingerprints, distinct MinHash band buckets). One corpus pass
     each — shared by dedup_incremental_batch (in-plan build) and
     operators/index_store.persist_index_artifacts (parquet write)."""
     from kol_bigdata_realtime_analytics_spark.functions.text import (
         doc_fingerprint_md5,
-    )
-    from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-        minhash_portable_banded,
     )
 
     corpus = (
@@ -1075,7 +1067,7 @@ def _dedup_corpus_index(
         .localCheckpoint(eager=False)
     )
     cbk = (
-        minhash_portable_banded(corpus, "text", "doc_id")
+        minhash_banded(corpus, "text", "doc_id")
         .select("band", "bucket")
         .distinct()
         .localCheckpoint(eager=False)
@@ -1098,9 +1090,6 @@ def _dedup_incremental_core(
     from kol_bigdata_realtime_analytics_spark.functions.text import (
         doc_fingerprint_md5,
     )
-    from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-        minhash_portable_banded,
-    )
 
     docs = table(spark, sf_dir, "documents").filter(
         F.trim(F.coalesce("text", F.lit(""))) != ""
@@ -1120,7 +1109,7 @@ def _dedup_incremental_core(
     bfp = batch.select(
         "doc_id", doc_fingerprint_md5(F.col("text")).alias("fp")
     ).localCheckpoint(eager=True)
-    bband = minhash_portable_banded(batch, "text", "doc_id").localCheckpoint(
+    bband = minhash_banded(batch, "text", "doc_id").localCheckpoint(
         eager=True
     )  # feeds the corpus probe AND the within-batch self-join
     bmin = bfp.groupBy("fp").agg(F.min("doc_id").alias("mid"))
@@ -1174,20 +1163,18 @@ def _dedup_incremental_core(
     return out.select("doc_id", *sel, surv.alias("survives"))
 
 
-def _simhash_portable_oracle() -> str:
-    from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-        DEFAULT_MAX_BUCKET,
-        SIMHASH_PORTABLE_BITS,
-    )
+def _simhash_oracle() -> str:
     from kol_bigdata_realtime_analytics_spark.plans.registry import sql_hash52
 
+    width = SIMHASH_BITS // SIMHASH_CHUNKS
     csums = ",\n         ".join(
-        f"SUM((h >> {i}) & 1) AS c{i}" for i in range(SIMHASH_PORTABLE_BITS)
+        f"SUM((h >> {i}) & 1) AS c{i}" for i in range(SIMHASH_BITS)
     )
     packed = "\n         + ".join(
         f"(CASE WHEN c{i} * 2 > n THEN {1 << i} ELSE 0 END)"
-        for i in range(SIMHASH_PORTABLE_BITS)
+        for i in range(SIMHASH_BITS)
     )
+    chunk_ids = ", ".join(f"({c})" for c in range(SIMHASH_CHUNKS))
     return f"""
 WITH toks AS (
   SELECT doc_id AS doc, regexp_split_to_array(trim(text), '\\s+') AS ts
@@ -1206,8 +1193,8 @@ sig AS (
   FROM votes
 ),
 banded AS MATERIALIZED (
-  SELECT doc, sim, ci.chunk_idx, (sim >> (13 * ci.chunk_idx)) & 8191 AS chunk
-  FROM sig, (VALUES (0), (1), (2), (3)) ci(chunk_idx)
+  SELECT doc, sim, ci.chunk_idx, (sim >> ({width} * ci.chunk_idx)) & {(1 << width) - 1} AS chunk
+  FROM sig, (VALUES {chunk_ids}) ci(chunk_idx)
 ),
 bc AS (
   SELECT chunk_idx, chunk FROM banded GROUP BY chunk_idx, chunk
@@ -1218,11 +1205,11 @@ SELECT DISTINCT a.doc AS id_a, b.doc AS id_b,
 FROM banded a
 JOIN banded b ON b.chunk_idx = a.chunk_idx AND b.chunk = a.chunk AND a.doc < b.doc
 JOIN bc ON bc.chunk_idx = a.chunk_idx AND bc.chunk = a.chunk
-WHERE bit_count(xor(a.sim, b.sim)) <= 3
+WHERE bit_count(xor(a.sim, b.sim)) <= {SIMHASH_MAX_HAMMING}
 """
 
 
-@register("simhash_neardups", oracle=_simhash_portable_oracle())
+@register("simhash_neardups", oracle=_simhash_oracle())
 def simhash_neardups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (Hamming <= 3), HASH-certified: 52-bit
     signatures from hash52 token hashes (md5 prefix — identical in both
@@ -1230,15 +1217,10 @@ def simhash_neardups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pigeonhole: <= 3 differing bits => some chunk matches exactly). The
     DuckDB oracle recomputes votes, signatures, banding, the hot-bucket
     guard, and bit_count hamming — the full pair set is value-hashed.
-    Engine side keeps the packed-lane vote build (13 longs of aggregation
-    state, codegen'd), the same shape as the xxhash64 library operator."""
-    from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-        simhash_neardup_pairs_portable,
-    )
-
-    return simhash_neardup_pairs_portable(
-        table(spark, sf_dir, "documents"), "text", "doc_id"
-    )
+    Engine side is the packed-lane vote build (13 longs of aggregation
+    state, codegen'd); simhash_recall_check certifies its banding against
+    brute-force Hamming over the same signatures."""
+    return simhash_neardup_pairs(table(spark, sf_dir, "documents"), "text", "doc_id")
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,8 @@
 """One definition per shared shape: each routine the HNSW, top-k,
-bucket-dedup and bounded-stream families share, and each oracle fragment
-several DuckDB oracles share, is written once in the engine, so no test
-has to catch copies drifting apart. Runs no Spark."""
+bucket-dedup and bounded-stream families share, each oracle fragment
+several DuckDB oracles share, and each fuzzy-dedup signature builder
+(one MinHash family, one SimHash family) is written once in the engine,
+so no test has to catch copies drifting apart. Runs no Spark."""
 
 from __future__ import annotations
 
@@ -38,6 +39,10 @@ def _sources() -> dict[str, str]:
         ),
         # the in-bucket pair expansion (dedup._bucket_pairs)
         ('F.sequence(F.lit(0), F.size(F.col("ds")) - 2)', "operators/dedup.py"),
+        # the SimHash per-bit majority vote (dedup.simhash_signature)
+        ('cnt * 2 > F.col("n")', "operators/dedup.py"),
+        # the MinHash lane-min aggregation (dedup.minhash_signature)
+        ('*[F.min(f"', "operators/dedup.py"),
         # the trust-score oracle expression (ml._TRUST_SCORE_SQL)
         ("+ 1.2 * CASE WHEN verified THEN 1.0 ELSE 0.0 END", "plans/ml.py"),
         # the exact-cosine top-k oracle CTE (llm_ops._exact_topk_cte)

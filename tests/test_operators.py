@@ -11,7 +11,7 @@ from kol_bigdata_realtime_analytics_spark.operators.dedup import (
     jaccard_pairs,
     minhash_lsh_candidates,
     simhash_neardup_pairs,
-    with_simhash,
+    simhash_signature,
     word_shingles,
 )
 from kol_bigdata_realtime_analytics_spark.operators.multimodal import (
@@ -109,7 +109,7 @@ def test_minhash_lsh_finds_planted_dups(spark, docs_df):
 
 
 def test_simhash_identical_and_near(spark, docs_df):
-    sims = {r["doc"]: r["sim"] for r in with_simhash(docs_df, "text", "doc_id").collect()}
+    sims = {r["doc"]: r["sim"] for r in simhash_signature(docs_df, "text", "doc_id").collect()}
     assert sims[1] == sims[4]  # exact same tokens -> same simhash
 
     def hamming(a, b):
@@ -120,7 +120,7 @@ def test_simhash_identical_and_near(spark, docs_df):
     assert hamming(sims[1], sims[2]) < hamming(sims[1], sims[3])
 
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in simhash_neardup_pairs(
-        docs_df, "text", "doc_id", max_hamming=10
+        docs_df, "text", "doc_id"
     ).collect()}
     assert pairs[(1, 4)] == 0  # exact dups collide in every chunk
 
@@ -179,13 +179,13 @@ def test_duplicate_clusters_transitive_closure(spark):
     assert all(r["cluster_size"] == 10 for r in chain)
 
 
-def test_lsh_hot_bucket_guard(spark):
+def test_lsh_hot_bucket_guard(spark, monkeypatch):
     """A planted degenerate bucket (500 identical boilerplate docs) must not
     blow up the pair join: its buckets are skipped, reported with counts, and
     genuine near-dups outside the hot bucket are still found."""
+    from kol_bigdata_realtime_analytics_spark.operators import dedup
     from kol_bigdata_realtime_analytics_spark.operators.dedup import (
         minhash_lsh_skipped_buckets,
-        simhash_neardup_pairs,
         simhash_skipped_buckets,
     )
 
@@ -196,30 +196,30 @@ def test_lsh_hot_bucket_guard(spark):
         (1001, "the quick brown fox jumps over the lazy dog near the river bend"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(dedup, "DEFAULT_MAX_BUCKET", 100)
 
     cand = {
         (r["id_a"], r["id_b"])
-        for r in minhash_lsh_candidates(df, "text", "doc_id", max_bucket=100).collect()
+        for r in minhash_lsh_candidates(df, "text", "doc_id").collect()
     }
     assert (1000, 1001) in cand  # genuine near-dup survives the guard
     assert not any(a < 500 and b < 500 for a, b in cand)  # hot bucket skipped
 
-    skipped = minhash_lsh_skipped_buckets(df, "text", "doc_id", max_bucket=100).collect()
+    skipped = minhash_lsh_skipped_buckets(df, "text", "doc_id").collect()
     assert len(skipped) == 8  # identical docs collide in every band
     assert all(r["bucket_n"] == 500 for r in skipped)
 
     sim_pairs = {
         (r["id_a"], r["id_b"])
-        for r in simhash_neardup_pairs(
-            df, "text", "doc_id", max_hamming=10, max_bucket=100
-        ).collect()
+        for r in simhash_neardup_pairs(df, "text", "doc_id").collect()
     }
     assert not any(a < 500 and b < 500 for a, b in sim_pairs)
-    sim_skipped = simhash_skipped_buckets(df, "text", "doc_id", max_bucket=100).collect()
+    sim_skipped = simhash_skipped_buckets(df, "text", "doc_id").collect()
     assert len(sim_skipped) == 4 and all(r["bucket_n"] == 500 for r in sim_skipped)
 
     # without the guard the same corpus yields the full O(n^2) hot-bucket
     # pair set — the guard is the only thing between this plan and ~125k pairs
+    monkeypatch.undo()
     unguarded = minhash_lsh_candidates(df, "text", "doc_id").count()
     assert unguarded > 100_000
 
@@ -1753,7 +1753,7 @@ def test_incremental_dedup_equals_full_run_on_batch(spark, sf_small):
         doc_fingerprint_md5,
     )
     from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-        minhash_portable_banded,
+        minhash_banded,
     )
     from kol_bigdata_realtime_analytics_spark.plans.registry import table
 
@@ -1777,7 +1777,7 @@ def test_incremental_dedup_equals_full_run_on_batch(spark, sf_small):
         r["doc_id"]
         for r in fp.join(fp_min, "fp").filter(F.col("pri") > F.col("mpri")).collect()
     }
-    banded = minhash_portable_banded(docs, "text", "doc_id")
+    banded = minhash_banded(docs, "text", "doc_id")
     bp = banded.withColumn(
         "pri",
         (F.col("doc") % 10 == 0).cast("long") * F.lit(10_000_000) + F.col("doc"),
@@ -1803,13 +1803,9 @@ def test_incremental_dedup_equals_full_run_on_batch(spark, sf_small):
 
 
 def test_portable_minhash_and_simhash_detect_duplicates(spark, sf_small):
-    """The portable hash family must keep the operators' semantics: exact
-    copies always collide in every band; unrelated docs don't."""
-    from kol_bigdata_realtime_analytics_spark.operators.dedup import (
-        minhash_lsh_candidates_portable,
-        simhash_neardup_pairs_portable,
-    )
-
+    """The hash52 MinHash and SimHash operators keep dedup semantics on
+    sentence-length docs: exact copies always collide; unrelated docs
+    don't."""
     rows = [
         (1, "the quick brown fox jumps over the lazy dog again and again"),
         (2, "the quick brown fox jumps over the lazy dog again and again"),
@@ -1818,12 +1814,12 @@ def test_portable_minhash_and_simhash_detect_duplicates(spark, sf_small):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     mh = {
         (r["id_a"], r["id_b"])
-        for r in minhash_lsh_candidates_portable(df, "text", "doc_id").collect()
+        for r in minhash_lsh_candidates(df, "text", "doc_id").collect()
     }
     assert (1, 2) in mh and (1, 3) not in mh and (2, 3) not in mh
     sh = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_neardup_pairs_portable(df, "text", "doc_id").collect()
+        for r in simhash_neardup_pairs(df, "text", "doc_id").collect()
     }
     assert sh.get((1, 2)) == 0 and (1, 3) not in sh
 
