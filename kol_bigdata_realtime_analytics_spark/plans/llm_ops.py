@@ -33,6 +33,7 @@ from kol_bigdata_realtime_analytics_spark.functions.text import (
     tokens,
     token_count,
 )
+from kol_bigdata_realtime_analytics_spark.operators import dedup
 from kol_bigdata_realtime_analytics_spark.operators.dedup import (
     BANDS,
     DEFAULT_MAX_BUCKET,
@@ -916,6 +917,14 @@ def _minhash_band_ctes(suffix: str = "", where: str = "") -> str:
         )
         for b in range(BANDS)
     )
+    # one alias per shingle token (a, b, c, ...), the i-th one i positions on
+    aliases = [chr(ord("a") + j) for j in range(dedup.SHINGLE_N)]
+    shingle = "concat_ws('|', " + ", ".join(f"CAST({x}.h AS VARCHAR)" for x in aliases) + ")"
+    joins = "".join(
+        f"\n  JOIN th{s} {x} ON {x}.doc = a.doc AND {x}.i = a.i + {j}"
+        for j, x in enumerate(aliases)
+        if j
+    )
     return f"""toks{s} AS (
   SELECT doc_id AS doc, regexp_split_to_array(trim(text), '\\s+') AS ts
   FROM documents WHERE trim(COALESCE(text, '')) != ''{where}
@@ -924,10 +933,8 @@ tok{s} AS (SELECT doc, unnest(ts) AS t, generate_subscripts(ts, 1) AS i FROM tok
 th{s} AS MATERIALIZED (SELECT doc, i, {sql_hash52('t')} AS h FROM tok{s}),
 sh{s} AS (
   SELECT a.doc,
-         {sql_hash52("concat_ws('|', CAST(a.h AS VARCHAR), CAST(b.h AS VARCHAR), CAST(c.h AS VARCHAR))")} AS hs
-  FROM th{s} a
-  JOIN th{s} b ON b.doc = a.doc AND b.i = a.i + 1
-  JOIN th{s} c ON c.doc = a.doc AND c.i = a.i + 2
+         {sql_hash52(shingle)} AS hs
+  FROM th{s} a{joins}
 ),
 sig{s} AS (
   SELECT doc,

@@ -1,17 +1,20 @@
-"""Streaming sinks — exactly-once-ish upserts WITHOUT driver collect.
+"""Streaming sinks — exactly-once-ish upserts WITHOUT an unbounded driver collect.
 
 The reference's Redis sink collects every micro-batch to the driver then
 pipelines HSETs (reference trending_stream.py:298-363 via `.collect()` at
 :315) — a driver OOM at any real scale. The engine pattern:
 
 - `foreach_batch_ranking_sink`: per trigger, compute the SMALL top-k ranking
-  (executor-side aggregation; only k rows ever move) and rewrite a serving
-  parquet table with it, the pre-materialized "ZSET" the serving layer reads.
-  The rewrite is NOT atomic: `write.mode("overwrite")` deletes the table's
-  files and then writes new ones, so a concurrent reader can find no files
-  or vanished ones (FILE_NOT_EXIST; 4-10 of 49 concurrent reads failed per
-  hot-path run). ROADMAP direction 4 replaces it with immutable
-  per-epoch snapshots behind a commit log.
+  (executor-side aggregation; only k rows ever move) and publish it as the
+  serving parquet table, the pre-materialized "ZSET" the serving layer reads.
+  Each epoch's k rows go to the driver as Arrow, into one parquet file under
+  a hidden name (Spark's file listing skips `.`-prefixed names), which one
+  rename then publishes as `part-<epoch>.parquet`; the older visible files
+  are deleted after it. Nothing is deleted before the new file is in place,
+  and a re-delivered epoch id writes nothing. A reader that lists the
+  directory can still fail with FILE_NOT_EXIST when the old file is unlinked
+  between its listing and its open: that race needs a snapshot read
+  protocol on the reader's side (ROADMAP direction 4).
 - `foreach_partition_kv_sink`: when an external KV store (Redis/Cassandra) IS
   configured, write per-PARTITION from executors (connection per partition,
   pipelined), never via the driver. The client factory is injected so tests
@@ -23,6 +26,7 @@ pipelines HSETs (reference trending_stream.py:298-363 via `.collect()` at
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
@@ -82,18 +86,39 @@ def foreach_batch_ranking_sink(
     key_cols: list[str],
     k: int = 100,
 ):
-    """Returns a foreachBatch fn that overwrites out_path with the batch's
-    top-k ranking each trigger. Not atomic for concurrent readers."""
+    """Returns a foreachBatch fn that publishes the batch's top-k ranking
+    to the local directory out_path each trigger.
+
+    Publish protocol, per epoch e: take the k ranked rows (plus an
+    `epoch_id` column) into Arrow, write them as one parquet file
+    `.part-<e>.parquet`, rename it to `part-<e>.parquet`, then delete every
+    other visible file. `spark.read.parquet(out_path)` therefore sees one
+    complete epoch (the schema Spark's own writer would give, k rows or, on
+    an empty batch, none) and never a partly written file. The rename goes
+    to a new name: replacing a file that holds data costs a flush on ext4.
+    If `part-<e>.parquet` already exists, epoch e was re-delivered after a
+    recovery: nothing is written, only the cleanup runs again.
+
+    Not a snapshot read: a reader that listed the old file before the
+    cleanup unlinked it fails with FILE_NOT_EXIST on open."""
+    import pyarrow.parquet as pq
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        ranked = (
-            batch_df.orderBy(F.col(score_col).desc(), *[F.col(c) for c in key_cols])
-            .limit(k)
-            .withColumn("epoch_id", F.lit(epoch_id))
-        )
-        # delete-then-write, not a swap: readers can catch it half-done
-        # (see the module docstring)
-        ranked.write.mode("overwrite").parquet(out_path)
+        name = f"part-{int(epoch_id)}.parquet"
+        final = os.path.join(out_path, name)
+        if not os.path.exists(final):
+            ranked = (
+                batch_df.orderBy(F.col(score_col).desc(), *[F.col(c) for c in key_cols])
+                .limit(k)
+                .withColumn("epoch_id", F.lit(epoch_id))
+            )
+            os.makedirs(out_path, exist_ok=True)
+            hidden = os.path.join(out_path, "." + name)
+            pq.write_table(ranked.toArrow(), hidden)
+            os.rename(hidden, final)
+        for other in os.listdir(out_path):
+            if other != name and not other.startswith((".", "_")):
+                os.remove(os.path.join(out_path, other))
 
     return sink
 
@@ -148,7 +173,6 @@ def idempotent_foreach_batch(sink_fn, ledger_path: str):
     The ledger directory is per-query (pass a path under the query's
     checkpoint dir). Marker creation is a single O(1) driver-side touch —
     no data moves through the driver."""
-    import os
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         os.makedirs(ledger_path, exist_ok=True)

@@ -189,3 +189,31 @@ def test_every_option_has_a_caller():
                     if not varies and tag not in _BENCH_PINNED:
                         hits.append(tag)
     assert not hits, f"{len(hits)} options only ever receive their default: {hits}"
+
+
+def test_ranking_sink_never_deletes_before_it_writes():
+    """The ranking sink publishes each epoch with one rename; Spark's
+    overwrite mode (delete the served files, then write) must not come
+    back, or every read that overlaps a write finds no files."""
+    with open(os.path.join(PKG, "streaming/sinks.py")) as fh:
+        assert 'write.mode("overwrite")' not in fh.read()
+
+
+def test_minhash_oracle_shingles_follow_shingle_n(monkeypatch):
+    """The MinHash oracle builds its shingles from dedup.SHINGLE_N, the
+    constant minhash_signature reads, so the two cannot drift apart."""
+    from kol_bigdata_realtime_analytics_spark.operators import dedup
+    from kol_bigdata_realtime_analytics_spark.plans import llm_ops
+
+    monkeypatch.setattr(dedup, "SHINGLE_N", 4)
+    cte = llm_ops._minhash_band_ctes()
+    assert (
+        "concat_ws('|', CAST(a.h AS VARCHAR), CAST(b.h AS VARCHAR), "
+        "CAST(c.h AS VARCHAR), CAST(d.h AS VARCHAR))" in cte
+    )
+    joins = [ln.strip() for ln in cte.splitlines() if ln.strip().startswith("JOIN th ")]
+    assert joins == [
+        "JOIN th b ON b.doc = a.doc AND b.i = a.i + 1",
+        "JOIN th c ON c.doc = a.doc AND c.i = a.i + 2",
+        "JOIN th d ON d.doc = a.doc AND d.i = a.i + 3",
+    ]

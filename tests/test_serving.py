@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -122,3 +124,60 @@ def test_stream_to_ranking_e2e(spark, tmp_path):
     assert len(rows_out) > 0
     # highest-value key (2 -> value 300) must outrank key 0
     assert rows_out[0]["key"] == 2
+
+
+def test_ranking_sink_publishes_one_file_per_epoch(spark, tmp_path, dim_kol):
+    """Each epoch replaces the served file by one rename: after 5 epochs one
+    visible file holds the last epoch's k rows and no hidden file is left."""
+    out = str(tmp_path / "ranking")
+    sink = foreach_batch_ranking_sink(out, "trust_score", ["kol_id"], k=3)
+    for e in range(5):
+        # epoch e lifts k4 by 20 points a step, so the top 3 change over time
+        sink(dim_kol.withColumn("trust_score", F.col("trust_score")
+                                + F.when(F.col("kol_id") == "k4", 20.0 * e).otherwise(0.0)), e)
+    assert os.listdir(out) == ["part-4.parquet"]
+    back = spark.read.parquet(out).orderBy(F.col("trust_score").desc()).collect()
+    assert [(r["kol_id"], r["trust_score"], r["epoch_id"]) for r in back] == [
+        ("k4", 115.0, 4), ("k1", 88.0, 4), ("k2", 75.0, 4)]
+
+
+def test_ranking_sink_schema_matches_sparks_own_write(spark, tmp_path, dim_kol):
+    """A reader sees the schema Spark's parquet writer would have given:
+    the ranked columns plus an int epoch_id, every field nullable."""
+    from pyspark.sql import types as T
+
+    out = str(tmp_path / "ranking")
+    foreach_batch_ranking_sink(out, "trust_score", ["kol_id"], k=3)(dim_kol, 7)
+    ranked = dim_kol.orderBy(F.col("trust_score").desc()).limit(3).withColumn("epoch_id", F.lit(7))
+    ranked.write.parquet(str(tmp_path / "spark_written"))
+    got = spark.read.parquet(out).schema
+    assert got == spark.read.parquet(str(tmp_path / "spark_written")).schema
+    assert got == T.StructType([T.StructField(f.name, f.dataType, True) for f in ranked.schema])
+    assert got["epoch_id"].dataType == T.IntegerType()
+
+
+def test_ranking_sink_skips_a_redelivered_epoch(tmp_path, dim_kol):
+    """A re-delivered epoch id (after a recovery) rewrites nothing, even
+    when the re-delivered batch differs."""
+    out = str(tmp_path / "ranking")
+    sink = foreach_batch_ranking_sink(out, "trust_score", ["kol_id"], k=3)
+    sink(dim_kol, 3)
+    path = os.path.join(out, "part-3.parquet")
+    before = os.stat(path)
+    sink(dim_kol.withColumn("trust_score", -F.col("trust_score")), 3)
+    after = os.stat(path)
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
+    assert os.listdir(out) == ["part-3.parquet"]
+
+
+def test_ranking_sink_publishes_an_empty_batch(spark, tmp_path, dim_kol):
+    """An empty batch publishes a 0-row file that still carries the schema."""
+    out = str(tmp_path / "ranking")
+    sink = foreach_batch_ranking_sink(out, "trust_score", ["kol_id"], k=3)
+    sink(dim_kol, 0)
+    schema = spark.read.parquet(out).schema
+    sink(dim_kol.limit(0), 1)
+    assert os.listdir(out) == ["part-1.parquet"]
+    back = spark.read.parquet(out)
+    assert back.schema == schema
+    assert back.count() == 0

@@ -2,11 +2,15 @@
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
+from kol_bigdata_realtime_analytics_spark.streaming.sinks import foreach_batch_ranking_sink
 from kol_bigdata_realtime_analytics_spark.streaming.trending import (
     run_trending_stream,
     scored,
@@ -448,3 +452,55 @@ def test_streaming_heavy_hitters_state_merges_across_batches(spark, tmp_path):
     assert max(w8) == 100, f"state did not merge across batches: {w8}"
     # bounded state: no emission ever exceeds buckets * k rows per batch
     assert len(rows) <= 2 * 8 * 8
+
+
+def test_ranking_stream_restarts_from_its_checkpoint(spark, tmp_path):
+    """windowed_engagement -> scored -> ranking sink, stopped and restarted
+    from the same checkpoint with one more event file in between: the
+    served top-k equals a batch recomputation over every file, so the
+    windowed state written through the session's checkpoint manager
+    survived the restart."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass").endswith(
+        ".FileSystemBasedCheckpointFileManager")
+    schema = "event_id long, ts timestamp, user_id long, value double"
+    src, staging = tmp_path / "events", tmp_path / "staging"
+    src.mkdir()
+    staging.mkdir()
+    out, ckpt = str(tmp_path / "ranking"), str(tmp_path / "ckpt")
+
+    def add_file(i):
+        # file i: 40 events in one 5-minute window, 4 per key 0-9, key j's events
+        # valued (j + 1) * (i + 1): both files feed the same 10 windowed rows,
+        # and no two keys tie on the score
+        lines = [json.dumps({"event_id": 100 * i + n, "ts": f"2024-01-01T00:0{n % 5}:00",
+                             "user_id": n % 10, "value": float((n % 10 + 1) * (i + 1))})
+                 for n in range(40)]
+        (staging / f"f{i}.json").write_text("\n".join(lines) + "\n")
+        os.rename(staging / f"f{i}.json", src / f"f{i}.json")
+
+    def run():
+        stream = spark.readStream.schema(schema).json(str(src))
+        q = (scored(windowed_engagement(stream)).writeStream.outputMode("complete")
+             .foreachBatch(foreach_batch_ranking_sink(out, "trending_score", ["key"], k=5))
+             .option("checkpointLocation", ckpt).queryName("t_rank_restart").start())
+        q.processAllAvailable()
+        batches = {p["batchId"] for p in map(json.loads, (p.json for p in q.recentProgress))}
+        q.stop()
+        return batches
+
+    add_file(0)
+    first = run()
+    add_file(1)
+    second = run()
+    assert first and second and max(first) < min(second)
+
+    batch = scored(windowed_engagement(spark.read.schema(schema).json(str(src))))
+    expected = batch.orderBy(F.col("trending_score").desc(), F.col("key")).limit(5).collect()
+    got = spark.read.parquet(out).drop("epoch_id").orderBy(
+        F.col("trending_score").desc(), F.col("key")).collect()
+    assert got == expected
+    # the state store holds one delta file per version (batch id + 1) and
+    # partition: the restart read the first run's and added its own
+    versions = {int(os.path.basename(p).split(".")[0])
+                for p in glob.glob(os.path.join(ckpt, "state", "0", "*", "*.delta"))}
+    assert {b + 1 for b in first | second} <= versions
