@@ -33,12 +33,12 @@ from kol_bigdata_realtime_analytics_spark.functions.text import (
     tokens,
     token_count,
 )
-from kol_bigdata_realtime_analytics_spark.operators import dedup
 from kol_bigdata_realtime_analytics_spark.operators.dedup import (
     BANDS,
     DEFAULT_MAX_BUCKET,
     HASH52_MOD,
     NUM_HASHES,
+    SHINGLE_N,
     SIMHASH_BITS,
     SIMHASH_CHUNKS,
     SIMHASH_MAX_HAMMING,
@@ -918,7 +918,7 @@ def _minhash_band_ctes(suffix: str = "", where: str = "") -> str:
         for b in range(BANDS)
     )
     # one alias per shingle token (a, b, c, ...), the i-th one i positions on
-    aliases = [chr(ord("a") + j) for j in range(dedup.SHINGLE_N)]
+    aliases = [chr(ord("a") + j) for j in range(SHINGLE_N)]
     shingle = "concat_ws('|', " + ", ".join(f"CAST({x}.h AS VARCHAR)" for x in aliases) + ")"
     joins = "".join(
         f"\n  JOIN th{s} {x} ON {x}.doc = a.doc AND {x}.i = a.i + {j}"

@@ -2,7 +2,8 @@
 
 One place for every scale-relevant config. Local mode is for tests/bench; the
 same settings (AQE, skew join, Arrow, UTC) are what we'd ship on a 1000-executor
-cluster — only memory/parallelism sizing changes.
+cluster — only memory/parallelism sizing changes, and the streaming checkpoint
+manager, which needs a filesystem with atomic rename (see its comment).
 """
 
 from __future__ import annotations
@@ -51,9 +52,10 @@ def get_spark(
         #     spawns 10 of them per checkpoint file (offsets, commits, the
         #     file-source log, each state-store delta; 35-43 ms per atomic
         #     create), this one 2 (9-12 ms): a trending micro-batch with 3
-        #     state partitions went from 99 spawns to 27. This session is
-        #     always local[n] with file: checkpoints, where the FileSystem
-        #     rename is the atomic publish the manager needs. ---
+        #     state partitions went from 99 spawns to 27. The manager is
+        #     only safe where rename is atomic (local disk, HDFS), as for
+        #     this local[n] session's file: checkpoints; a cluster build
+        #     must not copy it for object-store (s3a) checkpoints. ---
         .config(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."

@@ -200,12 +200,11 @@ def test_ranking_sink_never_deletes_before_it_writes():
 
 
 def test_minhash_oracle_shingles_follow_shingle_n(monkeypatch):
-    """The MinHash oracle builds its shingles from dedup.SHINGLE_N, the
-    constant minhash_signature reads, so the two cannot drift apart."""
-    from kol_bigdata_realtime_analytics_spark.operators import dedup
+    """The MinHash oracle builds its shingles from SHINGLE_N, the constant
+    dedup.minhash_signature reads, so the two cannot drift apart."""
     from kol_bigdata_realtime_analytics_spark.plans import llm_ops
 
-    monkeypatch.setattr(dedup, "SHINGLE_N", 4)
+    monkeypatch.setattr(llm_ops, "SHINGLE_N", 4)
     cte = llm_ops._minhash_band_ctes()
     assert (
         "concat_ws('|', CAST(a.h AS VARCHAR), CAST(b.h AS VARCHAR), "

@@ -126,16 +126,22 @@ def test_stream_to_ranking_e2e(spark, tmp_path):
     assert rows_out[0]["key"] == 2
 
 
-def test_ranking_sink_publishes_one_file_per_epoch(spark, tmp_path, dim_kol):
+def test_ranking_sink_serves_the_last_epoch_in_one_file(spark, tmp_path, dim_kol):
     """Each epoch replaces the served file by one rename: after 5 epochs one
-    visible file holds the last epoch's k rows and no hidden file is left."""
+    visible file holds the last epoch's k rows and no hidden file is left.
+    A data file another writer left in the directory is deleted, so
+    readers never add its rows to the ranking's."""
+    import pyarrow.parquet as pq
+
     out = str(tmp_path / "ranking")
+    os.makedirs(out)
+    pq.write_table(dim_kol.toArrow(), os.path.join(out, "part-0.parquet"))
     sink = foreach_batch_ranking_sink(out, "trust_score", ["kol_id"], k=3)
     for e in range(5):
         # epoch e lifts k4 by 20 points a step, so the top 3 change over time
         sink(dim_kol.withColumn("trust_score", F.col("trust_score")
                                 + F.when(F.col("kol_id") == "k4", 20.0 * e).otherwise(0.0)), e)
-    assert os.listdir(out) == ["part-4.parquet"]
+    assert os.listdir(out) == ["ranking.parquet"]
     back = spark.read.parquet(out).orderBy(F.col("trust_score").desc()).collect()
     assert [(r["kol_id"], r["trust_score"], r["epoch_id"]) for r in back] == [
         ("k4", 115.0, 4), ("k1", 88.0, 4), ("k2", 75.0, 4)]
@@ -158,16 +164,18 @@ def test_ranking_sink_schema_matches_sparks_own_write(spark, tmp_path, dim_kol):
 
 def test_ranking_sink_skips_a_redelivered_epoch(tmp_path, dim_kol):
     """A re-delivered epoch id (after a recovery) rewrites nothing, even
-    when the re-delivered batch differs."""
+    when the re-delivered batch differs; the next epoch id does."""
     out = str(tmp_path / "ranking")
     sink = foreach_batch_ranking_sink(out, "trust_score", ["kol_id"], k=3)
     sink(dim_kol, 3)
-    path = os.path.join(out, "part-3.parquet")
+    path = os.path.join(out, "ranking.parquet")
     before = os.stat(path)
     sink(dim_kol.withColumn("trust_score", -F.col("trust_score")), 3)
     after = os.stat(path)
     assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
-    assert os.listdir(out) == ["part-3.parquet"]
+    assert os.listdir(out) == ["ranking.parquet"]
+    sink(dim_kol, 4)
+    assert os.stat(path).st_ino != before.st_ino
 
 
 def test_ranking_sink_publishes_an_empty_batch(spark, tmp_path, dim_kol):
@@ -177,7 +185,27 @@ def test_ranking_sink_publishes_an_empty_batch(spark, tmp_path, dim_kol):
     sink(dim_kol, 0)
     schema = spark.read.parquet(out).schema
     sink(dim_kol.limit(0), 1)
-    assert os.listdir(out) == ["part-1.parquet"]
+    assert os.listdir(out) == ["ranking.parquet"]
     back = spark.read.parquet(out)
     assert back.schema == schema
     assert back.count() == 0
+
+
+def test_ranking_sink_keeps_the_served_name_through_a_swap(spark, tmp_path, dim_kol):
+    """A reader that listed the served file before a swap still opens it and
+    reads a whole epoch: the newer one, not FILE_NOT_EXIST."""
+    out = str(tmp_path / "ranking")
+    sink = foreach_batch_ranking_sink(out, "trust_score", ["kol_id"], k=3)
+    sink(dim_kol, 0)
+    listed = spark.read.parquet(out)
+    assert len(listed.inputFiles()) == 1
+    sink(dim_kol, 1)
+    assert sorted(r["epoch_id"] for r in listed.collect()) == [1, 1, 1]
+
+
+@pytest.mark.parametrize("uri", ["file:/srv/ranking", "hdfs://nn/ranking", "s3a://bucket/ranking"])
+def test_ranking_sink_refuses_a_uri(uri):
+    """out_path is written with os calls, so a Hadoop URI is an error rather
+    than a relative local directory named after it."""
+    with pytest.raises(ValueError, match="local path"):
+        foreach_batch_ranking_sink(uri, "trust_score", ["kol_id"])
