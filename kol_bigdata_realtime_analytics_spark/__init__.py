@@ -7,8 +7,8 @@ expressed as one coherent Spark-first engine:
 - ``functions/``  — every domain formula exactly once, as native Column
   expressions (parse_count, trending score, trust score, engineered features,
   text analysis). No row-at-a-time Python UDFs in the hot path.
-- ``sources/``    — source/sink factories (parquet, JSON envelope, Kafka gated
-  behind import/config checks).
+- ``sources/``    — source/sink factories (parquet, JSON envelope, catalog
+  DDL) and the Kafka wire format.
 - ``operators/``  — reusable DataFrame->DataFrame operators: dedup (exact,
   MinHash-LSH, SimHash, n-gram Jaccard, embedding cosine), similarity search,
   top-k / latest-per-key / pagination, multimodal column plumbing.

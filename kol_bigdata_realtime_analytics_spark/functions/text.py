@@ -242,11 +242,6 @@ def dup_ratio_of(arr: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def dup_token_ratio(text: Column | str) -> Column:
-    """1 - distinct_tokens/total_tokens (0.0 for empty docs)."""
-    return dup_ratio_of(tokens(text))
-
-
 DUP_TOKEN_RATIO_ORACLE_SQL = (
     "CASE WHEN trim(COALESCE({col}, '')) = '' THEN 0.0 ELSE "
     "1.0 - CAST(len(list_distinct(regexp_split_to_array(trim({col}), '\\s+'))) AS DOUBLE)"
@@ -263,10 +258,6 @@ def top_ratio_of(arr: Column) -> Column:
         F.transform(F.array_distinct(arr), lambda d: F.size(F.filter(arr, lambda t: t == d)))
     )
     return F.when(n > 0, top.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def top_token_ratio(text: Column | str) -> Column:
-    return top_ratio_of(tokens(text))
 
 
 TOP_TOKEN_RATIO_ORACLE_SQL = (
@@ -290,21 +281,12 @@ def bigrams_of(arr: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def bigrams(text: Column | str) -> Column:
-    return bigrams_of(tokens(text))
-
-
 #: DuckDB bigrams over pre-split token array {tok}
 BIGRAMS_ORACLE_SQL = (
     "CASE WHEN len({tok}) >= 2 THEN "
     "list_transform(range(1, len({tok})), i -> {tok}[i] || ' ' || {tok}[i + 1]) "
     "ELSE [] END"
 )
-
-
-def dup_bigram_ratio(text: Column | str) -> Column:
-    """1 - distinct_bigrams/total_bigrams (0.0 if < 2 tokens)."""
-    return dup_ratio_of(bigrams(text))
 
 
 #: Gopher-style keep thresholds (tuned loose; the query exposes the raw
@@ -315,15 +297,22 @@ GOPHER_MAX_DUP_BIGRAM = 0.60
 GOPHER_MIN_TOKENS, GOPHER_MAX_TOKENS = 5, 100_000
 
 
-def gopher_keep(text: Column | str) -> Column:
-    """1 if the doc passes all repetition/length filters, else 0."""
-    n = token_count(text)
+def gopher_keep(
+    n_tokens: Column | str,
+    dup_token: Column | str,
+    top_token: Column | str,
+    dup_bigram: Column | str,
+) -> Column:
+    """1 if the doc passes all repetition/length filters, else 0, over its
+    signal columns: token count, dup_ratio_of(tokens), top_ratio_of(tokens)
+    and dup_ratio_of(bigrams_of(tokens))."""
+    n = _c(n_tokens)
     return (
         (n >= GOPHER_MIN_TOKENS)
         & (n <= GOPHER_MAX_TOKENS)
-        & (dup_token_ratio(text) <= GOPHER_MAX_DUP_TOKEN)
-        & (top_token_ratio(text) <= GOPHER_MAX_TOP_TOKEN)
-        & (dup_bigram_ratio(text) <= GOPHER_MAX_DUP_BIGRAM)
+        & (_c(dup_token) <= GOPHER_MAX_DUP_TOKEN)
+        & (_c(top_token) <= GOPHER_MAX_TOP_TOKEN)
+        & (_c(dup_bigram) <= GOPHER_MAX_DUP_BIGRAM)
     ).cast("int")
 
 

@@ -7,7 +7,7 @@ on its own key. FK derivation uses when-chains exactly like the reference.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kol_bigdata_realtime_analytics_spark.functions.scoring import kol_tier, trust_rule_score
@@ -19,10 +19,6 @@ PLATFORMS = [
     (3, "tiktok", "video"),
     (4, "instagram", "social"),
 ]
-
-
-def build_dim_platform(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(PLATFORMS, "platform_key int, platform_name string, platform_type string")
 
 
 def platform_key_expr():

@@ -71,26 +71,6 @@ def exact_dedup_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataF
     )
 
 
-def word_shingles(text_col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as array<string>.
-
-    The READABLE/oracle-parity form (DuckDB mirrors it textually). Corpus
-    hot paths use shingle_hash_rows instead — this array-lambda build is
-    interpreted (not codegen'd) and measured 2-7x slower; see PERF.md §2.8.
-
-    Docs with fewer than n tokens yield an empty array — the guard matters:
-    sequence(0, size-n) DESCENDS when size < n (Spark auto-negates the
-    step), which would feed slice() a zero start and fail the whole stage.
-    CASE only evaluates the taken branch, so short docs never build grams.
-    """
-    tk = tokens(text_col)
-    idx = F.sequence(F.lit(0), F.size(tk) - n)
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tk, i + 1, n)))
-    return F.when(F.size(tk) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def shingle_hash_rows(
     df: DataFrame,
     text_col: str,
@@ -102,10 +82,10 @@ def shingle_hash_rows(
 
     The codegen-friendly shingle path: posexplode tokens -> xxhash64 each
     token -> window `lead()` gathers the next n-1 token hashes -> one
-    xxhash64 over the n longs. Every step is whole-stage-codegen'd; the
-    array-lambda form (word_shingles + per-shingle concat_ws/slice/md5)
-    evaluates interpreted and measured 2-7x slower at sf0.1 (PERF.md §2.8) —
-    the same HOF pathology as §2.1, here on the corpus-sized hot path.
+    xxhash64 over the n longs. Every step is whole-stage-codegen'd; an
+    array-lambda form (sequence + per-shingle concat_ws/slice) evaluates
+    interpreted and measured 2-7x slower at sf0.1 (PERF.md §2.8) — the
+    same HOF pathology as §2.1, here on the corpus-sized hot path.
 
     Shuffle tradeoff, explicitly: the lead() window clusters by doc.
     - pre_partition=False (default): the window exchange moves TOKEN rows
@@ -120,7 +100,7 @@ def shingle_hash_rows(
 
     Emits one row per shingle OCCURRENCE; dedup (distinct / count_distinct)
     is the caller's choice. Docs shorter than n tokens emit nothing
-    (lead(n-1) is null), matching word_shingles' empty-array semantics.
+    (lead(n-1) is null).
     """
     from pyspark.sql.window import Window
 

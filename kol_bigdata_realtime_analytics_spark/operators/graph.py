@@ -5,14 +5,14 @@ measure over the interaction GRAPH (who engages whose content) is the
 natural extension every social-analytics stack grows into. PageRank is
 the canonical iterative-DataFrame workload: it exercises exactly the
 machinery `duplicate_clusters` built (per-round checkpoint truncation,
-driver-side loop over declarative rounds) with float rank mass instead
+driver-side loop over declarative rounds) with integer rank mass instead
 of integer labels.
 
-Scale shape per iteration: one shuffle join edges⋈ranks on src (both
-sides pre-partitioned on the join key would make this co-located on a
-cluster; edges are (long, long, double) — no payload), one groupBy(dst)
-sum. Nothing iterates per-row in Python; the driver loop only submits
-`n_iter` declarative rounds.
+Scale shape per iteration: one join edges⋈ranks on src (both sides
+pre-partitioned on the join key would make this co-located on a cluster;
+edges are (long, long, long) — no payload), one groupBy(dst) sum. Nothing
+iterates per-row in Python; the driver loop only submits `n_iter`
+declarative rounds.
 """
 
 from __future__ import annotations
@@ -20,82 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: PageRank damping: a float for pagerank, the rational 17/20 for the
-#: exact-integer forms.
-DAMPING = 0.85
+#: PageRank damping 0.85, as the rational 17/20 the exact-integer forms use.
 DAMPING_NUM, DAMPING_DEN = 17, 20
-#: Rounds of pagerank and of the residual certificate.
+#: Rounds of pagerank_fixedpoint and of the residual certificate.
 PR_ROUNDS = 10
 #: Largest node count whose per-round rank/label vector is broadcast
 #: (~16 bytes/node, ≈ 80 MB); above it the joins co-shuffle instead.
 BROADCAST_NODE_LIMIT = 5_000_000
-
-
-def pagerank(edges: DataFrame) -> DataFrame:
-    """Weighted PageRank over an edge list (src, dst, weight), PR_ROUNDS
-    fixed rounds, damping DAMPING.
-
-    Out-edge weights are normalized per src once up front; each round every
-    node distributes `damping * rank` along its normalized out-edges and
-    every node receives `(1 - damping) / N` base mass. Dangling nodes
-    (no out-edges) leak their damped mass — the standard simplification;
-    ranks still order influence, which is what the leaderboard consumes.
-
-    Fixed round count (no convergence probe): rank deltas shrink geometrically
-    (damping^k), so 10 rounds give ~2 decimal digits more precision than
-    any downstream trunc6 needs, and a fixed loop keeps the job graph
-    identical run to run.
-
-    Returns (node, rank). Float sums shuffle-merge per dst, so ranks are
-    reproducible only to summation order — callers compare with tolerance
-    (rows-only driver check; pytest pins values against a dense NumPy
-    reference to 1e-9).
-    """
-    e = edges.select(
-        F.col("src").cast("long"),
-        F.col("dst").cast("long"),
-        F.col("weight").cast("double"),
-    )
-    out_w = e.groupBy("src").agg(F.sum("weight").alias("_out"))
-    norm = (
-        e.join(out_w, "src")
-        .select("src", "dst", (F.col("weight") / F.col("_out")).alias("p"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    base = (1.0 - DAMPING) / n
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    # ranks is O(nodes) — orders of magnitude smaller than edges — so it
-    # broadcasts and the edge list NEVER shuffles inside the loop; only the
-    # map-side-combined per-dst contributions exchange. On a graph whose
-    # node set exceeds executor memory, drop the hints and bucket both
-    # edges and ranks by key instead (co-partitioned SMJ, zero edge
-    # shuffle per round all the same).
-    for _ in range(PR_ROUNDS):
-        contribs = norm.join(
-            F.broadcast(ranks), norm["src"] == ranks["node"]
-        ).select(F.col("dst").alias("node"), (F.col("p") * F.col("rank")).alias("c"))
-        ranks = (
-            nodes.join(
-                F.broadcast(contribs.groupBy("node").agg(F.sum("c").alias("c"))),
-                "node",
-                "left",
-            )
-            .select(
-                "node",
-                (F.lit(base) + F.lit(DAMPING) * F.coalesce(F.col("c"), F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
 
 
 #: fixed-point scale for pagerank_fixedpoint: rank mass 1.0 == 10^12 units.
@@ -107,13 +38,15 @@ def pagerank_fixedpoint(
 ) -> DataFrame:
     """PageRank with EXACT integer arithmetic — bit-identical on any engine
     and any summation order, so an external SQL oracle can hash-match it
-    (the float variant above is reproducible only to summation order).
+    (a float PageRank is reproducible only to summation order).
 
     Rank mass is carried as long micro-units (PAGERANK_SCALE = 1e12 == rank
     1.0); damping is the rational DAMPING_NUM/DAMPING_DEN (17/20 = 0.85).
     Each round, per edge: contrib = (rank_src * weight) div out_w (floor
     division — weights must be INTEGER, e.g. interaction counts), then
     rank' = (1-d)*SCALE div N + (DAMPING_NUM * sum(contribs)) div DAMPING_DEN.
+    Dangling nodes (no out-edges) leak their damped mass — the standard
+    simplification; ranks still order influence.
     Long sums of longs are exact and order-independent — the same
     determinism idiom as the DECIMAL moment sums in correlation_qty_price.
 
@@ -527,7 +460,7 @@ def bfs_layers(edges: DataFrame, seed: DataFrame, n_hops: int) -> DataFrame:
     against the visited set. The frontier and visited frames are O(nodes)
     — never O(edges) — and both are localCheckpoint-pinned each hop so
     round k's plan doesn't re-execute rounds 0..k-1's lineage (the same
-    iterative-truncation discipline as pagerank / dedup_clusters). With
+    iterative-truncation discipline as pagerank_fixedpoint / dedup_clusters). With
     the edge list checkpointed once up front, a 1000-executor run shuffles
     only the frontier; hop count is fixed, so the job count is bounded.
     """

@@ -1159,24 +1159,6 @@ def pca_fit(
     )
 
 
-def pca_project_udf(mean: list[float], components: list[list[float]]):
-    """Arrow-batched PCA projection: x -> P @ (x - mean), n_components dims.
-    One (batch x dim) @ (dim x k) matmul per batch; artifacts in closure."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    mu = np.array(mean, dtype="float64")
-    P = np.array(components, dtype="float64").T  # (dim, k)
-
-    @pandas_udf("array<double>")
-    def _project(vecs: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(v, dtype="float64") for v in vecs])
-        return pd.Series(list((X - mu) @ P))
-
-    return _project
-
-
 def opq_rotation(
     candidates: DataFrame,
     m: int = 8,
@@ -1247,9 +1229,9 @@ def opq_topk(
 ) -> DataFrame:
     """OPQ ANN: rotate by the eigenvalue-balanced PCA basis (opq_rotation),
     then run the standard PQ-ADC pipeline in the rotated space. The
-    rotation is a broadcast model artifact applied as one Arrow matmul in
-    the scan projection (pca_project_udf with a zero mean — pure rotation,
-    so the returned cosines are cosines of the ORIGINAL vectors); codebooks
+    rotation is a broadcast model artifact applied as one Arrow-batched
+    fold in the scan projection (rotation_fold_udf — a pure rotation, so
+    the returned cosines are cosines of the ORIGINAL vectors); codebooks
     are fit on the ROTATED sample (one shared collect — the corpus is
     never collected). Same output contract as pq_adc_topk. This is Faiss's
     standard 100 TB preprocessing: OPQMatrix -> PQ."""
@@ -1278,12 +1260,12 @@ def opq_topk(
 
 def pca_project_int_udf(mean_q: list[int], components_q: list[list[int]]):
     """Integer-exact Arrow-batched PCA projection: xq -> Pq @ (xq - muq)
-    over quantized int64 vectors. Same plan shape as pca_project_udf (one
-    (batch x dim) @ (dim x k) matmul per Arrow batch, artifacts in closure)
-    but numpy's int64 GEMM is its own exact loop (no BLAS float path), so
-    the result is bit-identical under ANY summation order — the property a
-    DuckDB list_sum oracle hash needs. Bounds: |xq|,|Pq| <= 1e6 => a 64-dim
-    dot is <= 64 * 4e12 ~ 2.6e14, far inside int64."""
+    over quantized int64 vectors: one (batch x dim) @ (dim x k) matmul per
+    Arrow batch, artifacts in closure. numpy's int64 GEMM is its own exact
+    loop (no BLAS float path), so the result is bit-identical under ANY
+    summation order — the property a DuckDB list_sum oracle hash needs.
+    Bounds: |xq|,|Pq| <= 1e6 => a 64-dim dot is <= 64 * 4e12 ~ 2.6e14, far
+    inside int64."""
     import numpy as np
 
     from pyspark.sql.functions import pandas_udf

@@ -1680,11 +1680,10 @@ def supplier_influence_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIXED-POINT variant (operators/graph.pagerank_fixedpoint): rank mass in
     integer 1e-12 units with floor divisions at defined points, so per-dst
     sums are exact longs — order-independent — and the DuckDB oracle
-    (10 unrolled integer rounds) hash-matches EXACTLY. This upgraded the
-    query from a rows-only driver check to a full value-hash check; the
-    float operator (graph.pagerank) remains for callers that want real-
-    valued ranks and is NumPy-pinned to 1e-9 in tests/test_operators.py.
-    Supplier ids are offset into a disjoint node-id space.
+    (10 unrolled integer rounds) hash-matches EXACTLY. The operator is
+    pinned to a dense NumPy float PageRank to 1e-9 in
+    tests/test_operators.py. Supplier ids are offset into a disjoint
+    node-id space.
     """
     from kol_bigdata_realtime_analytics_spark.operators.graph import pagerank_fixedpoint
 

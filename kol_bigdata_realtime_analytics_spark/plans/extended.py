@@ -286,16 +286,15 @@ FROM o ASOF LEFT JOIN events e
 
 @register("asof_last_event_before_order", oracle=_ASOF_ORACLE)
 def asof_last_event_before_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of (backward) join on the cogrouped merge_asof path.
+    """As-of (backward) join: each sampled order's latest event at or
+    before its date, through operators/asof.as_of_join_union.
 
-    r3 flagged the composed join+window form as the one bench outlier: its
+    r3 flagged a composed join+window form as the one bench outlier: its
     intermediate is O(preceding events per key) PER left row, which grows
     with data volume at fixed key cardinality. The union form is a single
     hash shuffle + per-key sort with a running last(ignorenulls) carry —
     linear in |orders| + |events|, entirely JVM-side, the shape that
-    survives 100×. (operators/asof.py keeps the composed form — slimmed
-    dedup window — and the cogrouped merge_asof pandas form as
-    alternatives.)
+    survives 100×.
     """
     from kol_bigdata_realtime_analytics_spark.operators.asof import as_of_join_union
 

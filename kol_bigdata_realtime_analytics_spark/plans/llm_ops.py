@@ -523,13 +523,9 @@ def gopher_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     an array column; every signal reads the array (the naive per-signal
     re-tokenize was 5x this cost)."""
     from kol_bigdata_realtime_analytics_spark.functions.text import (
-        GOPHER_MAX_DUP_BIGRAM,
-        GOPHER_MAX_DUP_TOKEN,
-        GOPHER_MAX_TOKENS,
-        GOPHER_MAX_TOP_TOKEN,
-        GOPHER_MIN_TOKENS,
         bigrams_of,
         dup_ratio_of,
+        gopher_keep,
         tokens,
         top_ratio_of,
     )
@@ -545,13 +541,7 @@ def gopher_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_ratio_of(tok).alias("_tt"),
         dup_ratio_of(bigrams_of(tok)).alias("_db"),
     )
-    keep = (
-        (F.col("n_tokens") >= GOPHER_MIN_TOKENS)
-        & (F.col("n_tokens") <= GOPHER_MAX_TOKENS)
-        & (F.col("_dt") <= GOPHER_MAX_DUP_TOKEN)
-        & (F.col("_tt") <= GOPHER_MAX_TOP_TOKEN)
-        & (F.col("_db") <= GOPHER_MAX_DUP_BIGRAM)
-    ).cast("int")
+    keep = gopher_keep("n_tokens", "_dt", "_tt", "_db")
     return sig.select(
         "doc_id",
         "n_tokens",

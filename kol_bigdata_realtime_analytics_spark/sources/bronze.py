@@ -1,8 +1,9 @@
 """Bronze layer: the canonical ingestion envelope + per-source payload schemas.
 
 One schema registry (the reference's schemas drifted across three files —
-SURVEY.md §1.3; here DDL is GENERATED from the StructTypes, single-sourced,
-extending the auto-DDL sketch at reference kafka_to_bronze_tiktok.py:180-219).
+SURVEY.md §1.3; here DDL is GENERATED from the StructTypes by
+`sources/catalog.create_table_ddl`, single-sourced, extending the auto-DDL
+sketch at reference kafka_to_bronze_tiktok.py:180-219).
 
 Envelope (reference load_bronze_data.py:22-28): every raw record rides as
   {kol_id, platform, source, payload(JSON string), ingest_ts, dt}
@@ -114,27 +115,3 @@ def read_bronze(spark: SparkSession, path: str, source: str | None = None) -> Da
             "payload", F.from_json("payload", PAYLOAD_SCHEMAS[source])
         )
     return df
-
-
-def write_bronze(df: DataFrame, path: str, mode: str = "append") -> None:
-    """Partitioned bronze sink: parquet, partitioned by dt (pruning key)."""
-    df.write.mode(mode).partitionBy("dt").parquet(path)
-
-
-def _spark_type_to_ddl(dt: T.DataType) -> str:
-    return dt.simpleString().upper()
-
-
-def envelope_ddl(table: str, location: str | None = None) -> str:
-    """Generate CREATE TABLE DDL from the envelope StructType — the schema
-    registry is the single source of truth; external-engine DDL derives from
-    it instead of drifting (the reference's Trino DDL and Spark schemas
-    disagree — SURVEY.md §1.3)."""
-    cols = ",\n  ".join(
-        f"{f.name} {_spark_type_to_ddl(f.dataType)}" for f in ENVELOPE_SCHEMA.fields if f.name != "dt"
-    )
-    loc = f"\nLOCATION '{location}'" if location else ""
-    return (
-        f"CREATE TABLE IF NOT EXISTS {table} (\n  {cols}\n)\n"
-        f"USING parquet\nPARTITIONED BY (dt DATE){loc}"
-    )

@@ -90,17 +90,6 @@ def iceberg_available(spark: SparkSession) -> bool:
     return any(k.startswith("spark.sql.catalog.") and "iceberg" in v.lower() for k, v in confs)
 
 
-def ensure_table(
-    spark: SparkSession,
-    table: str,
-    schema: T.StructType,
-    using: str = "iceberg",
-    partition_by: tuple[str, ...] = (),
-    location: str | None = None,
-) -> None:
-    spark.sql(create_table_ddl(table, schema, using, partition_by, location))
-
-
 def read_table(
     spark: SparkSession,
     table: str,

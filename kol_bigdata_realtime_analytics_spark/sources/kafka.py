@@ -1,40 +1,24 @@
-"""Kafka sources/sinks + wire-format parsing (SURVEY §2.1 S1/S2/S7/S13).
+"""Kafka wire format: parsing and payload shape (SURVEY §2.1 S7/S13).
 
-Factories build the exact reader/writer plans the reference uses
-(reference kafka_to_bronze_tiktok.py:159-177 batch drain;
-trending_stream.py:394-404 and hot_path_scoring.py:195-206 stream scan with
-failOnDataLoss=false + maxOffsetsPerTrigger backpressure;
-hot_path_scoring.py:489-498 kafka sink with key=kol_id, value=to_json).
+A caller reading Kafka through Spark's own `format("kafka")` passes the
+reference's reader options (trending_stream.py:394-404: failOnDataLoss=false
+and maxOffsetsPerTrigger backpressure) and hands the scan to
+`parse_wire_dlq`. The parse is a pure DataFrame->DataFrame transform, so it
+is unit-testable without a broker: anything with (value, timestamp)
+columns — a kafka scan, a memory stream, a parquet fixture — goes through
+the same plan. That keeps batch, streaming, and tests on ONE code path (the
+reference re-implements value-parsing in each job). `to_wire` builds the
+reference's sink payload (hot_path_scoring.py:489-498: key=kol_id,
+value=to_json).
 
-The PARSE step is split out as a pure DataFrame->DataFrame transform
-(`parse_wire`) so it is unit-testable without a broker: anything with
-(value, timestamp) columns — a kafka scan, a memory stream, a parquet
-fixture — goes through the same plan. That keeps batch, streaming, and tests
-on ONE code path (the reference re-implements value-parsing in each job).
-
-Scale notes: kafka partitions map 1:1 to input tasks — topic partition count
-bounds source parallelism, so `minPartitions` is exposed for wide clusters;
 `from_json` is a JVM expression (whole-stage codegen, no Python round-trip).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-#: what a kafka scan yields before any parsing — fixed by the connector
-KAFKA_WIRE_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.BinaryType(), True),
-        T.StructField("value", T.BinaryType(), True),
-        T.StructField("topic", T.StringType(), True),
-        T.StructField("partition", T.IntegerType(), True),
-        T.StructField("offset", T.LongType(), True),
-        T.StructField("timestamp", T.TimestampType(), True),
-        T.StructField("timestampType", T.IntegerType(), True),
-    ]
-)
 
 #: video engagement event (reference trending_stream.py:115-139 semantics)
 VIDEO_EVENT_SCHEMA = T.StructType(
@@ -49,75 +33,6 @@ VIDEO_EVENT_SCHEMA = T.StructType(
         T.StructField("event_time", T.StringType(), True),
     ]
 )
-
-
-def read_batch(
-    spark: SparkSession,
-    bootstrap: str,
-    topic: str,
-    starting: str = "earliest",
-    ending: str = "latest",
-    min_partitions: int | None = None,
-) -> DataFrame:
-    """Bounded drain of a topic (S1): earliest->latest unless pinned offsets."""
-    r = (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting)
-        .option("endingOffsets", ending)
-    )
-    if min_partitions:
-        r = r.option("minPartitions", str(min_partitions))
-    return r.load()
-
-
-def read_stream(
-    spark: SparkSession,
-    bootstrap: str,
-    topic: str,
-    starting: str = "latest",
-    max_offsets_per_trigger: int | None = None,
-    min_partitions: int | None = None,
-) -> DataFrame:
-    """Streaming subscription (S2) with backpressure (R9) and lossy-source
-    tolerance (R8: failOnDataLoss=false survives topic truncation)."""
-    r = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting)
-        .option("failOnDataLoss", "false")
-    )
-    if max_offsets_per_trigger:
-        r = r.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    if min_partitions:
-        r = r.option("minPartitions", str(min_partitions))
-    return r.load()
-
-
-def parse_wire(
-    df: DataFrame,
-    schema: T.StructType,
-    ts_alias: str = "kafka_ts",
-    keep_corrupt: bool = False,
-) -> DataFrame:
-    """S7: CAST(value AS STRING) -> from_json(schema) -> flatten data.* .
-
-    Works on batch and streaming frames alike. Rows whose value fails to
-    parse become all-null structs; by default they are dropped (the
-    reference's null-filter P2), with `keep_corrupt` they are kept with a
-    `_corrupt` flag for a dead-letter side output.
-    """
-    parsed = df.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("data"),
-        F.col("timestamp").alias(ts_alias),
-    )
-    flat = parsed.select("data.*", ts_alias)
-    first_required = schema.fields[0].name
-    if keep_corrupt:
-        return flat.withColumn("_corrupt", F.col(first_required).isNull())
-    return flat.filter(F.col(first_required).isNotNull())
 
 
 def parse_wire_dlq(
@@ -155,35 +70,4 @@ def to_wire(df: DataFrame, key_col: str) -> DataFrame:
     return df.select(
         F.col(key_col).cast("string").alias("key"),
         F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value"),
-    )
-
-
-def write_batch(df: DataFrame, bootstrap: str, topic: str, key_col: str) -> None:
-    """Batch kafka sink (S13)."""
-    (
-        to_wire(df, key_col)
-        .write.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .save()
-    )
-
-
-def write_stream(
-    df: DataFrame,
-    bootstrap: str,
-    topic: str,
-    key_col: str,
-    checkpoint: str,
-    trigger_seconds: int = 30,
-):
-    """Streaming kafka sink with exactly-once-per-checkpoint semantics."""
-    return (
-        to_wire(df, key_col)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
     )

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -53,28 +53,9 @@ def _reg_rho_py(key: int) -> tuple[int, int]:
     return reg, rho
 
 
-def hash32_col(key: Column) -> Column:
-    """The SAME 32-bit hash as _hash32_py, in native Spark exprs."""
-    h = F.pmod(key.cast("long") * F.lit(_KNUTH), F.lit(1 << 32))
-    return F.pmod(
-        h.bitwiseXOR(F.shiftright(h.cast("long"), 16)), F.lit(1 << 32)
-    )
-
-
-def reg_rho_cols(key: Column) -> tuple[Column, Column]:
-    """(register index, rho) columns matching _reg_rho_py bit-for-bit."""
-    h = hash32_col(key)
-    reg = h.bitwiseAND(F.lit(M_REGISTERS - 1))
-    w = F.shiftright(h, 4)
-    rho = F.when(w == 0, F.lit(29)).otherwise(
-        F.bit_count(w.bitwiseAND(-w) - 1) + 1
-    )
-    return reg.cast("long"), rho.cast("long")
-
-
 def hash_sql(key_expr: str) -> tuple[str, str]:
     """(register-index SQL, rho SQL) DuckDB expressions matching
-    reg_rho_cols bit-for-bit."""
+    _reg_rho_py bit-for-bit."""
     h0 = f"(({key_expr}) * {_KNUTH}) % {1 << 32}"
     h = f"(xor({h0}, ({h0}) >> 16) % {1 << 32})"
     reg = f"({h} & {M_REGISTERS - 1})"

@@ -15,11 +15,9 @@ pipelines HSETs (reference trending_stream.py:298-363 via `.collect()` at
   file and never FILE_NOT_EXIST. A re-delivered epoch id writes nothing.
   This is not a snapshot read (ROADMAP direction 4): see the function's
   docstring for the two ways a read that overlaps a swap can still go wrong.
-- `foreach_partition_kv_sink`: when an external KV store (Redis/Cassandra) IS
-  configured, write per-PARTITION from executors (connection per partition,
-  pipelined), never via the driver. The client factory is injected so tests
-  use a plain dict and production passes a redis/cassandra client builder —
-  and the engine stays import-clean when those libs are absent.
+- `idempotent_foreach_batch`: the epoch-id ledger that makes any
+  foreachBatch sink against a non-transactional target skip a re-delivered
+  batch.
 - `run_to_memory`: the one runner for a BOUNDED stream into a memory sink
   (the pattern every registered streaming query and the tests use).
 """
@@ -27,7 +25,6 @@ pipelines HSETs (reference trending_stream.py:298-363 via `.collect()` at
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -138,36 +135,6 @@ def foreach_batch_ranking_sink(
     return sink
 
 
-def foreach_partition_kv_sink(
-    client_factory: Callable[[], dict],
-    key_fn: Callable[[dict], str],
-    ttl_seconds: int | None = None,
-):
-    """Returns a foreachBatch fn that writes rows partition-wise to a KV store.
-
-    client_factory runs ON THE EXECUTOR (once per partition) — e.g.
-    `lambda: redis.Redis(host=...)`. For tests it can return any
-    MutableMapping. TTL is passed through when the client supports expire().
-    """
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        def write_partition(rows: Iterator) -> None:
-            client = client_factory()
-            use_expire = ttl_seconds is not None and hasattr(client, "expire")
-            for row in rows:
-                d = row.asDict()
-                key = key_fn(d)
-                if hasattr(client, "hset"):
-                    client.hset(key, mapping={k: str(v) for k, v in d.items()})
-                    if use_expire:
-                        client.expire(key, ttl_seconds)
-                else:
-                    client[key] = d
-        batch_df.rdd.foreachPartition(write_partition)
-
-    return sink
-
-
 def idempotent_foreach_batch(sink_fn, ledger_path: str):
     """Exactly-once wrapper for any foreachBatch sink against a
     NON-transactional target (KV store, plain parquet dir, HTTP push).
@@ -207,30 +174,6 @@ def idempotent_foreach_batch(sink_fn, ledger_path: str):
                     os.remove(os.path.join(ledger_path, name))
 
     return sink
-
-
-def cassandra_sink_writer(df: DataFrame, keyspace: str, table: str, checkpoint: str):
-    """S15: Cassandra stream sink (reference features_stream.py:124-132).
-
-    Requires the spark-cassandra-connector on the classpath — absent in this
-    container, so this only BUILDS the writer; .start() is the caller's call.
-    """
-    return (
-        df.writeStream.format("org.apache.spark.sql.cassandra")
-        .option("keyspace", keyspace)
-        .option("table", table)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-
-
-def await_any(spark, timeout_seconds: float | None = None) -> bool:
-    """R11: block until ANY active streaming query terminates (the reference
-    runs two sinks off one computation — features_stream.py:164-175)."""
-    if timeout_seconds is None:
-        spark.streams.awaitAnyTermination()
-        return True
-    return spark.streams.awaitAnyTermination(timeout_seconds * 1000)
 
 
 def write_stream_to_ranking(

@@ -171,12 +171,15 @@ def test_pii_redaction_masks_and_counts(spark):
 
 
 def test_repetition_signals(spark):
-    """dup/top-token and dup-bigram ratios on hand-computed docs."""
+    """dup/top-token and dup-bigram ratios on hand-computed docs, and the
+    keep rule the gopher_repetition_filters query applies to them."""
     from kol_bigdata_realtime_analytics_spark.functions.text import (
-        dup_bigram_ratio,
-        dup_token_ratio,
+        bigrams_of,
+        dup_ratio_of,
         gopher_keep,
-        top_token_ratio,
+        token_count,
+        tokens,
+        top_ratio_of,
     )
 
     rows = [
@@ -186,14 +189,17 @@ def test_repetition_signals(spark):
         (4, ""),                 # empty: all 0
     ]
     df = spark.createDataFrame(rows, "id long, t string")
+    sig = df.select(
+        "id",
+        token_count("t").alias("n"),
+        dup_ratio_of(tokens("t")).alias("dt"),
+        top_ratio_of(tokens("t")).alias("tt"),
+        dup_ratio_of(bigrams_of(tokens("t"))).alias("db"),
+    )
     out = {
         r["id"]: r
-        for r in df.select(
-            "id",
-            dup_token_ratio("t").alias("dt"),
-            top_token_ratio("t").alias("tt"),
-            dup_bigram_ratio("t").alias("db"),
-            gopher_keep("t").alias("keep"),
+        for r in sig.select(
+            "*", gopher_keep("n", "dt", "tt", "db").alias("keep")
         ).collect()
     }
     assert math.isclose(out[1]["dt"], 0.6) and math.isclose(out[1]["tt"], 0.8)

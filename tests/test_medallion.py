@@ -37,9 +37,10 @@ from kol_bigdata_realtime_analytics_spark.medallion.silver import (
     with_profile_derived,
 )
 from kol_bigdata_realtime_analytics_spark.sources.bronze import (
-    envelope_ddl,
+    ENVELOPE_SCHEMA,
     read_bronze,
 )
+from kol_bigdata_realtime_analytics_spark.sources.catalog import create_table_ddl
 
 TIERS = [5_000, 25_000, 150_000, 800_000, 5_000_000]
 
@@ -308,5 +309,9 @@ def test_tiktok_silver_and_product_slice(spark):
 
 
 def test_envelope_ddl_generated():
-    ddl = envelope_ddl("bronze.kol_raw", "s3://bucket/bronze")
-    assert "payload STRING" in ddl and "PARTITIONED BY (dt DATE)" in ddl
+    ddl = create_table_ddl(
+        "bronze.kol_raw", ENVELOPE_SCHEMA, "parquet", ("dt",), "s3://bucket/bronze"
+    )
+    assert "kol_id STRING NOT NULL" in ddl and "payload STRING" in ddl
+    assert "dt DATE" in ddl and "PARTITIONED BY (dt)" in ddl
+    assert "USING parquet" in ddl and "LOCATION 's3://bucket/bronze'" in ddl

@@ -12,7 +12,6 @@ from kol_bigdata_realtime_analytics_spark.operators.dedup import (
     minhash_lsh_candidates,
     simhash_neardup_pairs,
     simhash_signature,
-    word_shingles,
 )
 from kol_bigdata_realtime_analytics_spark.operators.multimodal import (
     decode_features,
@@ -222,12 +221,6 @@ def test_lsh_hot_bucket_guard(spark, monkeypatch):
     monkeypatch.undo()
     unguarded = minhash_lsh_candidates(df, "text", "doc_id").count()
     assert unguarded > 100_000
-
-
-def test_word_shingles(spark):
-    df = spark.createDataFrame([("a b c d",)], "t string")
-    out = df.select(word_shingles(F.col("t"), 3).alias("s")).collect()[0]["s"]
-    assert out == ["a b c", "b c d"]
 
 
 VECS = [
@@ -662,23 +655,6 @@ def test_approx_percentiles_bounded_error(spark, sf_oracle):
             assert abs(a[p] - e[p]) <= max(1.0, 0.01 * abs(e[p]))
 
 
-def test_word_shingles_short_docs(spark):
-    """Docs shorter than the shingle width yield an EMPTY array — the
-    sequence() step auto-negates when size < n and would otherwise feed
-    slice() a zero start and fail the whole stage."""
-    from kol_bigdata_realtime_analytics_spark.operators.dedup import word_shingles
-
-    df = spark.createDataFrame(
-        [(1, "a b"), (2, "a b c d"), (3, ""), (4, None)], "id long, text string"
-    )
-    out = {
-        r["id"]: r["s"]
-        for r in df.select("id", word_shingles(F.col("text"), 3).alias("s")).collect()
-    }
-    assert out[1] == [] and out[3] == [] and out[4] == []
-    assert out[2] == ["a b c", "b c d"]
-
-
 def test_contamination_overlap_counts(spark):
     """Shared-shingle counting: only training docs overlapping the benchmark
     appear, with exact distinct-shingle counts."""
@@ -739,19 +715,28 @@ def test_scd2_intervals(spark):
     assert [r["is_current"] for r in u3] == [0, 1]
 
 
-def test_pagerank_matches_numpy(spark):
-    """Spark PageRank == dense NumPy PageRank to 1e-9 on a planted graph
-    (hub, chain, dangling node, weighted multi-edges)."""
+def test_pagerank_fixedpoint_tracks_float(spark):
+    """Fixed-point integer PageRank stays within floor-division error of a
+    dense NumPy float PageRank on a planted graph (hub, chain, dangling
+    node, weighted multi-edges): each of the 10 rounds floors at most
+    1e-12 per edge plus 1e-12 in the damped sum, so the final gap is
+    bounded well below 1e-9 rank units — and determinism is exact (two runs
+    produce identical longs)."""
     import numpy as np
 
-    from kol_bigdata_realtime_analytics_spark.operators.graph import pagerank
+    from kol_bigdata_realtime_analytics_spark.operators.graph import (
+        PAGERANK_SCALE,
+        pagerank_fixedpoint,
+    )
 
     edges = [
-        (0, 1, 1.0), (0, 2, 2.0), (1, 2, 1.0), (2, 0, 1.0),
-        (3, 0, 1.0), (3, 2, 3.0), (4, 3, 1.0),  # 1 also reached from 0 only
+        (0, 1, 1), (0, 2, 2), (1, 2, 1), (2, 0, 1),
+        (3, 0, 1), (3, 2, 3), (4, 3, 1),
     ]
-    df = spark.createDataFrame(edges, "src long, dst long, weight double")
-    got = {r["node"]: r["rank"] for r in pagerank(df).collect()}
+    df = spark.createDataFrame(edges, "src long, dst long, weight long")
+    fp1 = {r["node"]: r["rank_fp"] for r in pagerank_fixedpoint(df).collect()}
+    fp2 = {r["node"]: r["rank_fp"] for r in pagerank_fixedpoint(df).collect()}
+    assert fp1 == fp2  # exact determinism, not tolerance
 
     nodes = sorted({s for s, _, _ in edges} | {d for _, d, _ in edges})
     idx = {n: i for i, n in enumerate(nodes)}
@@ -766,39 +751,9 @@ def test_pagerank_matches_numpy(spark):
     r = np.full(n, 1.0 / n)
     for _ in range(10):
         r = (1 - 0.85) / n + 0.85 * (P @ r)
-    for node in nodes:
-        assert abs(got[node] - r[idx[node]]) < 1e-9, (node, got[node], r[idx[node]])
-
-
-def test_pagerank_fixedpoint_tracks_float(spark):
-    """Fixed-point integer PageRank stays within floor-division error of the
-    float operator on the planted graph: each of the 10 rounds floors at
-    most 1e-12 per edge plus 1e-12 in the damped sum, so the final gap is
-    bounded well below 1e-9 rank units — and determinism is exact (two runs
-    produce identical longs)."""
-    from kol_bigdata_realtime_analytics_spark.operators.graph import (
-        PAGERANK_SCALE,
-        pagerank,
-        pagerank_fixedpoint,
-    )
-
-    edges = [
-        (0, 1, 1), (0, 2, 2), (1, 2, 1), (2, 0, 1),
-        (3, 0, 1), (3, 2, 3), (4, 3, 1),
-    ]
-    df = spark.createDataFrame(edges, "src long, dst long, weight long")
-    fp1 = {r["node"]: r["rank_fp"] for r in pagerank_fixedpoint(df, n_iter=10).collect()}
-    fp2 = {r["node"]: r["rank_fp"] for r in pagerank_fixedpoint(df, n_iter=10).collect()}
-    assert fp1 == fp2  # exact determinism, not tolerance
-    flt = {
-        r["node"]: r["rank"]
-        for r in pagerank(
-            df.selectExpr("src", "dst", "CAST(weight AS DOUBLE) AS weight")
-        ).collect()
-    }
-    assert fp1.keys() == flt.keys()
+    assert sorted(fp1) == nodes
     for node, fp in fp1.items():
-        assert abs(fp / PAGERANK_SCALE - flt[node]) < 1e-9, (node, fp, flt[node])
+        assert abs(fp / PAGERANK_SCALE - r[idx[node]]) < 1e-9, (node, fp, r[idx[node]])
 
 
 def test_int8_matmul_rescore_equals_hof_scorer(spark, sf_small):
@@ -990,18 +945,13 @@ def test_count_min_sketches_merge_by_union(spark):
 
 
 def test_asof_three_forms_agree_on_adversarial_inputs(spark):
-    """The equi-join, union-window, and cogrouped-pandas as-of forms must
-    return IDENTICAL results on the inputs that historically split them:
-    a newer right row with a genuinely NULL payload field (the union form
-    used to stitch the older row's value in), NULL join keys (a window
-    partition groups NULLs; an equi-join never matches them), equal
-    timestamps (<= semantics), and right_ts sharing the left's column
-    name `ts` (the pandas form used to drop the left column)."""
-    from kol_bigdata_realtime_analytics_spark.operators.asof import (
-        as_of_join,
-        as_of_join_pandas,
-        as_of_join_union,
-    )
+    """as_of_join_union returns the expected rows on the inputs that
+    historically broke as-of forms: a newer right row with a genuinely NULL
+    payload field (the union form used to stitch the older row's value in),
+    NULL join keys (a window partition groups NULLs; an as-of join never
+    matches them), equal timestamps (<= semantics), and right_ts sharing
+    the left's column name `ts`."""
+    from kol_bigdata_realtime_analytics_spark.operators.asof import as_of_join_union
 
     left = spark.createDataFrame(
         [(1, 10, "L1"), (1, 3, "L2"), (2, 5, "L3"), (None, 5, "L4")],
@@ -1024,18 +974,13 @@ def test_asof_three_forms_agree_on_adversarial_inputs(spark):
         ("L3", None, None),  # only right row for k=2 is later
         ("L4", None, None),  # NULL keys never match
     ]
-    a = as_of_join(left, r_aliased, "k", "ts", "ts", ["xa", "xb"], left_unique=["lv"])
-    b = as_of_join_union(left, r_aliased, "k", "ts", "ts", ["xa", "xb"])
-    c = as_of_join_pandas(left, r_aliased, "k", "ts", "ts", ["xa", "xb"])
-    assert rows(a) == expected
-    assert rows(b) == expected
-    assert rows(c) == expected
+    got = as_of_join_union(left, r_aliased, "k", "ts", "ts", ["xa", "xb"])
+    assert rows(got) == expected
 
-    # carrying the right timestamp column itself must be rejected up front
-    # (r4 advice: rpdf[[right_ts, *right_cols]] + the rename would produce a
-    # duplicate '_r_ts' column and fail deep inside merge_asof instead)
+    # a carried right column that shares a left column's name is rejected
+    # up front, before any plan is built
     with pytest.raises(ValueError, match="collide"):
-        as_of_join_pandas(left, r_aliased, "k", "ts", "ts", ["ts", "xa"])
+        as_of_join_union(left, r_aliased, "k", "ts", "ts", ["ts", "xa"])
 
 
 def test_agms_join_size_accuracy_and_merge(spark):
@@ -1611,7 +1556,7 @@ def test_misra_gries_no_false_negatives_under_eviction(spark):
 def test_pca_fit_orthonormal_and_deterministic(spark):
     """pca_fit: components are orthonormal rows in descending-eigenvalue
     order with canonical signs; two fits on the same data are identical
-    (no RNG); projection matches numpy."""
+    (no RNG)."""
     import numpy as np
 
     from kol_bigdata_realtime_analytics_spark.operators import similarity as S
@@ -1628,17 +1573,6 @@ def test_pca_fit_orthonormal_and_deterministic(spark):
     assert np.allclose(P @ P.T, np.eye(4), atol=1e-9)
     for row in P:  # canonical sign
         assert row[int(np.abs(row).argmax())] > 0
-    # projection UDF == numpy
-    proj = S.pca_project_udf(mu1, P1)
-    got = {
-        r["vec_id"]: np.array(r["p"])
-        for r in emb.select("vec_id", proj(S.as_double_vec(F.col("embedding"))).alias("p")).collect()
-    }
-    X = np.array([[float(((i * 7 + j) % 5) + (j < 2) * 3 * (i % 4)) for j in range(8)]
-                  for i in range(128)])
-    want = (X - np.array(mu1)) @ P.T
-    for i in range(128):
-        assert np.allclose(got[i], want[i], atol=1e-9)
 
 
 def test_markov_credits_diverge_from_shapley(spark):
